@@ -69,8 +69,8 @@ def test_partition_layout_insensitive_guarantee(spark, sf_dir):
 def test_two_pass_equals_exact_lexicon(spark, sf_dir):
     """Sketch-then-verify == naive exact thresholded counts when k
     satisfies the superset precondition (k > n / min_count) — the
-    equivalence that makes the MG lexicon path a drop-in config switch
-    for the boilerplate build."""
+    equivalence that makes the MG path a drop-in replacement for an
+    exact thresholded groupBy."""
     from vector_database_api_spark.operators.frequency import (
         frequent_items_two_pass,
     )
@@ -91,23 +91,6 @@ def test_two_pass_equals_exact_lexicon(spark, sf_dir):
         item: c for item, c in _true_counts(words, "w").items() if c >= min_count
     }
     assert got == want and len(want) > 0
-
-
-def test_boilerplate_lexicon_mg_switch(spark, sf_dir):
-    """The lexicon build's method switch: exact and MG paths return the
-    same (shingle, n_docs) set, so boilerplate_ngrams /
-    boilerplate_doc_fraction are method-invariant."""
-    from vector_database_api_spark import queries as q
-
-    exact = {
-        (r["shingle"], r["n_docs"])
-        for r in q._cached_boilerplate_lexicon(spark, sf_dir, "exact").collect()
-    }
-    mg = {
-        (r["shingle"], r["n_docs"])
-        for r in q._cached_boilerplate_lexicon(spark, sf_dir, "mg").collect()
-    }
-    assert exact == mg and len(exact) > 0
 
 
 def test_merged_summary_bounded_by_k(spark):

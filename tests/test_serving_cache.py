@@ -131,3 +131,77 @@ def test_unpersist_artifacts_sweeps_all_dataframe_attributes(spark):
     idx.codebooks = {0: [[0.0]]}
     _unpersist_artifacts(idx)
     assert not _cached(codes)
+
+
+def _probe_builder(builds: list):
+    """A `_serving_artifact` builder over spark.range that records every
+    build body run."""
+    from vector_database_api_spark.queries import _artifact, _serving_artifact
+
+    @_serving_artifact
+    def _cached_probe_range(spark, sf_dir):
+        builds.append(sf_dir)
+        return _artifact(spark.range(len(sf_dir)))
+
+    return _cached_probe_range
+
+
+def _fresh_cache(monkeypatch, cap: int = _BoundedServingCache.CAP):
+    from vector_database_api_spark import queries as q
+
+    cache = _BoundedServingCache()
+    cache.CAP = cap
+    monkeypatch.setattr(q, "_SERVING_INDEXES", cache)
+    return cache
+
+
+def _release(cache) -> None:
+    for value in list(dict.values(cache)):
+        _unpersist_artifacts(value)
+
+
+def test_serving_artifact_builds_once_and_reads_through_cache(spark, monkeypatch):
+    cache = _fresh_cache(monkeypatch)
+    reads = []
+    orig_getitem = _BoundedServingCache.__getitem__
+
+    def getitem(self, key):
+        reads.append(key)
+        return orig_getitem(self, key)
+
+    monkeypatch.setattr(_BoundedServingCache, "__getitem__", getitem)
+    builds: list = []
+    probe = _probe_builder(builds)
+    first = probe(spark, "a")
+    assert builds == ["a"]
+    assert list(cache) == [("_cached_probe_range", "a")]
+    n_reads = len(reads)
+    second = probe(spark, "a")
+    assert second is first
+    assert builds == ["a"]  # served, not rebuilt
+    assert reads[n_reads:] == [("_cached_probe_range", "a")]
+    _release(cache)
+
+
+def test_serving_artifact_keys_by_sf_dir(spark, monkeypatch):
+    cache = _fresh_cache(monkeypatch)
+    builds: list = []
+    probe = _probe_builder(builds)
+    a = probe(spark, "a")
+    bb = probe(spark, "bb")
+    assert builds == ["a", "bb"]
+    assert set(cache) == {("_cached_probe_range", "a"), ("_cached_probe_range", "bb")}
+    assert (a.count(), bb.count()) == (1, 2)
+    _release(cache)
+
+
+def test_serving_artifact_rebuilds_after_eviction(spark, monkeypatch):
+    cache = _fresh_cache(monkeypatch, cap=1)
+    builds: list = []
+    probe = _probe_builder(builds)
+    probe(spark, "a")
+    probe(spark, "bb")  # evicts ("_cached_probe_range", "a")
+    assert list(cache) == [("_cached_probe_range", "bb")]
+    assert probe(spark, "a").count() == 1
+    assert builds == ["a", "bb", "a"]
+    _release(cache)

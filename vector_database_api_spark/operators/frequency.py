@@ -152,8 +152,8 @@ def frequent_items_two_pass(
     when ``k ≪ distinct(col)`` — equivalently, when ``min_count`` is a
     large fraction of n (rare-item thresholds force k toward n and the
     MG state toward O(n) per partition, at which point use the exact
-    path; `_cached_boilerplate_lexicon` documents this trade on a real
-    caller).
+    path; `queries._cached_boilerplate_lexicon` is such a caller and
+    uses the exact groupBy).
     """
     cands = heavy_hitters(df, col, k=k).select(F.col("item").alias(col))
     build = F.broadcast(cands) if k <= broadcast_item_limit else cands

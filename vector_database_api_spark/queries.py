@@ -14,8 +14,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import functools
+import itertools
 import math
-import os
+from typing import TypeVar
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -101,27 +103,15 @@ def demo_queries() -> dict[str, SparkQuery]:
 
 
 # ---------------------------------------------------------------------------
-# Serving-path index cache.  The reference builds an index once per library
+# Serving-artifact cache.  The reference builds an index once per library
 # (POST /libraries/{id}/index) and then serves many searches against it
 # (library_service.py:120-158); rebuilding per query would misrepresent both
-# engines.  Indexes are deterministic (seeded planes / seeded KMeans), so a
-# cached index yields byte-identical results to an inline build — the oracle
-# gate is unaffected, and bench's best-of-2 measures steady-state serving.
+# engines.  Artifacts are deterministic (seeded planes / seeded KMeans), so a
+# cached artifact yields byte-identical results to an inline build — the
+# oracle gate is unaffected, and bench's best-of-2 measures steady-state
+# serving.  Each artifact is declared once, as a `@_serving_artifact`
+# builder that materializes it via `_artifact` or `_persisted_artifact`.
 # ---------------------------------------------------------------------------
-
-# Every builder below follows the same pinning discipline: the artifact
-# is FULLY materialized inside whatever pass first touches it (bench's
-# untimed pre-pass runs every query once, so first-build cost can never
-# land inside a timed run).  Since the r10 optimization round most
-# builders materialize via `_artifact` (an eager localCheckpoint — see
-# its docstring: same executor-block storage, but readers plan against a
-# LogicalRDD leaf instead of re-analyzing the full build lineage per
-# run); the ANN cluster stores keep the older persist()+count() form
-# because their readers' join-strategy choice needs InMemoryRelation's
-# actual cached-size statistics (rationale at each site).  Blocks live
-# MEMORY_AND_DISK either way: a memory-pressure eviction spills instead
-# of silently dropping, so a later read can never trigger a rebuild
-# (persist) or a failure (checkpoint).
 
 
 def _release_artifact_blocks(df: DataFrame) -> None:
@@ -196,6 +186,31 @@ class _BoundedServingCache(dict):
 _SERVING_INDEXES: dict[tuple, object] = _BoundedServingCache()
 
 
+_A = TypeVar("_A")
+
+
+def _serving_artifact(
+    build: Callable[[SparkSession, str], _A],
+) -> Callable[[SparkSession, str], _A]:
+    """Declare ``build(spark, sf_dir)`` as a serving artifact, built once
+    per sf_dir and served from _SERVING_INDEXES under
+    ``(build.__name__, sf_dir)``.  The build must FULLY materialize what
+    it returns (`_artifact` / `_persisted_artifact`, or a collected
+    value), so the cost lands in whatever pass first touches the
+    artifact — bench's untimed pre-pass — and never inside a timed run.
+    Every call reads back through ``cache[key]``, which refreshes the
+    entry's LRU recency; an evicted entry is transparently rebuilt."""
+
+    @functools.wraps(build)
+    def serve(spark: SparkSession, sf_dir: str) -> _A:
+        key = (build.__name__, sf_dir)
+        if key not in _SERVING_INDEXES:
+            _SERVING_INDEXES[key] = build(spark, sf_dir)
+        return _SERVING_INDEXES[key]
+
+    return serve
+
+
 def _artifact(df: DataFrame) -> DataFrame:
     """Materialize a serving artifact AND truncate its lineage (r10
     optimization round, guide §5 "localCheckpoint is a cheaper way to
@@ -232,7 +247,37 @@ def _artifact(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _persisted_artifact(df: DataFrame) -> DataFrame:
+    """Materialize a serving artifact with ``persist()+count()``, KEEPING
+    its lineage — the one exception to `_artifact`, used by the ANN
+    cluster stores (the semdedup store, the multiprobe probe map, the
+    trained store and probes).  Those are joined on cluster_id by the
+    knn-join family, where the planner's build-side choice rides on the
+    artifact's size statistics: InMemoryRelation reports the ACTUAL
+    cached bytes, while a lineage-truncated LogicalRDD carries the build
+    plan's static estimate (a crossJoin+window tree, wildly inflated) —
+    measured as a BHJ->SMJ flip and a 3-5x regression on
+    knn_join_multiprobe_topk.  Their build lineage is one shallow join,
+    so `_artifact`'s driver-side re-analysis cost doesn't bite.  Blocks
+    live MEMORY_AND_DISK either way: a memory-pressure eviction spills
+    instead of silently dropping, so a later read can never trigger a
+    rebuild (persist) or a failure (checkpoint)."""
+    df = df.persist()
+    df.count()
+    return df
+
+
 _SQL_TABLE_VIEWS: dict[tuple, str] = {}
+_VIEW_TAGS: dict[str, int] = {}
+_NEXT_VIEW_TAG = itertools.count()
+
+
+def _view_tag(sf_dir: str) -> int:
+    """Collision-free temp-view name suffix for one sf_dir: a
+    registration counter, so two distinct sf_dirs never share a view
+    name (a hash suffix could collide and silently retarget one
+    corpus's view to another's table)."""
+    return _VIEW_TAGS.setdefault(sf_dir, next(_NEXT_VIEW_TAG))
 
 
 def _sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -254,22 +299,23 @@ def _sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     key = (spark, sf_dir, name)
     view = _SQL_TABLE_VIEWS.get(key)
     if view is None:
-        view = f"_t_{name}_{abs(hash(sf_dir)) % 10**8}"
+        view = f"_t_{name}_{_view_tag(sf_dir)}"
         load_table(spark, sf_dir, name).createOrReplaceTempView(view)
         _SQL_TABLE_VIEWS[key] = view
     return view
 
 
-def _sql_ref_df(df: DataFrame, view: str) -> str:
+def _sql_ref_df(df: DataFrame, sf_dir: str, view: str) -> str:
     """Temp-view SQL reference for an in-memory frame (a serving
     artifact's LogicalRDD leaf, a collected pool): the sql()-built
     readers' equivalent of closing over the DataFrame.  Re-registered
     on every call — registration stores the already-analyzed plan
-    (no re-analysis), and resolution happens inside the subsequent
-    sql() call, so concurrent queries over different sf_dirs cannot
-    retarget each other's resolved plans."""
-    df.createOrReplaceTempView(view)
-    return view
+    (no re-analysis).  The name carries sf_dir's `_view_tag`, so
+    constructing a query over another sf_dir in the same session
+    cannot retarget this view between registration and analysis."""
+    name = f"{view}_{_view_tag(sf_dir)}"
+    df.createOrReplaceTempView(name)
+    return name
 
 
 def _sql_lit(v) -> str:
@@ -277,7 +323,10 @@ def _sql_lit(v) -> str:
     suffix; a double is bound as CAST('<shortest repr>' AS DOUBLE) —
     Python's repr round-trips the exact double and string->double
     casting is correctly rounded, so the parsed literal is
-    bit-identical to the artifact value it came from."""
+    bit-identical to the artifact value it came from.  None (an empty
+    corpus's avgdl) is SQL NULL, exactly what the artifact row holds."""
+    if v is None:
+        return "NULL"
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):
@@ -300,44 +349,38 @@ def _stats_literal_cols(row: dict) -> str:
     return ", ".join(f"{_sql_lit(v)} AS {k}" for k, v in row.items())
 
 
-def _cached_stats_row(spark: SparkSession, sf_dir: str, which: str) -> dict:
-    """The 1-row statistics artifact's scalars as a plain dict, collected
-    ONCE per (artifact, sf_dir) alongside the artifact itself (same
-    build-once/serve-many lifecycle — the collect happens inside
-    whatever pass first touches the artifact, i.e. bench's untimed
-    pre-pass), for literal binding via _stats_literal_cols."""
-    key = (which + "-row", sf_dir)
-    if key not in _SERVING_INDEXES:
-        src = {
-            "bm25-stats": _cached_bm25_stats,
-            "ql-stats": _cached_ql_stats,
-        }[which]
-        _SERVING_INDEXES[key] = src(spark, sf_dir).collect()[0].asDict()
-    return _SERVING_INDEXES[key]
+@_serving_artifact
+def _cached_bm25_stats_row(spark: SparkSession, sf_dir: str) -> dict:
+    """The BM25 statistics artifact's scalars as a plain dict, collected
+    once per sf_dir, for literal binding via _stats_literal_cols."""
+    return _cached_bm25_stats(spark, sf_dir).collect()[0].asDict()
 
 
-def _cached_lsh_index(spark: SparkSession, sf_dir: str, library: str) -> DataFrame:
+@_serving_artifact
+def _cached_ql_stats_row(spark: SparkSession, sf_dir: str) -> dict:
+    """The collection-LM statistics row as a plain dict (same use)."""
+    return _cached_ql_stats(spark, sf_dir).collect()[0].asDict()
+
+
+@_serving_artifact
+def _cached_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH hash tables over library src2's embedded chunks."""
     from vector_database_api_spark.operators.filters import library_scope
 
-    key = ("lsh", sf_dir, library)
-    if key not in _SERVING_INDEXES:
-        scoped = library_scope(chunks_table(spark, sf_dir), library).filter(
-            F.col("embedding").isNotNull()
-        )
-        idx = _artifact(lsh_mod.hash_table_df(scoped, _PLANES))
-        _SERVING_INDEXES[key] = idx
-    return _SERVING_INDEXES[key]
+    scoped = library_scope(chunks_table(spark, sf_dir), "src2").filter(
+        F.col("embedding").isNotNull()
+    )
+    return _artifact(lsh_mod.hash_table_df(scoped, _PLANES))
 
 
+@_serving_artifact
 def _cached_ivf_index(spark: SparkSession, sf_dir: str):
-    key = ("ivf", sf_dir)
-    if key not in _SERVING_INDEXES:
-        index = ivf_mod.build_ivf(chunks_table(spark, sf_dir))
-        index.index_df = _artifact(index.index_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    index = ivf_mod.build_ivf(chunks_table(spark, sf_dir))
+    index.index_df = _artifact(index.index_df)
+    return index
 
 
+@_serving_artifact
 def _cached_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, shingles, sig) MinHash signature table, persisted once per
     sf_dir — the signature table IS the index a MinHash dedup pipeline
@@ -346,75 +389,62 @@ def _cached_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Before this cache, `minhash_near_dup` and `cross_source_contamination`
     each rebuilt shingles + signatures from the raw corpus per call (the
     4.6 s bench tail of round 3)."""
-    key = ("minhash-sigs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        sigs = _artifact(dedup_mod.minhash_signatures(docs))
-        _SERVING_INDEXES[key] = sigs
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return _artifact(dedup_mod.minhash_signatures(docs))
 
 
+@_serving_artifact
 def _cached_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pair edges, persisted once per sf_dir — the pair
     graph is the shared upstream artifact of the simhash/near-dup query
     family (pairs -> components -> keep decision), exactly as a real dedup
     pipeline materializes signatures/pairs once and derives decisions from
     them.  Deterministic, so the oracle gate is unaffected."""
-    key = ("simhash-pairs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        sigs = dedup_mod.simhash(docs).persist()
-        sigs.count()
-        pairs = _artifact(
-            dedup_mod.simhash_near_dup_pairs(
-                docs, bands=4, max_hamming=3, sigs=sigs
-            )
-        )
-        sigs.unpersist()
-        _SERVING_INDEXES[key] = pairs
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    sigs = dedup_mod.simhash(docs).persist()
+    sigs.count()
+    pairs = _artifact(
+        dedup_mod.simhash_near_dup_pairs(docs, bands=4, max_hamming=3, sigs=sigs)
+    )
+    sigs.unpersist()
+    return pairs
 
 
+@_serving_artifact
 def _cached_simhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the cached pair graph (pairs ->
     clusters), persisted once — the second shared artifact of the dedup
     family."""
-    key = ("simhash-comp", sf_dir)
-    if key not in _SERVING_INDEXES:
-        comp = _artifact(
-            dedup_mod.connected_components(_cached_simhash_pairs(spark, sf_dir))
-        )
-        _SERVING_INDEXES[key] = comp
-    return _SERVING_INDEXES[key]
+    return _artifact(
+        dedup_mod.connected_components(_cached_simhash_pairs(spark, sf_dir))
+    )
 
 
-def _cached_word_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
-    """(id, source, shingles) word-n-gram table, persisted once per
+@_serving_artifact
+def _cached_word_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, source, shingles) word-3-gram table, persisted once per
     sf_dir — the signature artifact of the n-gram Jaccard dedup path,
     materialized the way a real pipeline stages shingles before pair
     generation."""
-    key = ("word-shingles", sf_dir, n)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    sh = (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            "source",
+            text_fns.word_shingles_udf(3)(F.col("text")).alias("shingles"),
         )
-        sh = (
-            docs.select(
-                F.col("doc_id").alias("id"),
-                "source",
-                text_fns.word_shingles_udf(n)(F.col("text")).alias("shingles"),
-            )
-            .filter(F.size("shingles") > 0)
-        )
-        sh = _artifact(sh)
-        _SERVING_INDEXES[key] = sh
-    return _SERVING_INDEXES[key]
+        .filter(F.size("shingles") > 0)
+    )
+    return _artifact(sh)
 
 
+@_serving_artifact
 def _cached_semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, v, cluster_id) nearest-frozen-centroid assignment, persisted
     once per sf_dir — the cluster map is the stored artifact of the
@@ -422,38 +452,19 @@ def _cached_semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation and keep decisions are query-time derivations over it.
     Without the cache the self-join's two branches re-evaluate the whole
     assignment subtree (crossJoin + min-struct + join) twice each."""
-    from vector_database_api_spark.operators import dedup as ded
-
-    key = ("semdedup-assign", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        cents = embs.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("embedding").alias("cvec"),
-        )
-        assigned = ded.assign_clusters(embs, cents, id_col="vec_id")
-        wc = (
-            embs.select(
-                F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-            )
-            .join(assigned, "id")
-            # persist (NOT _artifact): this store is joined on
-            # cluster_id by the knn-join family, where the planner's
-            # build-side choice rides on artifact size statistics —
-            # InMemoryRelation reports the ACTUAL cached bytes, while a
-            # lineage-truncated LogicalRDD carries the build plan's
-            # static estimate (a crossJoin+window tree, wildly
-            # inflated), which measured as a BHJ->SMJ flip and a
-            # 3-5x regression on knn_join_multiprobe_topk.  The build
-            # lineage here is one shallow join — the _artifact driver-
-            # latency rationale doesn't bite.
-            .persist()
-        )
-        wc.count()
-        _SERVING_INDEXES[key] = wc
-    return _SERVING_INDEXES[key]
+    embs = load_table(spark, sf_dir, "embeddings")
+    cents = embs.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("cluster_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
+    return _persisted_artifact(
+        embs.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+        .join(assigned, "id")
+    )
 
 
+@_serving_artifact
 def _cached_sq8_index(spark: SparkSession, sf_dir: str):
     """(codes_df, bounds_df): the SQ8 serving artifact — int codes for
     every vector plus the 1-row per-dim (vmins, vmaxs) bounds — persisted
@@ -462,40 +473,37 @@ def _cached_sq8_index(spark: SparkSession, sf_dir: str):
     (min/max training), so the oracle gate is unaffected."""
     from vector_database_api_spark.operators import sq as sq_mod
 
-    key = ("sq8", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        target = spark.sparkContext.defaultParallelism
-        if embs.rdd.getNumPartitions() < target:
-            embs = embs.repartition(target)
-        rows = embs.select(
-            "vec_id", "embedding", vec_norm2("embedding").alias("n2")
-        ).select(
-            "vec_id", normalize_with_staged_norm("embedding", "n2").alias("nv")
+    embs = load_table(spark, sf_dir, "embeddings")
+    target = spark.sparkContext.defaultParallelism
+    if embs.rdd.getNumPartitions() < target:
+        embs = embs.repartition(target)
+    rows = embs.select(
+        "vec_id", "embedding", vec_norm2("embedding").alias("n2")
+    ).select(
+        "vec_id", normalize_with_staged_norm("embedding", "n2").alias("nv")
+    )
+    bounds = (
+        sq_mod.dim_stats(rows, "nv")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("i", "vmin", "vmax"))
+            ).alias("s")
         )
-        bounds = (
-            sq_mod.dim_stats(rows, "nv")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("i", "vmin", "vmax"))
-                ).alias("s")
-            )
-            .select(
-                F.transform("s", lambda s: s["vmin"]).alias("vmins"),
-                F.transform("s", lambda s: s["vmax"]).alias("vmaxs"),
-            )
+        .select(
+            F.transform("s", lambda s: s["vmin"]).alias("vmins"),
+            F.transform("s", lambda s: s["vmax"]).alias("vmaxs"),
         )
-        bounds = _artifact(bounds)
-        codes = _artifact(
-            rows.crossJoin(F.broadcast(bounds)).select(
-                "vec_id",
-                sq_mod.encode_expr(
-                    F.col("nv"), F.col("vmins"), F.col("vmaxs")
-                ).alias("codes"),
-            )
+    )
+    bounds = _artifact(bounds)
+    codes = _artifact(
+        rows.crossJoin(F.broadcast(bounds)).select(
+            "vec_id",
+            sq_mod.encode_expr(
+                F.col("nv"), F.col("vmins"), F.col("vmaxs")
+            ).alias("codes"),
         )
-        _SERVING_INDEXES[key] = (codes, bounds)
-    return _SERVING_INDEXES[key]
+    )
+    return codes, bounds
 
 
 # ---------------------------------------------------------------------------
@@ -657,7 +665,7 @@ def lsh_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         library_id="src2",
         metadata_filters={"lang": "en"},
-        index_df=_cached_lsh_index(spark, sf_dir, "src2"),
+        index_df=_cached_lsh_index(spark, sf_dir),
     )
 
 
@@ -1843,7 +1851,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     once — at 100 TB this is a broadcast semi-join at scan speed, the
     shape of a real train/test-overlap sweep.  (Shingles are distinct per
     doc, so count(*) counts distinct shared shingles.)"""
-    sh = _cached_word_shingles(spark, sf_dir, n=3)
+    sh = _cached_word_shingles(spark, sf_dir)
     bench = (
         sh.filter(F.col("id").isin(*_BENCH_IDS))
         .select(F.explode("shingles").alias("shingle"))
@@ -2311,7 +2319,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the oracle (tests pin the equality); ~10x on bulk scans.  The
     # shingle table is the cached upstream artifact (cf. _cached_word_
     # shingles) — a real pipeline stages signatures once.
-    sh = _cached_word_shingles(spark, sf_dir, n=3)
+    sh = _cached_word_shingles(spark, sf_dir)
     # Inverted-index shape: pairs sharing ZERO shingles (jaccard 0) never
     # materialize, so the join output is proportional to actual overlap,
     # not to block-size².  (All-pairs + array_intersect per pair was
@@ -3424,16 +3432,14 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vector_database_api_spark.operators import pq as pq_mod  # noqa: E402
 
 
+@_serving_artifact
 def _cached_pq_index(spark: SparkSession, sf_dir: str):
-    key = ("pq", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("string").alias("id"), "embedding"
-        )
-        index = pq_mod.build_pq(embs, m=8, k=16, seed=42)
-        index.codes_df = _artifact(index.codes_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    embs = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("string").alias("id"), "embedding"
+    )
+    index = pq_mod.build_pq(embs, m=8, k=16, seed=42)
+    index.codes_df = _artifact(index.codes_df)
+    return index
 
 
 @register_demo("pq_search_topk")
@@ -3479,16 +3485,14 @@ def ivfpq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_ivf_index_embeddings(spark: SparkSession, sf_dir: str):
-    key = ("ivf-embs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("string").alias("id"), "embedding"
-        )
-        index = ivf_mod.build_ivf(embs)
-        index.index_df = _artifact(index.index_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    embs = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("string").alias("id"), "embedding"
+    )
+    index = ivf_mod.build_ivf(embs)
+    index.index_df = _artifact(index.index_df)
+    return index
 
 
 @register(
@@ -5755,65 +5759,24 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOILER_DF = 4  # doc-frequency threshold (99th pctile at sf0.01)
 
 
-def _cached_boilerplate_lexicon(
-    spark: SparkSession, sf_dir: str, method: str | None = None
-) -> DataFrame:
+@_serving_artifact
+def _cached_boilerplate_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(shingle, n_docs) for every shingle at df >= threshold, persisted
     once per sf_dir — the boilerplate LEXICON is the stored artifact of
     this curation stage (a real pipeline computes it in one corpus pass
     and applies it to every document); both boilerplate queries derive
-    from it.
-
-    ``method`` (default from ``$SPARK_GRAFT_BOILER_METHOD``, fallback
-    "exact"):
-
-    - "exact": groupBy over every distinct shingle — one shuffle row per
-      distinct key; fine up to ~1e9 distinct shingles.
-    - "mg": Misra-Gries sketch-then-verify
-      (``frequency.frequent_items_two_pass``) — candidate discovery with
-      O(k) state per partition, then an exact recount of only the ≤ k
-      candidates.  Bit-identical output whenever k > n_shingles / df
-      threshold (tested in test_frequency.py).
-
-      PAYOFF CAVEAT: at THIS corpus's low df threshold (4), sizing k for
-      the guarantee gives k ≈ n/2 — MG state approaches O(n) per
-      partition and the sketch cannot beat the exact groupBy; the path
-      exists here as the executable, equivalence-tested twin of the
-      100 TB shape, which pays off only when min_count is a large
-      fraction of n (k ≪ distinct universe — e.g. stopword or hot-
-      boilerplate discovery, min_count ~ 0.1% of corpus tokens).  With
-      k over the broadcast item limit the verify semi-join runs as a
-      shuffle join, never an O(n) broadcast (advisor round-3 finding)."""
-    import os as _os
-
-    method = method or _os.environ.get("SPARK_GRAFT_BOILER_METHOD", "exact")
-    key = ("boiler-lexicon", sf_dir, method)
-    if key not in _SERVING_INDEXES:
-        sh = _cached_word_shingles(spark, sf_dir, 3)
-        ex = sh.select(F.explode("shingles").alias("shingle"))
-        if method == "mg":
-            from vector_database_api_spark.operators.frequency import (
-                frequent_items_two_pass,
-            )
-
-            # size k from corpus stats so the MG superset guarantee
-            # (min_count > n/k) holds: k > n / threshold, padded 2x
-            n = ex.count()
-            k = max(1024, int(2 * n / _BOILER_DF))
-            lex = frequent_items_two_pass(
-                ex, "shingle", min_count=_BOILER_DF, k=k
-            ).select(F.col("item").alias("shingle"), F.col("n").alias("n_docs"))
-        elif method == "exact":
-            lex = (
-                ex.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("n_docs"))
-                .filter(F.col("n_docs") >= _BOILER_DF)
-            )
-        else:
-            raise ValueError(f"unknown lexicon method: {method}")
-        lex = _artifact(lex)
-        _SERVING_INDEXES[key] = lex
-    return _SERVING_INDEXES[key]
+    from it.  An exact groupBy over every distinct shingle: at this
+    corpus's low df threshold (4) the Misra-Gries sketch-then-verify
+    path (``frequency.frequent_items_two_pass``) would need k ≈ n/2 for
+    its superset guarantee, so it cannot beat the groupBy here."""
+    ex = _cached_word_shingles(spark, sf_dir).select(
+        F.explode("shingles").alias("shingle")
+    )
+    return _artifact(
+        ex.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .filter(F.col("n_docs") >= _BOILER_DF)
+    )
 
 
 @register(
@@ -5867,7 +5830,7 @@ def boilerplate_doc_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back -> per-doc ratio; the boilerplate set is small by
     construction (HAVING threshold) so the back-join broadcasts at any
     corpus scale."""
-    sh = _cached_word_shingles(spark, sf_dir, 3)
+    sh = _cached_word_shingles(spark, sf_dir)
     ex = sh.select(
         F.col("id").alias("doc_id"), F.explode("shingles").alias("shingle")
     )
@@ -6447,42 +6410,39 @@ def knn_join_blocked_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(kind, gram, c) corpus uni+bigram counts, persisted once per
     sf_dir — one explode, one map-side-combined shuffle."""
-    key = ("gram-counts", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select(F.split(F.lower("text"), " ", -1).alias("words"))
-            .filter(F.size("words") >= 2)
-        )
-        grams = docs.select(
-            F.explode(
-                F.expr(
-                    "concat("
-                    " transform(words, w -> struct('w' AS kind, w AS gram)),"
-                    " transform(sequence(2, size(words)),"
-                    "   i -> struct('b' AS kind,"
-                    "               concat(words[i-2], ' ', words[i-1]) AS gram)))"
-                )
-            ).alias("g")
-        ).select(F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
-        # drop empty tokens: bare '' unigrams; bigrams with an empty side
-        # start or end with the separator space (tokens cannot contain one)
-        grams = grams.filter(
-            ((F.col("kind") == "w") & (F.col("gram") != ""))
-            | (
-                (F.col("kind") == "b")
-                & ~F.col("gram").startswith(" ")
-                & ~F.col("gram").endswith(" ")
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.split(F.lower("text"), " ", -1).alias("words"))
+        .filter(F.size("words") >= 2)
+    )
+    grams = docs.select(
+        F.explode(
+            F.expr(
+                "concat("
+                " transform(words, w -> struct('w' AS kind, w AS gram)),"
+                " transform(sequence(2, size(words)),"
+                "   i -> struct('b' AS kind,"
+                "               concat(words[i-2], ' ', words[i-1]) AS gram)))"
             )
+        ).alias("g")
+    ).select(F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
+    # drop empty tokens: bare '' unigrams; bigrams with an empty side
+    # start or end with the separator space (tokens cannot contain one)
+    grams = grams.filter(
+        ((F.col("kind") == "w") & (F.col("gram") != ""))
+        | (
+            (F.col("kind") == "b")
+            & ~F.col("gram").startswith(" ")
+            & ~F.col("gram").endswith(" ")
         )
-        gc = _artifact(
-            grams.groupBy("kind", "gram").agg(F.count(F.lit(1)).alias("c"))
-        )
-        _SERVING_INDEXES[key] = gc
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(
+        grams.groupBy("kind", "gram").agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 @register(
@@ -6756,6 +6716,22 @@ def salted_join_cohort_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
+def _cached_multiprobe_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, cluster_id, probe_rank) query probe map: each vector's 2
+    nearest frozen centroids — an index artifact like the storage
+    assignment (`_cached_semdedup_assignment`), and this join family's
+    build side, hence `_persisted_artifact`."""
+    embs = load_table(spark, sf_dir, "embeddings")
+    cents = embs.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("cluster_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    return _persisted_artifact(
+        dedup_mod.assign_clusters_topp(embs, cents, p=2, id_col="vec_id")
+    )
+
+
 @register(
     "knn_join_multiprobe_topk",
     f"""
@@ -6818,22 +6794,7 @@ def knn_join_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     form; pair count is sum over probes of |cluster|, still never N^2."""
     embs = load_table(spark, sf_dir, "embeddings")
     store = _cached_semdedup_assignment(spark, sf_dir)  # (id, v, cluster_id)
-    # the probe map is an index artifact like the storage assignment —
-    # computed once per sf_dir and served (bench measures steady state)
-    key = ("multiprobe-assign", sf_dir)
-    if key not in _SERVING_INDEXES:
-        cents = embs.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("embedding").alias("cvec"),
-        )
-        # persist, not _artifact — same stats rationale as the
-        # semdedup store (the probe map is this join family's build side)
-        pr = dedup_mod.assign_clusters_topp(
-            embs, cents, p=2, id_col="vec_id"
-        ).persist()
-        pr.count()
-        _SERVING_INDEXES[key] = pr
-    probes = _SERVING_INDEXES[key]
+    probes = _cached_multiprobe_assignment(spark, sf_dir)
     sn = store.select(
         F.col("id").alias("nid"),
         F.col("v").alias("nv"),
@@ -6865,13 +6826,14 @@ def knn_join_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_trained_multiprobe(
-    spark: SparkSession, sf_dir: str, k: int = 20, p: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(store, probes): the TRAINED-centroid kNN-join serving layout —
     seeded MLlib KMeans (k=20, seed=42, the exact grid point
     tools/ann_quality.py measures), storage assignment at p=1 with
-    staged norms, and the query probe map at probe_rank <= p —
+    staged norms, and the query probe map at probe_rank <= 4 —
     persisted once per sf_dir.  Training cost is paid once (bounded:
     2k-row corpus at bench scale; a 100 TB system trains on a sample,
     operators/ivf.py does exactly that) and every query-time derivation
@@ -6879,42 +6841,31 @@ def _cached_trained_multiprobe(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    key = ("trained-multiprobe", sf_dir, k, p)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        km_in = embs.select(
-            array_to_vector(F.col("embedding").cast("array<double>")).alias(
-                "features"
-            )
+    embs = load_table(spark, sf_dir, "embeddings")
+    km_in = embs.select(
+        array_to_vector(F.col("embedding").cast("array<double>")).alias(
+            "features"
         )
-        km = KMeans(k=k, seed=42, maxIter=10).fit(km_in)
-        cents = spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in c])
-                for i, c in enumerate(km.clusterCenters())
-            ],
-            "cluster_id int, cvec array<double>",
-        )
-        assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
-        store = (
-            embs.select(
-                F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-            )
-            .join(assigned, "id")
-            .select("id", "v", "cluster_id", vec_norm2("v").alias("nn2"))
-            # persist, not _artifact — stats rationale on the
-            # semdedup store above (cluster_id join build-side choice)
-            .persist()
-        )
-        store.count()
-        probes = (
-            dedup_mod.assign_clusters_topp(embs, cents, p=p, id_col="vec_id")
-            .select("id", "cluster_id")
-            .persist()
-        )
-        probes.count()
-        _SERVING_INDEXES[key] = (store, probes)
-    return _SERVING_INDEXES[key]
+    )
+    km = KMeans(k=20, seed=42, maxIter=10).fit(km_in)
+    cents = spark.createDataFrame(
+        [
+            (int(i), [float(x) for x in c])
+            for i, c in enumerate(km.clusterCenters())
+        ],
+        "cluster_id int, cvec array<double>",
+    )
+    assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
+    store = _persisted_artifact(
+        embs.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+        .join(assigned, "id")
+        .select("id", "v", "cluster_id", vec_norm2("v").alias("nn2"))
+    )
+    probes = _persisted_artifact(
+        dedup_mod.assign_clusters_topp(embs, cents, p=4, id_col="vec_id")
+        .select("id", "cluster_id")
+    )
+    return store, probes
 
 
 @register_demo("knn_join_trained_multiprobe")
@@ -6997,18 +6948,15 @@ def cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vector_database_api_spark.operators import bpe as bpe_mod  # noqa: E402
 
 
-def _cached_span_occ(spark: SparkSession, sf_dir: str, w: int = 8) -> DataFrame:
-    """(span, id, grp, occ) span occurrence table, persisted once per
-    sf_dir — the stored artifact of a span-dedup pipeline (the analogue
-    of the MinHash signature table): the window explode and the
+@_serving_artifact
+def _cached_span_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(span, id, grp, occ) word-8-gram span occurrence table, persisted
+    once per sf_dir — the stored artifact of a span-dedup pipeline (the
+    analogue of the MinHash signature table): the window explode and the
     (span, doc) collapse are paid once, and both span queries are
     cheap derivations over it."""
-    key = ("span-occ", sf_dir, w)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        occ = _artifact(dedup_mod.span_occurrences(docs, w=w))
-        _SERVING_INDEXES[key] = occ
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return _artifact(dedup_mod.span_occurrences(docs, w=8))
 
 
 @register(
@@ -7045,20 +6993,17 @@ def span_dedup_hot_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_bpe_wf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, cnt) corpus word-frequency table, persisted once per
     sf_dir — the stored artifact of a tokenizer-training service (like
     the PMI gram counts); BPE rounds are query-time derivations over it,
     and without the cache every unrolled round branch would re-scan the
     corpus."""
-    key = ("bpe-wf", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        wf = _artifact(bpe_mod.word_frequencies(docs))
-        _SERVING_INDEXES[key] = wf
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return _artifact(bpe_mod.word_frequencies(docs))
 
 
 @register(
@@ -7458,6 +7403,51 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
+def _cached_bigram_lm(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(unigram counts, bigram counts, bigram fact): the trusted-source
+    (src0) bigram LM of `lm_cross_entropy_screen` — the trained-LM store
+    of a real pipeline (`streaming.maintenance.build_bigram_lm_artifact`
+    is the durable twin), so repeat queries skip the training
+    aggregates entirely."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", F.split(F.lower("text"), " ", -1).alias("words"))
+        .filter(F.size("words") >= 2)
+    )
+    fact = docs.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.expr(
+                "transform(sequence(2, size(words)),"
+                " i -> struct(words[i-2] AS w1, words[i-1] AS w2))"
+            )
+        ).alias("g"),
+    ).filter((F.col("g.w1") != "") & (F.col("g.w2") != "")).select(
+        "doc_id",
+        "source",
+        F.col("g.w1").alias("w1"),
+        F.concat_ws(" ", "g.w1", "g.w2").alias("bg"),
+    )
+    fact_p = _artifact(fact)
+    lm_src = fact_p.filter(F.col("source") == "src0")
+    u = _artifact(
+        lm_src.groupBy(F.col("w1").alias("w")).agg(
+            F.count(F.lit(1)).alias("c1")
+        )
+    )
+    b = _artifact(
+        lm_src.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
+    )
+    # the exploded bigram fact is ALSO the scoring input — keep it
+    # materialized (the dsir featurize-once discipline, r8) so later
+    # scoring passes skip the per-call corpus explode
+    return u, b, fact_p
+
+
 @register(
     "lm_cross_entropy_screen",
     """
@@ -7527,48 +7517,7 @@ def lm_cross_entropy_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §2 ends at vector search; this extends the engine's
     LLM-pipeline tier alongside token_drift_kl, which is corpus-level
     KL — this is the per-DOCUMENT screen)."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", F.split(F.lower("text"), " ", -1).alias("words"))
-        .filter(F.size("words") >= 2)
-    )
-    fact = docs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(2, size(words)),"
-                " i -> struct(words[i-2] AS w1, words[i-1] AS w2))"
-            )
-        ).alias("g"),
-    ).filter((F.col("g.w1") != "") & (F.col("g.w2") != "")).select(
-        "doc_id",
-        "source",
-        F.col("g.w1").alias("w1"),
-        F.concat_ws(" ", "g.w1", "g.w2").alias("bg"),
-    )
-    # LM count tables served from the per-corpus artifact cache (the
-    # trained-LM store of a real pipeline — `streaming.maintenance.
-    # build_bigram_lm_artifact` is the durable twin); deterministic, so
-    # the oracle is unaffected, and repeat queries skip the training
-    # aggregates entirely
-    lm_key = ("bigram-lm", sf_dir)
-    if lm_key not in _SERVING_INDEXES:
-        fact_p = _artifact(fact)
-        lm_src = fact_p.filter(F.col("source") == "src0")
-        u = _artifact(
-            lm_src.groupBy(F.col("w1").alias("w")).agg(
-                F.count(F.lit(1)).alias("c1")
-            )
-        )
-        b = _artifact(
-            lm_src.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
-        )
-        # the exploded bigram fact is ALSO the scoring input — keep it
-        # materialized (the dsir featurize-once discipline, r8) so later
-        # scoring passes skip the per-call corpus explode
-        _SERVING_INDEXES[lm_key] = (u, b, fact_p)
-    lm_uni, lm_big, fact = _SERVING_INDEXES[lm_key]
+    lm_uni, lm_big, fact = _cached_bigram_lm(spark, sf_dir)
     vocab = lm_uni.agg(F.count(F.lit(1)).alias("v"))
     scored = (
         fact.join(lm_big, "bg", "left")
@@ -7806,6 +7755,7 @@ FROM pairs GROUP BY source ORDER BY source
 """
 
 
+@_serving_artifact
 def _cached_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-corpus winnowing fingerprint ARTIFACT (exploded (doc_id,
     source, nf, f) occurrence table, hot-capped), built once and persisted — the
@@ -7814,40 +7764,37 @@ def _cached_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     build stage is the expensive part (interpreted HOF md5 per char
     position; ~15 s at sf0.1 across 32 cores), so repeat queries must
     not re-scan the corpus."""
-    key = ("winnow-fps", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            # too-short docs carry no window; dropping them BEFORE the
-            # exchange keeps the rebalance payload minimal (the builder
-            # re-applies the same filter as a no-op)
-            .filter(F.length("text") >= 17)
-            # spread the md5-per-position HOF stage across all cores:
-            # the source is one small parquet file locally (one input
-            # split).  This IS an extra exchange, but it is in the
-            # one-time artifact build (rows are pre-explode and tiny);
-            # at real scan widths the scan already has enough splits
-            # and the exchange just rebalances them
-            .repartition(spark.sparkContext.defaultParallelism)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        # too-short docs carry no window; dropping them BEFORE the
+        # exchange keeps the rebalance payload minimal (the builder
+        # re-applies the same filter as a no-op)
+        .filter(F.length("text") >= 17)
+        # spread the md5-per-position HOF stage across all cores:
+        # the source is one small parquet file locally (one input
+        # split).  This IS an extra exchange, but it is in the
+        # one-time artifact build (rows are pre-explode and tiny);
+        # at real scan widths the scan already has enough splits
+        # and the exchange just rebalances them
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    # shared builders (operators/dedup.py — the streaming upkeep
+    # derives the identical rows per micro-batch).  fp is persisted
+    # because size + explode BOTH reference fps: un-persisted,
+    # CollapseProject inlines the whole HOF chain into each (2x the
+    # md5/winnow work — measured 417 s vs ~210 s at 500k docs).
+    # The df > 32 hot cap is applied at BUILD time; nf keeps the
+    # doc's FULL fingerprint count so containment denominators stay
+    # honest (rationale on dedup.winnow_hot_cap).
+    fp = dedup_mod.winnow_fingerprints(docs, k=12, w=6).persist()
+    fp.count()
+    kept = _artifact(
+        dedup_mod.winnow_hot_cap(
+            dedup_mod.winnow_occurrences(fp), max_df=32
         )
-        # shared builders (operators/dedup.py — the streaming upkeep
-        # derives the identical rows per micro-batch).  fp is persisted
-        # because size + explode BOTH reference fps: un-persisted,
-        # CollapseProject inlines the whole HOF chain into each (2x the
-        # md5/winnow work — measured 417 s vs ~210 s at 500k docs).
-        # The df > 32 hot cap is applied at BUILD time; nf keeps the
-        # doc's FULL fingerprint count so containment denominators stay
-        # honest (rationale on dedup.winnow_hot_cap).
-        fp = dedup_mod.winnow_fingerprints(docs, k=12, w=6).persist()
-        fp.count()
-        kept = _artifact(
-            dedup_mod.winnow_hot_cap(
-                dedup_mod.winnow_occurrences(fp), max_df=32
-            )
-        )
-        fp.unpersist()
-        _SERVING_INDEXES[key] = kept
-    return _SERVING_INDEXES[key]
+    )
+    fp.unpersist()
+    return kept
 
 
 @register("winnow_fingerprint_pairs", _WINNOW_ORACLE)
@@ -7979,6 +7926,7 @@ GROUP BY source ORDER BY source
 """
 
 
+@_serving_artifact
 def _cached_xsub_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional k-gram occurrence ARTIFACT (doc_id, source, pos, h),
     persisted once per sf_dir — the index side of exact-substring dedup
@@ -7991,26 +7939,22 @@ def _cached_xsub_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     real text are unique), the df cap is the viral-boilerplate policy
     — the winnow artifact applies its cap at build for the same
     reason."""
-    key = ("xsub-grams", sf_dir)
-    if key not in _SERVING_INDEXES:
-        from vector_database_api_spark.operators.dedup import (
-            kgram_positions,
-            prune_for_pairing,
-        )
+    from vector_database_api_spark.operators.dedup import (
+        kgram_positions,
+        prune_for_pairing,
+    )
 
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "text")
-            # one local parquet file = one input split: spread the
-            # md5-per-position stage across all cores (same rationale
-            # as the winnow artifact build)
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        g = _artifact(
-            prune_for_pairing(kgram_positions(docs, k=_XSUB_K), _XSUB_DF)
-        )
-        _SERVING_INDEXES[key] = g
-    return _SERVING_INDEXES[key]
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", "text")
+        # one local parquet file = one input split: spread the
+        # md5-per-position stage across all cores (same rationale
+        # as the winnow artifact build)
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    return _artifact(
+        prune_for_pairing(kgram_positions(docs, k=_XSUB_K), _XSUB_DF)
+    )
 
 
 @register("exact_substring_dedup_stats", _XSUB_ORACLE)
@@ -8187,30 +8131,15 @@ FROM perdoc GROUP BY source ORDER BY source
 """
 
 
-@register("dsir_importance_weights", _DSIR_ORACLE)
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR — Data Selection with Importance Resampling (Xie et al.,
-    NeurIPS 2023, public): score every document by the log importance
-    ratio ln(p_target/p_raw) under two hashed-bigram bag-of-ngrams
-    models (the paper's exact feature space — bigrams hashed into a
-    fixed bucket count, here 1024 via the cross-engine 60-bit md5),
-    target = English docs, raw = the whole corpus, both add-one
-    smoothed.  Per-source rollup: mean per-bigram log importance and
-    how many docs lean target-ward — the upstream statistic a pipeline
-    thresholds (or Gumbel-samples, per the paper) to pick pretraining
-    data that matches a trusted distribution.  Complements
-    lm_cross_entropy_screen (CCNet's one-sided perplexity screen):
-    DSIR is the RATIO of two LMs, so it prefers target-LIKE text
-    rather than merely fluent text.  Plan at 100 TB: the two
-    bucket-count tables are the trained importance model — built from
-    ONE persisted pass over the bigram fact (map-side combinable,
-    output bounded at 1024 rows each), served from the per-corpus
-    artifact cache; totals derive from the count tables, so serving is
-    one corpus scan plus broadcast joins — ZERO scoring shuffles
-    regardless of corpus size; per-doc and per-source rollups are
-    combinable.  ln of IEEE quotients of exact
-    integer counts keeps the score hash-matchable (char-entropy
-    precedent)."""
+@_serving_artifact
+def _cached_dsir_lm(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(target bucket counts, raw bucket counts, hashed bigram fact): the
+    two hashed-ngram LMs of `dsir_importance_weights` — the trained
+    importance model of the DSIR paper, a write-once artifact built from
+    ONE pass over the bigram fact; totals derive from the 1024-row count
+    tables, not from extra corpus scans."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -8245,28 +8174,47 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
     )
-    # the two hashed-ngram LMs are the trained importance model of the
-    # DSIR paper — a write-once artifact (lm_cross_entropy precedent):
-    # built from ONE persisted pass over the bigram fact, served from
-    # the per-corpus cache on every later call; totals are derived from
-    # the 1024-row count tables, not from extra corpus scans
-    dsir_key = ("dsir-lm", sf_dir)
-    if dsir_key not in _SERVING_INDEXES:
-        fact_p = _artifact(fact)
-        tgt_a = _artifact(
-            fact_p.filter(F.col("lang") == "en")
-            .groupBy("b")
-            .agg(F.count(F.lit(1)).alias("ct"))
-        )
-        raw_a = _artifact(
-            fact_p.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
-        )
-        # the featurized fact IS an artifact too (the DSIR paper
-        # featurizes the corpus once and scores from the feature file):
-        # keeping it persisted removes the per-call bigram re-hash
-        # (md5 per occurrence) from every later scoring pass (r8)
-        _SERVING_INDEXES[dsir_key] = (tgt_a, raw_a, fact_p)
-    tgt, raw, fact = _SERVING_INDEXES[dsir_key]
+    fact_p = _artifact(fact)
+    tgt_a = _artifact(
+        fact_p.filter(F.col("lang") == "en")
+        .groupBy("b")
+        .agg(F.count(F.lit(1)).alias("ct"))
+    )
+    raw_a = _artifact(
+        fact_p.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
+    )
+    # the featurized fact IS an artifact too (the DSIR paper
+    # featurizes the corpus once and scores from the feature file):
+    # keeping it persisted removes the per-call bigram re-hash
+    # (md5 per occurrence) from every later scoring pass (r8)
+    return tgt_a, raw_a, fact_p
+
+
+@register("dsir_importance_weights", _DSIR_ORACLE)
+def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR — Data Selection with Importance Resampling (Xie et al.,
+    NeurIPS 2023, public): score every document by the log importance
+    ratio ln(p_target/p_raw) under two hashed-bigram bag-of-ngrams
+    models (the paper's exact feature space — bigrams hashed into a
+    fixed bucket count, here 1024 via the cross-engine 60-bit md5),
+    target = English docs, raw = the whole corpus, both add-one
+    smoothed.  Per-source rollup: mean per-bigram log importance and
+    how many docs lean target-ward — the upstream statistic a pipeline
+    thresholds (or Gumbel-samples, per the paper) to pick pretraining
+    data that matches a trusted distribution.  Complements
+    lm_cross_entropy_screen (CCNet's one-sided perplexity screen):
+    DSIR is the RATIO of two LMs, so it prefers target-LIKE text
+    rather than merely fluent text.  Plan at 100 TB: the two
+    bucket-count tables are the trained importance model — built from
+    ONE persisted pass over the bigram fact (map-side combinable,
+    output bounded at 1024 rows each), served from the per-corpus
+    artifact cache; totals derive from the count tables, so serving is
+    one corpus scan plus broadcast joins — ZERO scoring shuffles
+    regardless of corpus size; per-doc and per-source rollups are
+    combinable.  ln of IEEE quotients of exact
+    integer counts keeps the score hash-matchable (char-entropy
+    precedent)."""
+    tgt, raw, fact = _cached_dsir_lm(spark, sf_dir)
     nt = tgt.agg(F.sum("ct").alias("n_t"))
     nr = raw.agg(F.sum("cr").alias("n_r"))
     lw = F.log(
@@ -8300,6 +8248,16 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
+def _cached_bpe_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(word, rep) post-merge vocabulary representations after 3 BPE
+    rounds — the trained tokenizer model (a real tokenizer's merges
+    file), learned over the `_cached_bpe_wf` word frequencies."""
+    return _artifact(
+        bpe_mod.bpe_final_reps(_cached_bpe_wf(spark, sf_dir), rounds=3)
+    )
+
+
 @register(
     "bpe_tokenize_profile",
     bpe_mod.duck_bpe_tokenize_sql(rounds=3),
@@ -8319,13 +8277,7 @@ def bpe_tokenize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     outgrows broadcast) and a map-side-combinable per-source rollup.
     Integer-exact everywhere; the chars/token ratio is one IEEE division
     of exact counts (hash-safe)."""
-    key = ("bpe-reps", sf_dir)
-    if key not in _SERVING_INDEXES:
-        reps = _artifact(
-            bpe_mod.bpe_final_reps(_cached_bpe_wf(spark, sf_dir), rounds=3)
-        )
-        _SERVING_INDEXES[key] = reps
-    reps = _SERVING_INDEXES[key]
+    reps = _cached_bpe_reps(spark, sf_dir)
     nsym = reps.select(
         "word",
         F.length("word").alias("n_chars"),
@@ -8858,6 +8810,7 @@ def _bm25_score(base: DataFrame, stats: DataFrame) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 5-scalar BM25 statistics row, persisted once per sf_dir — the
     statistics artifact a keyword engine maintains next to its postings
@@ -8865,13 +8818,9 @@ def _cached_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same statistics fresh under ingest; deterministic, so the oracle
     gate is unaffected).  Serving a query then costs ONE corpus scan
     (score + top-k) instead of two (stats pass + scoring pass)."""
-    key = ("bm25-stats", sf_dir)
-    if key not in _SERVING_INDEXES:
-        stats = _artifact(
-            _bm25_stats(_bm25_base(load_table(spark, sf_dir, "documents")))
-        )
-        _SERVING_INDEXES[key] = stats
-    return _SERVING_INDEXES[key]
+    return _artifact(
+        _bm25_stats(_bm25_base(load_table(spark, sf_dir, "documents")))
+    )
 
 
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8889,6 +8838,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCORED-CORPUS artifact for the fixed request {dup, vector,
     hash}: (doc_id, dl, tf_*, bm25) for every hitting doc, materialized
@@ -8905,10 +8855,7 @@ def _cached_bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bm25_postings_topk` (same oracle), and that pair existing is the
     proof that scan-serving == index-serving bit-exactly — which is
     also the hash proof that this artifact changes no reader's values."""
-    key = ("bm25-scored", sf_dir)
-    if key not in _SERVING_INDEXES:
-        _SERVING_INDEXES[key] = _artifact(_bm25_scored(spark, sf_dir))
-    return _SERVING_INDEXES[key]
+    return _artifact(_bm25_scored(spark, sf_dir))
 
 
 def _bm25_scored_docs(docs: DataFrame) -> DataFrame:
@@ -8943,6 +8890,7 @@ def bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_bm25_postings(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -8955,15 +8903,10 @@ def _cached_bm25_postings(
     statistics half fresh under ingest)."""
     from vector_database_api_spark.operators import bm25 as bm25_ops
 
-    key = ("bm25-postings", sf_dir)
-    if key not in _SERVING_INDEXES:
-        postings, doclens, _ = bm25_ops.build_bm25_index(
-            load_table(spark, sf_dir, "documents"), id_col="doc_id"
-        )
-        postings = _artifact(postings)
-        doclens = _artifact(doclens)
-        _SERVING_INDEXES[key] = (postings, doclens)
-    return _SERVING_INDEXES[key]
+    postings, doclens, _ = bm25_ops.build_bm25_index(
+        load_table(spark, sf_dir, "documents"), id_col="doc_id"
+    )
+    return _artifact(postings), _artifact(doclens)
 
 
 @register("bm25_postings_topk", _BM25_ORACLE)
@@ -9002,9 +8945,9 @@ def _postings_scored_sql(spark: SparkSession, sf_dir: str) -> str:
     aggregation; statistics bind as exact literals
     (_stats_literal_cols)."""
     postings, doclens = _cached_bm25_postings(spark, sf_dir)
-    p = _sql_ref_df(postings, "_postings_art")
-    dlv = _sql_ref_df(doclens, "_doclens_art")
-    stats = _stats_literal_cols(_cached_stats_row(spark, sf_dir, "bm25-stats"))
+    p = _sql_ref_df(postings, sf_dir, "_postings_art")
+    dlv = _sql_ref_df(doclens, sf_dir, "_doclens_art")
+    stats = _stats_literal_cols(_cached_bm25_stats_row(spark, sf_dir))
     terms_in = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     tf_cols = ", ".join(
         f"CAST(coalesce(sum(CASE WHEN term = '{t}' THEN tf END), 0)"
@@ -9095,26 +9038,23 @@ ORDER BY ql DESC, doc_id LIMIT 10
 """
 
 
+@_serving_artifact
 def _cached_ql_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row (total_tokens, cf_dup, cf_vector, cf_hash): the collection
     LANGUAGE MODEL — the statistics artifact Dirichlet-QL scoring reads
     next to the BM25 stats row (both are combinable aggregates, both
     maintained by the same streaming partial-stats pattern)."""
-    key = ("ql-stats", sf_dir)
-    if key not in _SERVING_INDEXES:
-        qstats = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .agg(
-                F.sum("dl").cast("long").alias("total_tokens"),
-                *[
-                    F.sum(f"tf_{t}").cast("long").alias(f"cf_{t}")
-                    for t in _BM25_TERMS
-                ],
-            )
+    qstats = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .agg(
+            F.sum("dl").cast("long").alias("total_tokens"),
+            *[
+                F.sum(f"tf_{t}").cast("long").alias(f"cf_{t}")
+                for t in _BM25_TERMS
+            ],
         )
-        qstats = _artifact(qstats)
-        _SERVING_INDEXES[key] = qstats
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(qstats)
 
 
 @register("ql_dirichlet_topk", _QL_ORACLE)
@@ -9205,23 +9145,20 @@ def _ltr_kw_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
+@_serving_artifact
 def _cached_doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-scoped embeddings (vec_id, embedding) — the VECTOR
     STORE artifact a served dense retriever reads per query instead of
     re-reading parquet and re-running the doc-scope semi-join per call
     (r8: the per-call rebuild was half of ltr_feature_matrix's dense
     leg cost).  Persisted once per sf_dir like every serving index."""
-    key = ("ltr-doc-embeddings", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings").join(
-            docs.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        )
-        emb = _artifact(emb)
-        _SERVING_INDEXES[key] = emb
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings").join(
+        docs.select(F.col("doc_id").alias("vec_id")),
+        "vec_id",
+        "left_semi",
+    )
+    return _artifact(emb)
 
 
 def _ltr_cos_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9229,7 +9166,7 @@ def _ltr_cos_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact.  Audited via AUDIT_SUBPLANS.  One sql() string since r11
     (guide §5); cosine is the bit-exact SQL-text twin
     (functions/vector.py::cosine_similarity_sql)."""
-    de = _sql_ref_df(_cached_doc_embeddings(spark, sf_dir), "_ltr_docemb")
+    de = _sql_ref_df(_cached_doc_embeddings(spark, sf_dir), sf_dir, "_ltr_docemb")
     emb = _sql_ref(spark, sf_dir, "embeddings")
     return spark.sql(f"""
         SELECT doc_id FROM (
@@ -9284,9 +9221,9 @@ def ltr_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _sql_ref(spark, sf_dir, "documents")
     emb = _sql_ref(spark, sf_dir, "embeddings")
     stats = _stats_literal_cols(
-        _cached_stats_row(spark, sf_dir, "bm25-stats")
-    ) + ", " + _stats_literal_cols(_cached_stats_row(spark, sf_dir, "ql-stats"))
-    id_list = ", ".join(str(i) for i in ids)
+        _cached_bm25_stats_row(spark, sf_dir)
+    ) + ", " + _stats_literal_cols(_cached_ql_stats_row(spark, sf_dir))
+    id_list = ", ".join(str(i) for i in ids) or "NULL"  # IN (NULL): no row
     tf_stage = ", ".join(
         f"CAST(size(filter(_toks, x -> x = '{t}')) AS BIGINT) AS tf_{t}"
         for t in _BM25_TERMS
@@ -9367,43 +9304,40 @@ ORDER BY any_value(d.best) DESC, d.doc_id LIMIT 10
 """
 
 
+@_serving_artifact
 def _cached_maxp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s, dl, tf_*) per passage window — the chunk-level scoring
     artifact of the maxP query, persisted once per sf_dir (the chunk
     expansion and per-chunk term counts are the expensive stage; the
     stats aggregate and scoring are derivations over it)."""
-    key = ("maxp-chunks", sf_dir)
-    if key not in _SERVING_INDEXES:
-        toks = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .select(
-                "doc_id", F.expr("split(lower(text), ' ', -1)").alias("ws")
-            )
+    toks = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            "doc_id", F.expr("split(lower(text), ' ', -1)").alias("ws")
         )
-        chunks = toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(f"sequence(1, size(ws), {_MAXP_STRIDE})")
-            ).alias("s"),
-            "ws",
-        ).select(
-            "doc_id", "s", F.expr(f"slice(ws, s, {_MAXP_WIN})").alias("cw")
+    )
+    chunks = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(f"sequence(1, size(ws), {_MAXP_STRIDE})")
+        ).alias("s"),
+        "ws",
+    ).select(
+        "doc_id", "s", F.expr(f"slice(ws, s, {_MAXP_WIN})").alias("cw")
+    )
+    cols = [
+        F.col("doc_id"),
+        F.col("s"),
+        F.size("cw").cast("long").alias("dl"),
+    ]
+    for t in _BM25_TERMS:
+        cols.append(
+            F.expr(f"size(filter(cw, x -> x = '{t}'))")
+            .cast("long")
+            .alias(f"tf_{t}")
         )
-        cols = [
-            F.col("doc_id"),
-            F.col("s"),
-            F.size("cw").cast("long").alias("dl"),
-        ]
-        for t in _BM25_TERMS:
-            cols.append(
-                F.expr(f"size(filter(cw, x -> x = '{t}'))")
-                .cast("long")
-                .alias(f"tf_{t}")
-            )
-        base = _artifact(chunks.select(*cols))
-        _SERVING_INDEXES[key] = base
-    return _SERVING_INDEXES[key]
+    return _artifact(chunks.select(*cols))
 
 
 @register("maxp_passage_topk", _MAXP_ORACLE)
@@ -10516,21 +10450,18 @@ def rm3_expanded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term, df) corpus vocabulary with document frequency — the
     dictionary a keyword engine keeps next to its postings (it IS the
     distinct-term projection of the postings artifact: vocab-sized,
     not corpus-sized).  Persisted once per sf_dir with the standard
     pinning discipline."""
-    key = ("vocab", sf_dir)
-    if key not in _SERVING_INDEXES:
-        postings, _ = _cached_bm25_postings(spark, sf_dir)
-        vocab = _artifact(
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        )
-        _SERVING_INDEXES[key] = vocab
-    return _SERVING_INDEXES[key]
+    postings, _ = _cached_bm25_postings(spark, sf_dir)
+    return _artifact(
+        postings.groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("df"))
+    )
 
 
 _FUZZY_Q = "vectr"  # a typo of "vector"
@@ -10612,6 +10543,7 @@ def fuzzy_term_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_bm25_maxscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row (ub_dup, ub_vector, ub_hash): the per-term score UPPER
     BOUND a MaxScore/WAND engine stores next to its postings (Turtle &
@@ -10619,25 +10551,21 @@ def _cached_bm25_maxscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     max BM25 contribution any corpus document yields for the term.
     Build cost is one scoring pass at INDEX time (the artifact
     discipline); query time reads 1 row."""
-    key = ("bm25-maxscores", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
-            .select(
-                *[
-                    F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
-                    for t in _BM25_TERMS
-                ]
-            )
+    scored = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
+        .select(
+            *[
+                F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
+                for t in _BM25_TERMS
+            ]
         )
-        ubs = _artifact(
-            scored.agg(
-                *[F.max(f"c_{t}").alias(f"ub_{t}") for t in _BM25_TERMS]
-            )
+    )
+    return _artifact(
+        scored.agg(
+            *[F.max(f"c_{t}").alias(f"ub_{t}") for t in _BM25_TERMS]
         )
-        _SERVING_INDEXES[key] = ubs
-    return _SERVING_INDEXES[key]
+    )
 
 
 @register("bm25_maxscore_topk", _BM25_ORACLE)
@@ -10708,6 +10636,7 @@ def bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BMW_BLOCK = 64  # docs per contiguous doc-id block (the skip-pointer granule)
 
 
+@_serving_artifact
 def _cached_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(block, bm_dup, bm_vector, bm_hash): per-(doc-id-block, term)
     score upper bounds — the BLOCK-MAX postings metadata of Ding & Suel
@@ -10722,25 +10651,21 @@ def _cached_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving time only the query terms' columns are read.  Block = floor
     (doc_id / width): contiguous ranges, exactly the layout a posting
     list's skip pointers index."""
-    key = ("bm25-blockmax", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
-            .select(
-                F.floor(F.col("doc_id") / _BMW_BLOCK).alias("block"),
-                *[
-                    F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
-                    for t in _BM25_TERMS
-                ],
-            )
+    scored = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
+        .select(
+            F.floor(F.col("doc_id") / _BMW_BLOCK).alias("block"),
+            *[
+                F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
+                for t in _BM25_TERMS
+            ],
         )
-        bm = _artifact(
-            scored.groupBy("block")
-            .agg(*[F.max(f"c_{t}").alias(f"bm_{t}") for t in _BM25_TERMS])
-        )
-        _SERVING_INDEXES[key] = bm
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(
+        scored.groupBy("block")
+        .agg(*[F.max(f"c_{t}").alias(f"bm_{t}") for t in _BM25_TERMS])
+    )
 
 
 @register("bm25_blockmax_topk", _BM25_ORACLE)
@@ -11323,6 +11248,7 @@ def _bm25_batch_frames(
     return scored, run
 
 
+@_serving_artifact
 def _cached_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized batch RUN (qid, doc_id, bm25, rel, rank<=20 or
     NULL) — persisted once per sf_dir, the exact analogue of the TREC
@@ -11334,15 +11260,10 @@ def _cached_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation metric then serve from the stored run without
     re-scoring, which is how a nightly eval over a 10k-query log
     actually runs (score once, evaluate many)."""
-    key = ("bm25-batch-run", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored, run_df = _bm25_batch_frames(
-            spark, sf_dir, persist_scored=True
-        )
-        run = _artifact(run_df)
-        scored.unpersist()  # the run holds its own materialized rows
-        _SERVING_INDEXES[key] = run
-    return _SERVING_INDEXES[key]
+    scored, run_df = _bm25_batch_frames(spark, sf_dir, persist_scored=True)
+    run = _artifact(run_df)
+    scored.unpersist()  # the run holds its own materialized rows
+    return run
 
 
 _BATCH_TOPK_ORACLE = f"""
@@ -11536,6 +11457,7 @@ def _batch_query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_serving_artifact
 def _cached_dense_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted DENSE batch run (qid, doc_id, r_vec<=20) — the
     vector twin of `_cached_batch_run`, shared by the batch hybrid
@@ -11548,12 +11470,7 @@ def _cached_dense_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=Q tasks each sorting the corpus at 100 TB.  grouped_topk is
     row-identical to the window (tests/test_skew.py), so the DuckDB
     oracle's windowed form still hash-matches."""
-    dkey = ("dense-batch-run", sf_dir)
-    if dkey not in _SERVING_INDEXES:
-        _SERVING_INDEXES[dkey] = _artifact(
-            _dense_batch_run_build(spark, sf_dir)
-        )
-    return _SERVING_INDEXES[dkey]
+    return _artifact(_dense_batch_run_build(spark, sf_dir))
 
 
 def _dense_batch_run_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11667,8 +11584,8 @@ def hybrid_batch_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorts), and the fused ranking window's input is the <=40-row-
     # per-qid aggregate (WINDOW_BOUNDS declaration).  Double literals
     # are CAST text so nothing parses as DECIMAL.
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), "_ltrb_vrun")
+    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), sf_dir, "_ltrb_run")
+    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), sf_dir, "_ltrb_vrun")
     return spark.sql(f"""
         WITH fused AS (
           SELECT qid, doc_id, r_kw, r_vec,
@@ -11759,10 +11676,8 @@ def ir_eval_hybrid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # produced it, grade sums see one row per run doc with extra
     # zeros only (integer arithmetic, exact), and HAVING count(rel)
     # replicates the old inner join's "qid must have run rows"."""
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    fused = _sql_ref_df(
-        hybrid_batch_rrf_topk(spark, sf_dir), "_ireval_fused"
-    )
+    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), sf_dir, "_ltrb_run")
+    fused = _sql_ref_df(hybrid_batch_rrf_topk(spark, sf_dir), sf_dir, "_ireval_fused")
     rel_cols = ", ".join(
         f"max(CASE WHEN rank = {r} THEN coalesce(rel, 0) END) AS rel_{r}"
         for r in range(1, 11)
@@ -11899,8 +11814,8 @@ def ltr_feature_matrix_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verdict), and tf_sum is the one-membership-lambda form (r10; each
     # query's terms are distinct so membership == the per-term sum the
     # oracle computes).
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), "_ltrb_vrun")
+    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), sf_dir, "_ltrb_run")
+    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), sf_dir, "_ltrb_vrun")
     docs = _sql_ref(spark, sf_dir, "documents")
     emb = _sql_ref(spark, sf_dir, "embeddings")
     qterms = "CASE p.qid " + " ".join(
@@ -12117,6 +12032,24 @@ ORDER BY mlt_score DESC, doc_id LIMIT 10
 """
 
 
+@_serving_artifact
+def _cached_mlt_term_vector(spark: SparkSession, sf_dir: str) -> list:
+    """The MLT seed document's stored TERM VECTOR: its _MLT_N_TERMS most
+    representative (term, df, wt) rows, collected from the seed's
+    posting rows joined to the vocab df table."""
+    postings, _ = _cached_bm25_postings(spark, sf_dir)
+    return (
+        postings.filter(F.col("id") == _MLT_SEED)
+        .filter(F.length("term") >= 3)
+        .join(F.broadcast(_cached_vocab(spark, sf_dir)), "term")
+        .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir).select("n_docs")))
+        .select("term", "df", F.expr(_MLT_WT).alias("wt"))
+        .orderBy(F.desc("wt"), "term")
+        .limit(_MLT_N_TERMS)
+        .collect()
+    )
+
+
 @register("more_like_this_topk", _MLT_ORACLE)
 def more_like_this_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene-style MoreLikeThis: extract the seed document's
@@ -12140,20 +12073,7 @@ def more_like_this_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float sums), TakeOrderedAndProject."""
     postings, doclens = _cached_bm25_postings(spark, sf_dir)
     stats = _cached_bm25_stats(spark, sf_dir).select("n_docs", "avgdl")
-    tv_key = ("mlt-term-vector", sf_dir, _MLT_SEED)
-    if tv_key not in _SERVING_INDEXES:
-        vocab = _cached_vocab(spark, sf_dir)
-        _SERVING_INDEXES[tv_key] = (
-            postings.filter(F.col("id") == _MLT_SEED)
-            .filter(F.length("term") >= 3)
-            .join(F.broadcast(vocab), "term")
-            .crossJoin(F.broadcast(stats.select("n_docs")))
-            .select("term", "df", F.expr(_MLT_WT).alias("wt"))
-            .orderBy(F.desc("wt"), "term")
-            .limit(_MLT_N_TERMS)
-            .collect()
-        )
-    seed_terms = _SERVING_INDEXES[tv_key]
+    seed_terms = _cached_mlt_term_vector(spark, sf_dir)
     qterms = spark.createDataFrame(
         [(p, r["term"], r["df"]) for p, r in enumerate(seed_terms, 1)],
         "r int, term string, df bigint",
@@ -12260,6 +12180,37 @@ ORDER BY source, rank
 """
 
 
+@_serving_artifact
+def _cached_ctfidf_topic_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, term, ctfidf): the SCORED c-TF-IDF table of
+    `source_topic_keywords` — the topic-model artifact a BERTopic-style
+    pipeline persists; without it the three derived aggregates re-run
+    the corpus explode once EACH."""
+    from vector_database_api_spark.operators.quality import ctfidf_scores
+
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    tc = (
+        docs.select(
+            "source",
+            F.explode(
+                F.split(F.lower(F.col("text")), " ", -1)
+            ).alias("term"),
+        )
+        .filter(F.length("term") >= 3)
+        .groupBy("source", "term")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
+    )
+    # scorer shared with the streamed artifact
+    # (streaming.maintenance.topic_model_serving) — streamed ==
+    # batch is an identity of plans
+    scored = _artifact(ctfidf_scores(tc, "source"))
+    tc.unpersist()
+    return scored
+
+
 @register("source_topic_keywords", _CTFIDF_ORACLE)
 def source_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-based TF-IDF topic labeling (the c-TF-IDF of BERTopic,
@@ -12288,32 +12239,7 @@ def source_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     within each class, and the oracle compare is order-insensitive."""
     from vector_database_api_spark.operators.skew import grouped_topk
 
-    key = ("ctfidf-topic-model", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        from vector_database_api_spark.operators.quality import ctfidf_scores
-
-        tc = (
-            docs.select(
-                "source",
-                F.explode(
-                    F.split(F.lower(F.col("text")), " ", -1)
-                ).alias("term"),
-            )
-            .filter(F.length("term") >= 3)
-            .groupBy("source", "term")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .persist()
-        )
-        # scorer shared with the streamed artifact
-        # (streaming.maintenance.topic_model_serving) — streamed ==
-        # batch is an identity of plans
-        scored = _artifact(ctfidf_scores(tc, "source"))
-        tc.unpersist()
-        _SERVING_INDEXES[key] = scored
-    scored = _SERVING_INDEXES[key]
+    scored = _cached_ctfidf_topic_model(spark, sf_dir)
     return grouped_topk(scored, "source", "ctfidf", "term", 5, shards=16).select(
         "source", "rank", "term", F.round("ctfidf", 6).alias("ctfidf")
     )
