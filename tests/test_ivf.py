@@ -155,23 +155,6 @@ def test_recall_on_clustered_data(spark, built):
     assert hits / total >= 0.6
 
 
-def test_blas_search_matches_exact_topk(spark, built):
-    """The serving-path BLAS scorer (compute="blas") must return the same
-    ids in the same order as the bit-exact HOF form, with scores equal to
-    ~1 ulp (pairwise vs sequential accumulation only)."""
-    df, vecs, index = built
-    for qi in (0, 33, 77):
-        q = vecs[qi]
-        exact = I.ivf_search(index, _query_df(spark, q), q, k=10).collect()
-        blas = I.ivf_search(
-            index, _query_df(spark, q), q, k=10, compute="blas"
-        ).collect()
-        assert [r["id"] for r in exact] == [r["id"] for r in blas], f"query {qi}"
-        for e, b in zip(exact, blas):
-            assert abs(e["similarity"] - b["similarity"]) < 1e-12
-            assert abs(e["distance"] - b["distance"]) < 1e-12
-
-
 def test_cluster_sizes(built):
     _, vecs, index = built
     sizes = I.cluster_sizes(index).toPandas()

@@ -503,7 +503,7 @@ def test_ivf_trained_p4_profile(engine):
     with open(os.path.join(ivf_dir, "_PROFILE.json")) as f:
         assert json.load(f) == {"nlist": 20, "nprobe": 4}
     # centroids honor the profile's nlist, not the config's (4)
-    cents = np.load(engine._centroids_path("libA"))
+    _, cents = engine._index_state(ivf_dir)
     assert cents.shape[0] == 20
     q = "python document number 0 about python"
     got = engine.search("libA", query_text=q, k=3).collect()

@@ -7,6 +7,8 @@ accumulated chunks table — same seeded planes, same hash rows.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -40,8 +42,9 @@ def test_incremental_equals_batch_rebuild(spark, planes, tmp_path):
 
     # batch 1 lands before the stream starts
     _chunk_batch(spark, range(0, 5)).write.mode("append").parquet(src)
+    encode = functools.partial(L.hash_table_df, planes=planes)
     q = M.incremental_index_maintenance(
-        M.read_chunk_stream(spark, src), planes, chunks_dir, index_dir, ckpt,
+        M.read_chunk_stream(spark, src), encode, chunks_dir, index_dir, ckpt,
         embedding_dim=DIM,
     )
     q.awaitTermination(120)
@@ -49,7 +52,7 @@ def test_incremental_equals_batch_rebuild(spark, planes, tmp_path):
     # batch 2 arrives later; resume from the checkpoint
     _chunk_batch(spark, range(5, 12)).write.mode("append").parquet(src)
     q2 = M.incremental_index_maintenance(
-        M.read_chunk_stream(spark, src), planes, chunks_dir, index_dir, ckpt,
+        M.read_chunk_stream(spark, src), encode, chunks_dir, index_dir, ckpt,
         embedding_dim=DIM,
     )
     q2.awaitTermination(120)
@@ -190,9 +193,9 @@ def test_incremental_pq_equals_batch_encode(spark, tmp_path):
     src = str(tmp_path / "src")
     base.repartition(1).write.mode("append").parquet(src)
     stream = M.read_chunk_stream(spark, src)
-    q = M.incremental_pq_maintenance(
+    q = M.incremental_index_maintenance(
         stream,
-        index.codebooks,
+        lambda batch: PQ.encode_codes(batch, index.codebooks),
         str(tmp_path / "chunks"),
         str(tmp_path / "codes"),
         str(tmp_path / "ckpt"),
@@ -519,9 +522,9 @@ def test_incremental_sq_equals_batch_encode(spark, tmp_path):
     src = str(tmp_path / "src")
     base.repartition(1).write.mode("append").parquet(src)
     stream = M.read_chunk_stream(spark, src)
-    q = M.incremental_sq_maintenance(
+    q = M.incremental_index_maintenance(
         stream,
-        index,
+        lambda batch: SQ.encode_with_bounds(batch, index.vmins, index.vmaxs),
         str(tmp_path / "chunks"),
         str(tmp_path / "codes"),
         str(tmp_path / "ckpt"),

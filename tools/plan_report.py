@@ -7,13 +7,23 @@ Plans are built (not executed) against $SPARK_GRAFT_SF_DIR, so the table
 reflects exactly what the driver's bench run executes.  Usage::
 
     python tools/plan_report.py [sf_dir]
+
+The report is written to PLANS_AUDIT.md in the current directory: run it
+from a scratch directory and diff the result against the committed file.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Python workers inherit the environment, so executor UDFs import
+# the package from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from bench import HEADLINE
 from vector_database_api_spark import queries as q

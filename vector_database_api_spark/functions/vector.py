@@ -21,8 +21,6 @@ Implementation notes (scale + oracle parity):
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -128,33 +126,3 @@ def normalize_with_staged_norm(vec: ColumnOrName, n2: ColumnOrName) -> Column:
     return F.when(
         n2 == F.lit(0.0), F.transform(vec, lambda x: x.cast("double"))
     ).otherwise(F.transform(vec, lambda x: x.cast("double") / F.sqrt(n2)))
-
-
-def blas_scorer_udf(query_vec):
-    """Arrow-batched cosine+euclidean scorer against a fixed query vector
-    (the reference's ``batch_cosine_similarity`` trick, embedding.py:115-140,
-    as a pandas UDF returning ``struct<similarity,distance>``).
-
-    The serving-path twin of the bit-exact HOF expressions above: one BLAS
-    matrix product per batch, last-ulp score differences only (pairwise vs
-    sequential accumulation), zero-norm similarity exactly 0.0.  Shared by
-    brute-force kNN and the LSH/IVF re-rank stages.
-    """
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    @F.pandas_udf("struct<similarity:double,distance:double>")
-    def score(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"similarity": [], "distance": []})
-        m = np.vstack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)))
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1)
-        denom = norms * qn
-        sims = np.where(
-            denom == 0.0, 0.0, dots / np.where(denom == 0.0, 1.0, denom)
-        )
-        dists = np.linalg.norm(m - q, axis=1)
-        return pd.DataFrame({"similarity": sims, "distance": dists})
-
-    return score

@@ -139,7 +139,6 @@ def ivf_search(
     id_col: str = "id",
     metadata_filters: dict[str, Any] | None = None,
     nprobe: int | None = None,
-    compute: str = "exact",
 ) -> DataFrame:
     """Probe search (reference indexes.py:340-379).
 
@@ -164,23 +163,11 @@ def ivf_search(
         )
         pool = pool.join(filtered_ids, "id", "left_semi")
 
-    if compute == "blas":
-        # serving path: one BLAS matmul per Arrow batch (last-ulp score
-        # differences vs the exact form; id-identical top-k in practice)
-        from vector_database_api_spark.functions.vector import blas_scorer_udf
-
-        scorer = blas_scorer_udf(query_vec)
-        scored = pool.select(F.col("id"), scorer(F.col("embedding")).alias("s")).select(
-            "id",
-            F.col("s.similarity").alias("similarity"),
-            F.col("s.distance").alias("distance"),
-        )
-    else:
-        scored = pool.crossJoin(F.broadcast(query.select(query_vec_col))).select(
-            F.col("id"),
-            cosine_similarity("embedding", query_vec_col).alias("similarity"),
-            euclidean_distance("embedding", query_vec_col).alias("distance"),
-        )
+    scored = pool.crossJoin(F.broadcast(query.select(query_vec_col))).select(
+        F.col("id"),
+        cosine_similarity("embedding", query_vec_col).alias("similarity"),
+        euclidean_distance("embedding", query_vec_col).alias("distance"),
+    )
     return scored.orderBy(F.desc("similarity"), F.col("id")).limit(k)
 
 

@@ -267,6 +267,15 @@ def _persisted_artifact(df: DataFrame) -> DataFrame:
     return df
 
 
+def _frozen_centroids(embs: DataFrame) -> DataFrame:
+    """(cluster_id, cvec): the frozen IVF centroid set of the registry
+    queries — the first 20 vectors, the same rule as the oracle SQL's
+    ``WHERE vec_id < 20``."""
+    return embs.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("cvec")
+    )
+
+
 _SQL_TABLE_VIEWS: dict[tuple, str] = {}
 _VIEW_TAGS: dict[str, int] = {}
 _NEXT_VIEW_TAG = itertools.count()
@@ -453,10 +462,7 @@ def _cached_semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Without the cache the self-join's two branches re-evaluate the whole
     assignment subtree (crossJoin + min-struct + join) twice each."""
     embs = load_table(spark, sf_dir, "embeddings")
-    cents = embs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("cluster_id"),
-        F.col("embedding").alias("cvec"),
-    )
+    cents = _frozen_centroids(embs)
     assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
     return _persisted_artifact(
         embs.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
@@ -749,9 +755,7 @@ def ivf_probe_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMeans *training* stays pytest-verified; every other IVF stage is
     oracle-checked here."""
     embs = load_table(spark, sf_dir, "embeddings")
-    cents = embs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("cvec")
-    )
+    cents = _frozen_centroids(embs)
     query = embs.filter(F.col("vec_id") == 11).select(
         F.col("embedding").alias("query_embedding")
     )
@@ -5377,9 +5381,7 @@ def ivfpq_fixed_probe_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", normalize_with_staged_norm("embedding", "n2").alias("nv")
     )
 
-    cents = embs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("cvec")
-    )
+    cents = _frozen_centroids(embs)
     qraw = embs.filter(F.col("vec_id") == 7).select(
         F.col("embedding").alias("query_embedding")
     )
@@ -6723,10 +6725,7 @@ def _cached_multiprobe_assignment(spark: SparkSession, sf_dir: str) -> DataFrame
     assignment (`_cached_semdedup_assignment`), and this join family's
     build side, hence `_persisted_artifact`."""
     embs = load_table(spark, sf_dir, "embeddings")
-    cents = embs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("cluster_id"),
-        F.col("embedding").alias("cvec"),
-    )
+    cents = _frozen_centroids(embs)
     return _persisted_artifact(
         dedup_mod.assign_clusters_topp(embs, cents, p=2, id_col="vec_id")
     )
@@ -8526,9 +8525,7 @@ def ivfpq_residual_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC); the residual subtraction and centroid re-add are narrow
     zip_with projections with zero extra shuffles."""
     embs = load_table(spark, sf_dir, "embeddings")
-    cents = embs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("cvec")
-    )
+    cents = _frozen_centroids(embs)
     qraw = embs.filter(F.col("vec_id") == 7).select(
         F.col("embedding").alias("query_embedding")
     )

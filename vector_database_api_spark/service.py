@@ -16,14 +16,19 @@ HTTP shell (the REST surface is a thin façade, SURVEY §2.1 S12):
 
 Storage: a warehouse directory of parquet tables —
 
-    {warehouse}/chunks/                 partitioned by library_id
-    {warehouse}/lsh_index/{library_id}/ (id, table_idx, hash)
-    {warehouse}/ivf_index/{library_id}/ (id, cluster_id, embedding)
-    {warehouse}/ivf_centroids/{library_id}.npy
-    {warehouse}/pq_index/{library_id}/  (id, codes)           [extension]
-    {warehouse}/pq_codebooks/{library_id}.npy                 [extension]
-    {warehouse}/bm25_index/{library_id}/{postings,doclens,stats}  [extension]
-    {warehouse}/hybrid_index/{library_id}/  (same three tables)   [extension]
+    {warehouse}/chunks/                     partitioned by library_id
+    {warehouse}/{kind}_index/{library_id}/  one directory per built index:
+        lsh     (id, table_idx, hash)       _PROFILE.json (plane shape)
+        ivf     (id, cluster_id, embedding) _PROFILE.json (nlist/nprobe),
+                partitioned by cluster_id   _STATE.npy (centroids; absent
+                                            while untrained)
+        pq      (id, codes)                 _STATE.npy (codebooks)  [extension]
+        sq8     (id, codes)                 _STATE.npy (bounds)     [extension]
+        bm25    postings/ doclens/ stats/                           [extension]
+        hybrid  the same three tables                               [extension]
+
+The ``_`` files are the index's frozen state (Spark's parquet listing
+skips them); rebuilding or switching kinds drops them with the directory.
 
 Mutations are atomic directory overwrites (snapshot isolation — the
 capability the reference gets from ReadWriteLock).  On a production
@@ -33,7 +38,9 @@ deployment these become Delta tables with MERGE; the operator layer
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from typing import Any
 
 import numpy as np
@@ -55,6 +62,7 @@ from vector_database_api_spark.operators import pq as pq_mod
 from vector_database_api_spark.operators import presentation as pres_mod
 from vector_database_api_spark.operators import rerank as rerank_mod
 from vector_database_api_spark.operators import sq as sq_mod
+from vector_database_api_spark.operators.filters import apply_metadata_filters
 from vector_database_api_spark.operators.knn import knn_brute_force
 
 # reference parity: IndexManager accepts exactly lsh|ivf (indexes.py:408-422)
@@ -64,6 +72,8 @@ VALID_INDEX_TYPES = ("lsh", "ivf")
 # and the two-leg hybrid built on it — not in the reference; kept out of
 # VALID_INDEX_TYPES so parity docs stay honest
 ALL_INDEX_TYPES = VALID_INDEX_TYPES + ("pq", "sq8", "bm25", "hybrid")
+# the kinds whose index is the keyword artifact (postings, doclens, stats)
+TEXT_KINDS = ("bm25", "hybrid")
 
 
 class VectorEngine:
@@ -83,28 +93,13 @@ class VectorEngine:
         self._search_metrics: list[dict[str, Any]] = []
         os.makedirs(warehouse, exist_ok=True)
 
-    # -- paths ---------------------------------------------------------
+    # -- paths and frozen state ----------------------------------------
 
     def _chunks_dir(self) -> str:
         return os.path.join(self.warehouse, "chunks")
 
     def _index_dir(self, kind: str, library_id: str) -> str:
         return os.path.join(self.warehouse, f"{kind}_index", library_id)
-
-    def _centroids_path(self, library_id: str) -> str:
-        d = os.path.join(self.warehouse, "ivf_centroids")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{library_id}.npy")
-
-    def _pq_codebooks_path(self, library_id: str) -> str:
-        d = os.path.join(self.warehouse, "pq_codebooks")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{library_id}.npy")
-
-    def _sq_bounds_path(self, library_id: str) -> str:
-        d = os.path.join(self.warehouse, "sq_bounds")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{library_id}.npy")
 
     def _index_meta(self, library_id: str) -> tuple[str, str] | None:
         """(index_type, path) of the library's built index, if any."""
@@ -113,6 +108,19 @@ class VectorEngine:
             if os.path.isdir(path):
                 return kind, path
         return None
+
+    def _text_index(
+        self, library_id: str, caller: str, kinds: tuple[str, ...] = TEXT_KINDS
+    ) -> str:
+        """Path of the library's keyword index; ``caller`` raises unless
+        the built index is one of ``kinds``."""
+        meta = self._index_meta(library_id)
+        kind = meta[0] if meta is not None else None
+        if kind not in kinds:
+            raise ValueError(
+                f"{caller} needs a {' or '.join(kinds)} index, not '{kind}'"
+            )
+        return meta[1]
 
     def _lsh_planes(self, profile: dict[str, int] | None = None):
         """Hyperplanes for the given profile dict (num_tables/hash_length),
@@ -126,48 +134,78 @@ class VectorEngine:
         )
 
     @staticmethod
-    def _index_profile_at(path: str) -> dict[str, int] | None:
-        """Geometry profile persisted with an index build — LSH plane
-        shape or IVF nlist/nprobe (None for indexes written before
-        profiles existed, or built from config defaults)."""
-        import json
-
-        meta = os.path.join(path, "_PROFILE.json")
+    def _index_state(path: str) -> tuple[dict[str, int] | None, Any]:
+        """The frozen state an index was built with, as (profile, array):
+        the geometry profile (LSH plane shape or IVF nlist/nprobe; None
+        when built from config defaults) and the trained array (IVF
+        centroids, PQ codebooks, the SQ8 (vmins, vmaxs) stack; None for
+        LSH, the text kinds and an untrained IVF index)."""
+        profile = array = None
+        meta, npy = (os.path.join(path, f) for f in ("_PROFILE.json", "_STATE.npy"))
         if os.path.exists(meta):
             with open(meta) as f:
-                return json.load(f)
-        return None
+                profile = json.load(f)
+        if os.path.exists(npy):
+            array = np.load(npy)
+        return profile, array
 
-    # -- BM25 text-index storage (engine extension; operators/bm25.py) --
+    def _encode(
+        self, kind: str, chunks: DataFrame, state: tuple
+    ) -> dict[str, DataFrame]:
+        """The kind's index rows for ``chunks`` under the frozen ``state``
+        — never retrained (the reference assigns new vectors to stale
+        centroids, SURVEY §7 risk 5; codebooks and bounds follow suit).
+        Keyed by table directory under the index ("" = the directory)."""
+        profile, array = state
+        if kind in TEXT_KINDS:
+            postings, doclens, _ = bm25_mod.build_bm25_index(chunks)
+            return {"postings": postings, "doclens": doclens}
+        if kind == "lsh":
+            rows = lsh_mod.hash_table_df(chunks, self._lsh_planes(profile))
+        elif kind == "ivf":
+            rows = ivf_mod.assign_to_centroids(chunks, array)
+        elif kind == "pq":
+            rows = pq_mod.encode_codes(chunks, array)
+        else:
+            rows = sq_mod.encode_with_bounds(chunks, array[0], array[1])
+        return {"": rows}
 
-    @staticmethod
-    def _write_text_index(
-        base: str, postings: DataFrame, doclens: DataFrame, stats: DataFrame
+    def _write_index(
+        self,
+        kind: str,
+        path: str,
+        tables: dict[str, DataFrame],
+        state: tuple,
+        snapshot: bool = False,
     ) -> None:
-        """Persist the three BM25 artifact tables.  Inputs may read from
-        the directories being overwritten (mutation paths — and stats
-        reads the doclens lineage), so ALL THREE are localCheckpoint-
-        materialized BEFORE the first overwrite — the snapshot-isolation
-        rule every other index mutation here follows."""
-        snaps = [
-            (df.localCheckpoint(), sub)
-            for df, sub in (
-                (postings, "postings"),
-                (doclens, "doclens"),
-                (stats, "stats"),
+        """Overwrite the index tables, then put the frozen state back
+        beside them (the overwrite wipes the directory).  The text kinds
+        add their 1-row corpus stats (n_docs, avgdl), re-aggregated from
+        doclens — artifact-sized work, never a corpus rescan — and, as
+        stats shares the doclens lineage, are always snapshotted.
+        ``snapshot`` localCheckpoints every table BEFORE the first
+        overwrite: mutation inputs read the directory being overwritten
+        (the snapshot-isolation rule)."""
+        if kind in TEXT_KINDS:
+            stats = tables["doclens"].agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.avg("dl").alias("avgdl"),
             )
-        ]
-        for snap, sub in snaps:
-            snap.write.mode("overwrite").parquet(os.path.join(base, sub))
-
-    @staticmethod
-    def _bm25_stats_of(doclens: DataFrame) -> DataFrame:
-        """The 1-row (n_docs, avgdl) corpus scalars from a doc-length
-        table — the re-aggregation mutation paths run over the artifact."""
-        return doclens.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
+            tables, snapshot = {**tables, "stats": stats}, True
+        if snapshot:
+            tables = {sub: df.localCheckpoint() for sub, df in tables.items()}
+        for sub, df in tables.items():
+            writer = df.write.mode("overwrite")
+            if kind == "ivf":
+                # partitioned by cluster_id: probe search = partition pruning
+                writer = writer.partitionBy("cluster_id")
+            writer.parquet(os.path.join(path, sub))
+        profile, array = state
+        if profile is not None:
+            with open(os.path.join(path, "_PROFILE.json"), "w") as f:
+                json.dump(profile, f)
+        if array is not None:
+            np.save(os.path.join(path, "_STATE.npy"), array)
 
     def _read_text_index(
         self, base: str
@@ -184,17 +222,6 @@ class VectorEngine:
             else 1.0
         )
         return postings, doclens, n_docs, avgdl
-
-    @staticmethod
-    def _write_index_profile(path: str, profile: dict[str, int] | None) -> None:
-        """(Re)persist the geometry next to the index — Spark's overwrite
-        wipes the directory, so mutation paths must put the marker back or
-        search would hash/probe with the wrong layout."""
-        import json
-
-        if profile is not None:
-            with open(os.path.join(path, "_PROFILE.json"), "w") as f:
-                json.dump(profile, f)
 
     # -- ingestion (M1; chunk_service.py:22-54) ------------------------
 
@@ -255,81 +282,56 @@ class VectorEngine:
             # (indexes.py:408-422; 'flat' in the README is invalid there too);
             # 'pq' is this engine's documented extension
             raise ValueError(f"Unknown index type: {index_type}")
+        path = self._index_dir(index_type, library_id)
         chunks = self.chunks(library_id).filter(F.col("embedding").isNotNull())
-        if index_type in ("bm25", "hybrid"):
+        state: tuple = (None, None)
+        if index_type in TEXT_KINDS:
             # keyword inverted index (operators/bm25.py): postings +
-            # doc lengths + 1-row corpus stats, each a parquet table
-            # under the index dir.  'hybrid' stores the SAME artifact —
-            # its vector leg scores chunks directly (exact top-k; an ANN
-            # index would slot in as the leg at larger corpora).  NULL
-            # text is excluded inside build_bm25_index, so build from
-            # the unfiltered chunk set (text-bearing, not
-            # embedding-bearing, rows feed the keyword leg).
-            postings, doclens, stats = bm25_mod.build_bm25_index(
-                self.chunks(library_id)
-            )
-            self._write_text_index(
-                self._index_dir(index_type, library_id), postings, doclens, stats
-            )
+            # doc lengths + 1-row corpus stats.  'hybrid' stores the SAME
+            # artifact — its vector leg scores chunks directly (exact
+            # top-k; an ANN index would slot in as the leg at larger
+            # corpora).  Text-bearing, not embedding-bearing, rows feed
+            # the keyword leg, so encode the unfiltered chunk set.
+            tables = self._encode(index_type, self.chunks(library_id), state)
+        elif index_type == "lsh":
+            state = (LSH_PROFILES[lsh_profile], None)
+            tables = self._encode("lsh", chunks, state)
         elif index_type == "pq":
-            index = pq_mod.build_pq(
+            pq_index = pq_mod.build_pq(
                 chunks, m=self.config.pq_m, k=self.config.pq_k, seed=self.config.seed
             )
-            index.codes_df.write.mode("overwrite").parquet(
-                self._index_dir("pq", library_id)
-            )
-            np.save(self._pq_codebooks_path(library_id), index.codebooks)
+            state = (None, pq_index.codebooks)
+            tables = {"": pq_index.codes_df}
         elif index_type == "sq8":
             sq_index = sq_mod.build_sq(chunks)
-            sq_index.codes_df.write.mode("overwrite").parquet(
-                self._index_dir("sq8", library_id)
-            )
-            np.save(
-                self._sq_bounds_path(library_id),
-                np.stack([sq_index.vmins, sq_index.vmaxs]),
-            )
-        elif index_type == "lsh":
-            planes = self._lsh_planes(LSH_PROFILES[lsh_profile])
-            lsh_dir = self._index_dir("lsh", library_id)
-            lsh_mod.hash_table_df(chunks, planes).write.mode("overwrite").parquet(
-                lsh_dir
-            )
-            self._write_index_profile(lsh_dir, LSH_PROFILES[lsh_profile])
+            state = (None, np.stack([sq_index.vmins, sq_index.vmaxs]))
+            tables = {"": sq_index.codes_df}
         else:
             params = IVF_PROFILES.get(ivf_profile) if ivf_profile else None
-            index = ivf_mod.build_ivf(
+            ivf_index = ivf_mod.build_ivf(
                 chunks,
                 config=self.config,
                 nlist=params["nlist"] if params else None,
                 nprobe=params["nprobe"] if params else None,
             )
-            ivf_dir = self._index_dir("ivf", library_id)
-            if index.trained:
-                # partitioned by cluster_id: probe search = partition pruning
-                index.index_df.write.mode("overwrite").partitionBy(
-                    "cluster_id"
-                ).parquet(ivf_dir)
-                np.save(self._centroids_path(library_id), index.centroids)
-                self._write_index_profile(ivf_dir, params)
-                marker = os.path.join(ivf_dir, "_UNTRAINED")
-                if os.path.exists(marker):
-                    os.remove(marker)
+            if ivf_index.trained:
+                state = (params, ivf_index.centroids)
+                tables = {"": ivf_index.index_df}
             else:
-                # untrained (n < nlist): the library IS indexed but the index
-                # is untrained — searches must return empty (reference lazy-
-                # train gate, indexes.py:343-344), NOT fall back to brute force
-                os.makedirs(ivf_dir, exist_ok=True)
-                with open(os.path.join(ivf_dir, "_UNTRAINED"), "w") as f:
-                    f.write("")
-        # dropping the other index types mirrors index switching in the
-        # reference tests (test_basic.py:244-268: lsh -> ivf -> lsh)
+                # untrained (n < nlist): the library IS indexed but holds
+                # no centroids — searches must return empty (reference
+                # lazy-train gate, indexes.py:343-344), NOT fall back to
+                # brute force
+                shutil.rmtree(path, ignore_errors=True)
+                os.makedirs(path)
+                tables = {}
+        self._write_index(index_type, path, tables, state)
+        # dropping the other index types (and their frozen state) mirrors
+        # index switching in the reference tests (test_basic.py:244-268:
+        # lsh -> ivf -> lsh)
         for other in ALL_INDEX_TYPES:
-            if other == index_type:
-                continue
             other_dir = self._index_dir(other, library_id)
-            if os.path.isdir(other_dir):
-                import shutil
-
+            if other != index_type and os.path.isdir(other_dir):
                 shutil.rmtree(other_dir)
 
     # -- mutation maintenance (M2/M3; chunk_service.py:81-134) ---------
@@ -340,37 +342,13 @@ class VectorEngine:
         the library partition + anti-join on the index table."""
         remaining = self.chunks(library_id).filter(~F.col("id").isin(chunk_ids))
         self._overwrite_library_chunks(library_id, remaining)
-        meta = self._index_meta(library_id)
-        if meta is not None:
-            kind, path = meta
-            if kind in ("bm25", "hybrid"):
-                # drop the deleted ids from postings + doclens; corpus
-                # stats (n_docs, avgdl) re-aggregate from the KEPT
-                # doclens — artifact-sized work, never a corpus rescan
-                postings, doclens, _, _ = self._read_text_index(path)
-                kept_p = postings.filter(~F.col("id").isin(chunk_ids))
-                kept_d = doclens.filter(~F.col("id").isin(chunk_ids))
-                self._write_text_index(
-                    path, kept_p, kept_d, self._bm25_stats_of(kept_d)
-                )
-            elif kind in ("lsh", "pq", "sq8"):
-                profile = self._index_profile_at(path) if kind == "lsh" else None
-                idx = self.spark.read.parquet(path)
-                kept = idx.filter(~F.col("id").isin(chunk_ids)).localCheckpoint()
-                kept.write.mode("overwrite").parquet(path)
-                if kind == "lsh":
-                    self._write_index_profile(path, profile)
-            elif not os.path.exists(os.path.join(path, "_UNTRAINED")):
-                profile = self._index_profile_at(path)
-                idx = self.spark.read.parquet(path)
-                kept = idx.filter(~F.col("id").isin(chunk_ids)).localCheckpoint()
-                kept.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-                self._write_index_profile(path, profile)
+        self._replace_index_rows(library_id, chunk_ids, None)
 
     def update_chunk_texts(self, library_id: str, patches: dict[str, str]) -> None:
         """M2: text update => re-embed + remove-then-add in the index
         (chunk_service.py:81-98).  The updated rows get fresh deterministic
-        embeddings; index rows for those ids are recomputed."""
+        embeddings; index rows for those ids are re-encoded with the
+        index's frozen state."""
         ids = list(patches)
         mapping = F.create_map(
             *[F.lit(x) for kv in patches.items() for x in kv]
@@ -391,74 +369,36 @@ class VectorEngine:
             )
         )
         self._overwrite_library_chunks(library_id, updated)
+        self._replace_index_rows(
+            library_id, ids, self.chunks(library_id).filter(F.col("id").isin(ids))
+        )
+
+    def _replace_index_rows(
+        self, library_id: str, ids: list[str], changed: DataFrame | None
+    ) -> None:
+        """The one index-row rewrite behind delete and update
+        (IndexManager.remove/add, indexes.py:396-452): drop ``ids`` from
+        every index table, union the kind's frozen-state encoding of
+        ``changed`` (None for a delete), snapshot, overwrite, put the
+        state back.  An untrained IVF index holds no rows: a no-op."""
         meta = self._index_meta(library_id)
-        if meta is not None:
-            kind, path = meta
-            if kind in ("bm25", "hybrid"):
-                # remove-then-add on the keyword artifact: fresh postings/
-                # doclens for just the patched rows, stats re-aggregated
-                # from the merged doclens (artifact-sized, no corpus scan)
-                changed = self.chunks(library_id).filter(F.col("id").isin(ids))
-                new_p, new_d, _ = bm25_mod.build_bm25_index(changed)
-                postings, doclens, _, _ = self._read_text_index(path)
-                merged_p = postings.filter(~F.col("id").isin(ids)).unionByName(
-                    new_p
-                )
-                merged_d = doclens.filter(~F.col("id").isin(ids)).unionByName(
-                    new_d
-                )
-                self._write_text_index(
-                    path, merged_p, merged_d, self._bm25_stats_of(merged_d)
-                )
-            elif kind == "pq":
-                # re-encode with FROZEN codebooks (like IVF's frozen
-                # centroids: incremental adds never retrain)
-                codebooks = np.load(self._pq_codebooks_path(library_id))
-                changed = self.chunks(library_id).filter(F.col("id").isin(ids))
-                fresh = pq_mod.encode_codes(changed, codebooks)
-                idx = self.spark.read.parquet(path)
-                merged = (
-                    idx.filter(~F.col("id").isin(ids)).unionByName(fresh)
-                ).localCheckpoint()
-                merged.write.mode("overwrite").parquet(path)
-            elif kind == "sq8":
-                # re-encode with FROZEN per-dim bounds (out-of-range
-                # coordinates clamp into the trained range)
-                vmins, vmaxs = np.load(self._sq_bounds_path(library_id))
-                changed = self.chunks(library_id).filter(F.col("id").isin(ids))
-                fresh = sq_mod.encode_with_bounds(changed, vmins, vmaxs)
-                idx = self.spark.read.parquet(path)
-                merged = (
-                    idx.filter(~F.col("id").isin(ids)).unionByName(fresh)
-                ).localCheckpoint()
-                merged.write.mode("overwrite").parquet(path)
-            elif kind == "lsh":
-                profile = self._index_profile_at(path)
-                planes = self._lsh_planes(profile)
-                idx = self.spark.read.parquet(path)
-                fresh = lsh_mod.hash_table_df(
-                    self.chunks(library_id).filter(F.col("id").isin(ids)), planes
-                )
-                merged = (
-                    idx.filter(~F.col("id").isin(ids)).unionByName(fresh)
-                ).localCheckpoint()
-                merged.write.mode("overwrite").parquet(path)
-                self._write_index_profile(path, profile)
-            else:
-                # IVF: assignment with the frozen centroids (the reference
-                # never retrains once trained — SURVEY §7 risk 5)
-                if os.path.exists(os.path.join(path, "_UNTRAINED")):
-                    return
-                profile = self._index_profile_at(path)
-                centroids = np.load(self._centroids_path(library_id))
-                changed = self.chunks(library_id).filter(F.col("id").isin(ids))
-                fresh = ivf_mod.assign_to_centroids(changed, centroids)
-                idx = self.spark.read.parquet(path)
-                merged = (
-                    idx.filter(~F.col("id").isin(ids)).unionByName(fresh)
-                ).localCheckpoint()
-                merged.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-                self._write_index_profile(path, profile)
+        if meta is None:
+            return
+        kind, path = meta
+        state = self._index_state(path)
+        if kind == "ivf" and state[1] is None:
+            return
+        subs = ("postings", "doclens") if kind in TEXT_KINDS else ("",)
+        tables = {
+            sub: self.spark.read.parquet(os.path.join(path, sub)).filter(
+                ~F.col("id").isin(ids)
+            )
+            for sub in subs
+        }
+        if changed is not None:
+            fresh = self._encode(kind, changed, state)
+            tables = {sub: df.unionByName(fresh[sub]) for sub, df in tables.items()}
+        self._write_index(kind, path, tables, state, snapshot=True)
 
     def _overwrite_library_chunks(self, library_id: str, new_rows: DataFrame) -> None:
         """Atomic snapshot replace of ONE library partition.  Dynamic
@@ -470,8 +410,6 @@ class VectorEngine:
         if snap.rdd.isEmpty():
             # dynamic overwrite writes no partitions for an empty frame;
             # an emptied library must still lose its directory
-            import shutil
-
             part_dir = os.path.join(
                 self._chunks_dir(), f"library_id={library_id}"
             )
@@ -537,16 +475,8 @@ class VectorEngine:
         sum x legs-retrieving count, twin ``hybrid_combmnz_fusion``).
         The result schema follows the fusion's native columns."""
         meta = self._index_meta(library_id)
-        kind = meta[0] if meta is not None else None
-        if mode not in ("or", "and", "maxscore", "blockmax"):
-            raise ValueError(
-                "mode must be 'or', 'and', 'maxscore' or 'blockmax', "
-                f"got '{mode}'"
-            )
-        if mode != "or" and kind != "bm25":
-            raise ValueError(
-                f"mode='{mode}' needs a built bm25 index, not '{kind}'"
-            )
+        kind, path = meta if meta is not None else (None, None)
+        self._check_modes(kind, mode, ranking)
         if fusion not in ("rrf", "linear", "combmnz"):
             raise ValueError(
                 f"fusion must be 'rrf', 'linear' or 'combmnz', got '{fusion}'"
@@ -555,16 +485,9 @@ class VectorEngine:
             raise ValueError(
                 f"fusion='{fusion}' needs a built hybrid index, not '{kind}'"
             )
-        self._check_ranking(ranking, mode, kind)
-        if query_embedding is None and kind != "bm25":
-            # bm25 is the one path that never needs a vector; everything
-            # else resolves text -> deterministic embedding up front
-            if query_text is None:
-                raise ValueError("query must have text or embedding")
-            query_embedding = [
-                float(x)
-                for x in text_to_vector(query_text, self.config.embedding_dim)
-            ]
+        if kind != "bm25":
+            # bm25 is the one path that never needs a vector
+            query_embedding = self._query_vector(query_text, query_embedding)
         k = self.config.clamp_k(k)
         if similarity_threshold is None:
             similarity_threshold = self.config.similarity_threshold
@@ -574,7 +497,7 @@ class VectorEngine:
             if query_text is None:
                 raise ValueError("a bm25 index searches by query_text")
             result = self._bm25_topk(
-                meta[1], chunks, query_text, k, metadata_filters, mode=mode,
+                path, chunks, query_text, k, metadata_filters, mode=mode,
                 ranking=ranking,
             )
             return self._apply_threshold(
@@ -587,7 +510,7 @@ class VectorEngine:
 
         if kind == "hybrid":
             return self._hybrid_topk(
-                meta[1],
+                path,
                 chunks,
                 query,
                 query_text,
@@ -597,34 +520,45 @@ class VectorEngine:
                 fusion=fusion,
             )
 
-        if meta is None:
+        if kind is None:
             return self._apply_threshold(
                 knn_brute_force(
                     chunks, query, k=k, metadata_filters=metadata_filters
                 ),
                 similarity_threshold,
             )
-        kind, path = meta
-        if kind == "pq":
-            from vector_database_api_spark.operators.filters import (
-                apply_metadata_filters,
-            )
-
-            codebooks = np.load(self._pq_codebooks_path(library_id))
+        profile, array = self._index_state(path)
+        query_vec = np.asarray(query_embedding, dtype=np.float64)
+        if kind in ("pq", "sq8"):
             codes_df = self.spark.read.parquet(path)
             if metadata_filters:
                 filtered_ids = apply_metadata_filters(
                     chunks, metadata_filters
                 ).select("id")
                 codes_df = codes_df.join(filtered_ids, "id", "left_semi")
-            index = pq_mod.PQIndex(
-                codebooks=codebooks,
-                codes_df=codes_df,
-                m=codebooks.shape[0],
-                k=codebooks.shape[1],
-                dim=codebooks.shape[0] * codebooks.shape[2],
-            )
-            scored = pq_mod.pq_search(index, np.asarray(query_embedding, dtype=np.float64), k=k)
+            if kind == "pq":
+                scored = pq_mod.pq_search(
+                    pq_mod.PQIndex(
+                        codebooks=array,
+                        codes_df=codes_df,
+                        m=array.shape[0],
+                        k=array.shape[1],
+                        dim=array.shape[0] * array.shape[2],
+                    ),
+                    query_vec,
+                    k=k,
+                )
+            else:
+                scored = sq_mod.sq_search(
+                    sq_mod.SQIndex(
+                        vmins=array[0],
+                        vmaxs=array[1],
+                        codes_df=codes_df,
+                        dim=array.shape[1],
+                    ),
+                    query_vec,
+                    k=k,
+                )
             # cosine -> euclidean on unit vectors: d = sqrt(2 - 2cos),
             # keeping the service result schema (id, similarity, distance)
             return self._apply_threshold(
@@ -636,56 +570,27 @@ class VectorEngine:
                 ),
                 similarity_threshold,
             )
-        if kind == "sq8":
-            from vector_database_api_spark.operators.filters import (
-                apply_metadata_filters,
-            )
-
-            vmins, vmaxs = np.load(self._sq_bounds_path(library_id))
-            codes_df = self.spark.read.parquet(path)
-            if metadata_filters:
-                filtered_ids = apply_metadata_filters(
-                    chunks, metadata_filters
-                ).select("id")
-                codes_df = codes_df.join(filtered_ids, "id", "left_semi")
-            sq_index = sq_mod.SQIndex(
-                vmins=vmins, vmaxs=vmaxs, codes_df=codes_df, dim=len(vmins)
-            )
-            scored = sq_mod.sq_search(
-                sq_index, np.asarray(query_embedding, dtype=np.float64), k=k
-            )
-            return self._apply_threshold(
-                scored.withColumn(
-                    "distance",
-                    F.sqrt(
-                        F.greatest(F.lit(2.0) - 2.0 * F.col("similarity"), F.lit(0.0))
-                    ),
-                ),
-                similarity_threshold,
-            )
         if kind == "lsh":
-            planes = self._lsh_planes(self._index_profile_at(path))
-            index_df = self.spark.read.parquet(path)
             return self._apply_threshold(
                 lsh_mod.lsh_search(
                     chunks,
                     query,
-                    planes,
+                    self._lsh_planes(profile),
                     k=k,
                     metadata_filters=metadata_filters,
-                    index_df=index_df,
+                    index_df=self.spark.read.parquet(path),
                 ),
                 similarity_threshold,
             )
-        if os.path.exists(os.path.join(path, "_UNTRAINED")):
+        if array is None:
+            # untrained IVF index
             return self.spark.createDataFrame([], ivf_mod.RESULT_SCHEMA)
-        centroids = np.load(self._centroids_path(library_id))
         # probe with the layout the index was BUILT with (the persisted
         # profile — e.g. the measured 'trained-p4' serving layout);
         # config values remain the reference-parity fallback
-        ivf_params = self._index_profile_at(path) or {}
+        ivf_params = profile or {}
         index = ivf_mod.IVFIndex(
-            centroids=centroids,
+            centroids=array,
             index_df=self.spark.read.parquet(path),
             trained=True,
             nlist=ivf_params.get("nlist", self.config.ivf_nlist),
@@ -695,7 +600,7 @@ class VectorEngine:
             ivf_mod.ivf_search(
                 index,
                 query,
-                np.asarray(query_embedding, dtype=np.float64),
+                query_vec,
                 k=k,
                 chunks=chunks,
                 metadata_filters=metadata_filters,
@@ -817,10 +722,20 @@ class VectorEngine:
     # -- keyword + hybrid serving (engine extension; operators/bm25.py) -
 
     @staticmethod
-    def _check_ranking(ranking: str, mode: str, kind: str | None) -> None:
-        """Shared ranking-model validation for search()/search_after():
-        "ql" needs a bm25 index and composes only with "or"/"and" (the
-        pruning modes are BM25-bound-specific)."""
+    def _check_modes(kind: str | None, mode: str, ranking: str) -> None:
+        """Keyword evaluation validation shared by search()/search_after():
+        a non-"or" mode and "ql" ranking need a bm25 index, and "ql"
+        composes only with "or"/"and" (the pruning modes are
+        BM25-bound-specific)."""
+        if mode not in ("or", "and", "maxscore", "blockmax"):
+            raise ValueError(
+                "mode must be 'or', 'and', 'maxscore' or 'blockmax', "
+                f"got '{mode}'"
+            )
+        if mode != "or" and kind != "bm25":
+            raise ValueError(
+                f"mode='{mode}' needs a built bm25 index, not '{kind}'"
+            )
         if ranking not in ("bm25", "ql"):
             raise ValueError(f"ranking must be 'bm25' or 'ql', got '{ranking}'")
         if ranking == "ql":
@@ -834,6 +749,19 @@ class VectorEngine:
                     "use mode='or'/'and' with ranking='ql'"
                 )
 
+    def _query_vector(
+        self, query_text: str | None, query_embedding: list[float] | None
+    ) -> list[float]:
+        """The request's query vector: the given embedding, else the
+        deterministic embedding of its text."""
+        if query_embedding is not None:
+            return query_embedding
+        if query_text is None:
+            raise ValueError("query must have text or embedding")
+        return [
+            float(x) for x in text_to_vector(query_text, self.config.embedding_dim)
+        ]
+
     def _bm25_topk(
         self,
         path: str,
@@ -843,6 +771,7 @@ class VectorEngine:
         metadata_filters: dict[str, Any] | None,
         mode: str = "or",
         ranking: str = "bm25",
+        after: tuple[float, str] | None = None,
     ) -> DataFrame:
         """Filter-then-search BM25 top-k: metadata predicates restrict the
         CANDIDATES (semi-join of the filtered chunk ids into the postings)
@@ -852,11 +781,8 @@ class VectorEngine:
         leg).  ``mode``: "or" full scoring, "and" conjunctive, "maxscore"
         dynamic pruning, "blockmax" block-max pruning (both pruning
         modes return results identical to "or"; see
-        operators/bm25.py::bm25_maxscore_search)."""
-        from vector_database_api_spark.operators.filters import (
-            apply_metadata_filters,
-        )
-
+        operators/bm25.py::bm25_maxscore_search).  ``after``: the
+        (score, id) keyset cursor of :meth:`search_after`."""
         postings, doclens, n_docs, avgdl = self._read_text_index(path)
         cand = None
         if metadata_filters:
@@ -865,12 +791,12 @@ class VectorEngine:
         if ranking == "ql":
             return bm25_mod.ql_dirichlet_search(
                 postings, doclens, float(n_docs) * float(avgdl), terms,
-                k=k, candidate_ids=cand, operator=mode,
+                k=k, candidate_ids=cand, after=after, operator=mode,
             )
         if mode in ("maxscore", "blockmax"):
             return bm25_mod.bm25_maxscore_search(
                 postings, doclens, n_docs, avgdl, terms, k=k,
-                candidate_ids=cand,
+                candidate_ids=cand, after=after,
                 n_blocks=bm25_mod.BLOCKMAX_BLOCKS if mode == "blockmax" else None,
             )
         return bm25_mod.bm25_search(
@@ -881,6 +807,7 @@ class VectorEngine:
             terms,
             k=k,
             candidate_ids=cand,
+            after=after,
             operator=mode,
         )
 
@@ -985,15 +912,7 @@ class VectorEngine:
             bm25_mod.tokenize_query(t) if t is not None else []
             for t, _ in requests
         ]
-        vecs = [
-            e
-            if e is not None
-            else [
-                float(x)
-                for x in text_to_vector(t, self.config.embedding_dim)
-            ]
-            for t, e in requests
-        ]
+        vecs = [self._query_vector(t, e) for t, e in requests]
         # reject non-finite embedding values AT INTAKE, per request:
         # since the dense legs batch through grouped_topk (r9), a NaN
         # similarity would fail the whole batch job mid-flight with an
@@ -1121,16 +1040,7 @@ class VectorEngine:
         rank <= k per qid."""
         from pyspark.sql.window import Window
 
-        from vector_database_api_spark.operators.filters import (
-            apply_metadata_filters,
-        )
-
-        meta = self._index_meta(library_id)
-        if meta is None or meta[0] != "hybrid":
-            kind = meta[0] if meta is not None else None
-            raise ValueError(
-                f"search_hybrid_batch needs a built hybrid index, not '{kind}'"
-            )
+        path = self._text_index(library_id, "search_hybrid_batch", ("hybrid",))
         term_lists, qdf = self._batch_request_inputs(requests)
         k = self.config.clamp_k(k)
         if similarity_threshold is None:
@@ -1141,7 +1051,7 @@ class VectorEngine:
         # keyword legs: one plan over the stored postings; per-term df
         # stays corpus-level, candidates restrict scoring (the same
         # filter-then-search split as _bm25_topk)
-        postings, doclens, n_docs, avgdl = self._read_text_index(meta[1])
+        postings, doclens, n_docs, avgdl = self._read_text_index(path)
         cand = scoped.select("id") if metadata_filters else None
         kwr = bm25_mod.bm25_batch_search(
             postings, doclens, n_docs, avgdl, term_lists, k=k,
@@ -1225,22 +1135,15 @@ class VectorEngine:
         from vector_database_api_spark.functions.vector import (
             cosine_similarity,
         )
-        from vector_database_api_spark.operators.filters import (
-            apply_metadata_filters,
-        )
 
-        meta = self._index_meta(library_id)
-        if meta is None or meta[0] not in ("bm25", "hybrid"):
-            raise ValueError(
-                "export_ltr_features needs a built bm25 or hybrid index"
-            )
+        path = self._text_index(library_id, "export_ltr_features")
         term_lists, qdf = self._batch_request_inputs(requests)
         k_pool = self.config.clamp_k(k_pool)
         scoped = apply_metadata_filters(
             self.chunks(library_id), metadata_filters
         )
 
-        postings, doclens, n_docs, avgdl = self._read_text_index(meta[1])
+        postings, doclens, n_docs, avgdl = self._read_text_index(path)
         cand = scoped.select("id") if metadata_filters else None
         kw = bm25_mod.bm25_batch_search(
             postings, doclens, n_docs, avgdl, term_lists, k=k_pool,
@@ -1449,15 +1352,7 @@ class VectorEngine:
         scale matches the vector paths regardless of which index
         retrieved the pool.  Returns (mmr_rank, id, mmr, similarity),
         k rows (fewer if the filtered pool is smaller)."""
-        from vector_database_api_spark.operators import rerank as rerank_mod
-
-        if query_embedding is None:
-            if query_text is None:
-                raise ValueError("query must have text or embedding")
-            query_embedding = [
-                float(x)
-                for x in text_to_vector(query_text, self.config.embedding_dim)
-            ]
+        query_embedding = self._query_vector(query_text, query_embedding)
         k = self.config.clamp_k(k)
         pool_k = min(max(pool_factor * k, k), self.config.max_k)
         pool = self.search(
@@ -1503,10 +1398,6 @@ class VectorEngine:
         missing keys contribute nothing (MapType access is NULL).
         Returns (facet_key, facet_value, n_chunks) ordered for stable
         display."""
-        from vector_database_api_spark.operators.filters import (
-            apply_metadata_filters,
-        )
-
         if not keys:
             raise ValueError("facet_counts needs at least one key")
         scoped = apply_metadata_filters(self.chunks(library_id), metadata_filters)
@@ -1717,16 +1608,9 @@ class VectorEngine:
         size, so a ``min_nqc`` threshold calibrated from the registry
         surface transfers only for queries with full top-10 lists —
         calibrate from this method's own scores for tail queries."""
-        from vector_database_api_spark.operators.filters import (
-            apply_metadata_filters,
+        postings, doclens, n_docs, avgdl = self._read_text_index(
+            self._text_index(library_id, "search_expanded")
         )
-
-        meta = self._index_meta(library_id)
-        if meta is None or meta[0] not in ("bm25", "hybrid"):
-            raise ValueError(
-                "search_expanded needs a built bm25 or hybrid index"
-            )
-        postings, doclens, n_docs, avgdl = self._read_text_index(meta[1])
         k = self.config.clamp_k(k)
         cand = None
         if metadata_filters:
@@ -1821,83 +1705,27 @@ class VectorEngine:
         pruning stays lossless per page (pinned page-for-page equal to
         mode="or" pagination in pytest)."""
         meta = self._index_meta(library_id)
-        kind = meta[0] if meta is not None else None
-        if mode not in ("or", "and", "maxscore", "blockmax"):
-            raise ValueError(
-                "mode must be 'or', 'and', 'maxscore' or 'blockmax', "
-                f"got '{mode}'"
-            )
-        if mode != "or" and kind != "bm25":
-            raise ValueError(
-                f"mode='{mode}' needs a built bm25 index, not '{kind}'"
-            )
-        self._check_ranking(ranking, mode, kind)
+        kind, path = meta if meta is not None else (None, None)
+        self._check_modes(kind, mode, ranking)
         k = self.config.clamp_k(k)
         if similarity_threshold is None:
             similarity_threshold = self.config.similarity_threshold
         chunks = self.chunks(library_id)
+        after = (after_score, after_id)
         if kind == "bm25":
             if query_text is None:
                 raise ValueError("a bm25 index searches by query_text")
-            from vector_database_api_spark.operators.filters import (
-                apply_metadata_filters,
+            page = self._bm25_topk(
+                path, chunks, query_text, k, metadata_filters, mode=mode,
+                ranking=ranking, after=after,
             )
-
-            postings, doclens, n_docs, avgdl = self._read_text_index(meta[1])
-            cand = None
-            if metadata_filters:
-                cand = apply_metadata_filters(chunks, metadata_filters).select(
-                    "id"
-                )
-            terms = bm25_mod.tokenize_query(query_text)
-            if ranking == "ql":
-                page = bm25_mod.ql_dirichlet_search(
-                    postings, doclens, float(n_docs) * float(avgdl),
-                    terms, k=k, candidate_ids=cand,
-                    after=(after_score, after_id), operator=mode,
-                )
-                return self._apply_threshold(
-                    page, similarity_threshold, score_col="score"
-                )
-            if mode in ("maxscore", "blockmax"):
-                page = bm25_mod.bm25_maxscore_search(
-                    postings,
-                    doclens,
-                    n_docs,
-                    avgdl,
-                    terms,
-                    k=k,
-                    candidate_ids=cand,
-                    after=(after_score, after_id),
-                    n_blocks=bm25_mod.BLOCKMAX_BLOCKS if mode == "blockmax" else None,
-                )
-            else:
-                page = bm25_mod.bm25_search(
-                    postings,
-                    doclens,
-                    n_docs,
-                    avgdl,
-                    terms,
-                    k=k,
-                    candidate_ids=cand,
-                    after=(after_score, after_id),
-                    operator=mode,
-                )
             return self._apply_threshold(
                 page, similarity_threshold, score_col="score"
             )
         if kind is None:
-            if query_embedding is None:
-                if query_text is None:
-                    raise ValueError("query must have text or embedding")
-                query_embedding = [
-                    float(x)
-                    for x in text_to_vector(
-                        query_text, self.config.embedding_dim
-                    )
-                ]
             query = self.spark.createDataFrame(
-                [(query_embedding,)], "query_embedding array<float>"
+                [(self._query_vector(query_text, query_embedding),)],
+                "query_embedding array<float>",
             )
             return self._apply_threshold(
                 knn_brute_force(
@@ -1905,7 +1733,7 @@ class VectorEngine:
                     query,
                     k=k,
                     metadata_filters=metadata_filters,
-                    after=(after_score, after_id),
+                    after=after,
                 ),
                 similarity_threshold,
             )
@@ -1929,13 +1757,9 @@ class VectorEngine:
         the whole vocabulary)."""
         if not prefix:
             raise ValueError("prefix must be non-empty")
-        meta = self._index_meta(library_id)
-        if meta is None or meta[0] not in ("bm25", "hybrid"):
-            raise ValueError(
-                "suggest_terms needs a bm25 or hybrid index, "
-                f"not '{meta[0] if meta else None}'"
-            )
-        postings, _, _, _ = self._read_text_index(meta[1])
+        postings, _, _, _ = self._read_text_index(
+            self._text_index(library_id, "suggest_terms")
+        )
         return (
             postings.filter(F.col("term").startswith(prefix))
             .groupBy("term")
@@ -1990,13 +1814,9 @@ class VectorEngine:
                 [(r["id"], r["similarity"], r["distance"]) for r in keep],
                 "id string, similarity double, distance double",
             )
-        meta = self._index_meta(library_id)
-        if meta is None or meta[0] not in ("bm25", "hybrid"):
-            raise ValueError(
-                "find_similar(by='text') needs a bm25 or hybrid index, "
-                f"not '{meta[0] if meta else None}'"
-            )
-        postings, doclens, n_docs, avgdl = self._read_text_index(meta[1])
+        postings, doclens, n_docs, avgdl = self._read_text_index(
+            self._text_index(library_id, "find_similar(by='text')")
+        )
         seed_post = postings.filter(F.col("id") == chunk_id).filter(
             F.length("term") >= 3
         )

@@ -4,10 +4,11 @@ Reference: index updates happen synchronously on every chunk mutation
 (M1-M3: ``chunk_service.py:22-54,81-98,108-134`` -> ``IndexManager.add/
 remove``).  The Spark-native equivalent is Structured Streaming over a
 chunk-changes source with ``foreachBatch``: each micro-batch embeds new
-text, appends to the ``chunks`` table, computes its LSH hashes with the
-SAME seeded planes as the batch build, and appends them to the index table
-— so a search over the maintained index equals a search over a full
-rebuild (tested in tests/test_streaming.py).
+text, appends to the ``chunks`` table, encodes it with the SAME frozen
+state as the batch build (LSH planes, PQ codebooks, SQ8 bounds, or the
+keyword postings), and appends the rows to the index table — so a search
+over the maintained index equals a search over a full rebuild (tested in
+tests/test_streaming.py).
 
 The event-analytics surface (extended, SURVEY §7 stage 6) uses watermarked
 tumbling windows — late data beyond the watermark is dropped by Spark's
@@ -31,7 +32,6 @@ from pyspark.sql.types import (
 )
 
 from vector_database_api_spark.functions.embedding import make_embedder
-from vector_database_api_spark.operators.lsh import hash_table_df
 
 CHUNK_INGEST_SCHEMA = StructType(
     [
@@ -58,17 +58,26 @@ def read_chunk_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 def incremental_index_maintenance(
     chunk_stream: DataFrame,
-    planes,
+    encode: Callable[[DataFrame], DataFrame | dict[str, DataFrame]],
     chunks_dir: str,
     index_dir: str,
     checkpoint_dir: str,
     embedding_dim: int = 64,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """M1: per micro-batch — embed missing embeddings, append to the chunks
-    table, compute SRP hashes with the shared seeded planes, append to the
-    LSH index table.  Both writes are append-only file sinks; exactly-once
-    comes from the checkpoint + deterministic recompute."""
+    """M1 for every index kind: per micro-batch — embed missing
+    embeddings, append to the chunks table, append ``encode(batch)`` to the
+    index table.  ``encode`` is the kind's encoder under its FROZEN state
+    (LSH: ``hash_table_df`` with the shared seeded planes; PQ:
+    ``encode_codes`` with the codebooks; SQ8: ``encode_with_bounds`` with
+    the per-dim bounds — incremental adds never retrain, like IVF's frozen
+    centroids).  An encoder may return ``{table: rows}`` to append each
+    under ``index_dir`` (the keyword index's postings/doclens).  Encoding
+    is a pure function of (row, frozen state), so the streamed index
+    equals a batch encode of the same rows (tested per kind).  Every write
+    is an append-only file sink; exactly-once comes from the checkpoint +
+    deterministic recompute."""
+    import os
+
     embedder = make_embedder(embedding_dim)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
@@ -78,15 +87,18 @@ def incremental_index_maintenance(
         )
         batch.persist()
         batch.write.mode("append").parquet(chunks_dir)
-        hash_table_df(batch, planes).write.mode("append").parquet(index_dir)
+        rows = encode(batch)
+        tables = rows if isinstance(rows, dict) else {"": rows}
+        for sub, df in tables.items():
+            df.write.mode("append").parquet(os.path.join(index_dir, sub))
         batch.unpersist()
 
-    writer = chunk_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        chunk_stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_event_stream(spark: SparkSession, source_dir: str, schema) -> DataFrame:
@@ -170,92 +182,6 @@ def run_stream_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def incremental_pq_maintenance(
-    chunk_stream: DataFrame,
-    codebooks,
-    chunks_dir: str,
-    codes_dir: str,
-    checkpoint_dir: str,
-    embedding_dim: int = 64,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """M1 for the PQ extension index: per micro-batch — embed missing
-    embeddings, append chunks, encode against the FROZEN codebooks
-    (pq.encode_codes; incremental adds never retrain, matching IVF's
-    frozen-centroid posture), append to the codes table.  Streaming codes
-    equal a batch re-encode of the same rows because encoding is a pure
-    function of (vector, codebooks) — tested."""
-    from vector_database_api_spark.operators.pq import encode_codes
-
-    embedder = make_embedder(embedding_dim)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.withColumn(
-            "embedding",
-            F.coalesce(F.col("embedding"), embedder(F.col("text"))),
-        )
-        batch.persist()
-        batch.write.mode("append").parquet(chunks_dir)
-        encode_codes(batch, codebooks).write.mode("append").parquet(codes_dir)
-        batch.unpersist()
-
-    writer = chunk_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_sq_maintenance(
-    chunk_stream: DataFrame,
-    sq_index,
-    chunks_dir: str,
-    codes_dir: str,
-    checkpoint_dir: str,
-    embedding_dim: int = 64,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """M1 for the SQ8 index: per micro-batch — embed missing embeddings,
-    append chunks, encode against the FROZEN per-dim bounds
-    (operators/sq.py; incremental adds never retrain, the same posture as
-    PQ codebooks / IVF centroids — out-of-range values clamp into the
-    trained bounds by construction).  Streaming codes equal a batch
-    re-encode because encoding is a pure function of (vector, bounds)."""
-    from vector_database_api_spark.functions.vector import (
-        norm2,
-        normalize_with_staged_norm,
-    )
-    from vector_database_api_spark.operators.sq import _lit_array, encode_expr
-
-    embedder = make_embedder(embedding_dim)
-    vmins, vmaxs = _lit_array(sq_index.vmins), _lit_array(sq_index.vmaxs)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.withColumn(
-            "embedding",
-            F.coalesce(F.col("embedding"), embedder(F.col("text"))),
-        )
-        batch.persist()
-        batch.write.mode("append").parquet(chunks_dir)
-        nv = batch.select(
-            "id", "embedding", norm2("embedding").alias("n2")
-        ).select(
-            "id", normalize_with_staged_norm("embedding", "n2").alias("nv")
-        )
-        nv.select(
-            "id", encode_expr(F.col("nv"), vmins, vmaxs).alias("codes")
-        ).write.mode("append").parquet(codes_dir)
-        batch.unpersist()
-
-    writer = chunk_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_static_enrich(
@@ -1108,16 +1034,13 @@ def incremental_bm25_index_maintenance(
     chunks_dir: str,
     checkpoint_dir: str,
     embedding_dim: int = 64,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """M1 for the keyword (bm25/hybrid) index — the foreachBatch twin of
-    `incremental_index_maintenance` (LSH) / `incremental_pq_maintenance`:
-    per micro-batch, embed missing embeddings, append the chunk rows, and
-    append the batch's postings + doc lengths to the index tables under
-    ``index_dir`` (the layout `service.VectorEngine._read_text_index`
-    reads).  Postings for a doc are a pure function of its text, so
-    streamed tables equal a batch `build_bm25_index` over the same rows
-    (tested); appends are idempotent under the streaming checkpoint.
+    """M1 for the keyword (bm25/hybrid) index: the shared
+    `incremental_index_maintenance` driver with the batch's postings +
+    doc lengths as its encoding, appended under ``index_dir`` (the layout
+    `service.VectorEngine._read_text_index` reads).  Postings for a doc
+    are a pure function of its text, so streamed tables equal a batch
+    `build_bm25_index` over the same rows (tested).
 
     The 1-row corpus-stats table is NOT written per batch — a 1-row
     overwrite per micro-batch would be a read-modify-write race under
@@ -1125,34 +1048,15 @@ def incremental_bm25_index_maintenance(
     one combinable aggregate (:func:`bm25_index_serving_stats`) —
     artifact-sized, never a corpus rescan, the same merge-on-read
     discipline as the BM25 statistics and winnow artifacts."""
-    import os
-
     from vector_database_api_spark.operators.bm25 import build_bm25_index
 
-    embedder = make_embedder(embedding_dim)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.withColumn(
-            "embedding",
-            F.coalesce(F.col("embedding"), embedder(F.col("text"))),
-        )
-        batch.persist()
-        batch.write.mode("append").parquet(chunks_dir)
+    def encode(batch: DataFrame) -> dict[str, DataFrame]:
         postings, doclens, _ = build_bm25_index(batch)
-        postings.write.mode("append").parquet(
-            os.path.join(index_dir, "postings")
-        )
-        doclens.write.mode("append").parquet(
-            os.path.join(index_dir, "doclens")
-        )
-        batch.unpersist()
+        return {"postings": postings, "doclens": doclens}
 
-    writer = chunk_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return incremental_index_maintenance(
+        chunk_stream, encode, chunks_dir, index_dir, checkpoint_dir, embedding_dim
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def bm25_index_serving_stats(spark: SparkSession, index_dir: str):
