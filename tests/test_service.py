@@ -379,8 +379,9 @@ def test_hybrid_fusion_modes_match_operator_fusers(engine):
     engine.index_library("libA", "hybrid")
     q = "python document number 0 about python"
     chunks = engine.chunks("libA")
-    meta = engine._index_meta("libA")
-    kw_rows = engine._bm25_topk(meta[1], chunks, q, 5, None).collect()
+    kw_rows = engine._bm25_topk(
+        engine._handle("libA"), chunks, q, 5, None
+    ).collect()
     qdf = engine.spark.createDataFrame(
         [([float(x) for x in text_to_vector(q, 16)],)],
         "query_embedding array<float>",

@@ -34,13 +34,28 @@ Mutations are atomic directory overwrites (snapshot isolation — the
 capability the reference gets from ReadWriteLock).  On a production
 deployment these become Delta tables with MERGE; the operator layer
 (operators/crud.py) is unchanged by that swap.
+
+Serving handles (the reference's in-memory ``library_id -> IndexManager``
+registry, library_service.py:18): the engine opens one handle per library
+on its first read — the index kind, the frozen state (``_PROFILE.json``,
+``_STATE.npy``), the resolved index DataFrame(s) and, for bm25/hybrid,
+the postings, doclens and (n_docs, avgdl) scalars — and resolves the
+chunks table once.  Searches then build their plans without touching the
+warehouse.  Every engine writer (ingest, chunk rewrite, index write,
+index build or kind switch) drops all handles when it finishes; the next
+read re-resolves.  Writers outside the engine (the streaming maintainers
+of ``streaming/maintenance.py``, another engine) are not seen until a new
+``VectorEngine`` is created: one engine is the warehouse's single writer.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
+import threading
+from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
@@ -76,8 +91,54 @@ ALL_INDEX_TYPES = VALID_INDEX_TYPES + ("pq", "sq8", "bm25", "hybrid")
 TEXT_KINDS = ("bm25", "hybrid")
 
 
+def _writer(method):
+    """An engine writer: it ends the write generation when it returns
+    or fails, dropping every serving handle (VectorEngine docstring)."""
+
+    @functools.wraps(method)
+    def wrapper(self, *args, **kwargs):
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            self._drop_handles()
+
+    return wrapper
+
+
+@dataclass(frozen=True)
+class _Handle:
+    """One library's index as its searches read it, resolved once per
+    write generation: the kind (None when the library has no index),
+    the frozen (profile, array) of :meth:`VectorEngine._index_state`,
+    and the resolved index tables — ``index`` for the vector kinds
+    (None for an untrained IVF index), ``text`` = the (postings,
+    doclens, n_docs, avgdl) of the keyword kinds."""
+
+    kind: str | None = None
+    profile: dict[str, int] | None = None
+    array: Any = None
+    index: DataFrame | None = None
+    text: tuple[DataFrame, DataFrame, int, float] | None = None
+
+
 class VectorEngine:
-    """Library/document/chunk store + per-library ANN indexes."""
+    """Library/document/chunk store + per-library ANN indexes.
+
+    Serving handles: every read path resolves a library's index through
+    :meth:`_handle`, which opens a :class:`_Handle` on the first read and
+    keeps it, and resolves the chunks table once in :meth:`chunks` — so a
+    warm search launches no schema-inference scan, stats job or state
+    reload.  Every writer of this engine (``ingest_chunks``,
+    ``_overwrite_library_chunks``, ``_write_index`` and
+    ``index_library``, whose kind switch removes directories) drops all
+    handles and the chunks table when it finishes, even on failure, and
+    the next read resolves afresh: a resolved DataFrame keeps the file
+    listing of its read, which a write leaves pointing at replaced
+    files.  Single-writer contract: a process that writes the warehouse
+    outside this engine (the streaming maintainers, another engine) is
+    not seen until a new ``VectorEngine`` is created on it.  One lock
+    guards the handles, the chunks table and the request-telemetry log,
+    so concurrent searches open each handle once."""
 
     def __init__(
         self,
@@ -91,6 +152,11 @@ class VectorEngine:
         self._embedder = make_embedder(config.embedding_dim)
         # per-request telemetry ring (search_timed / search_metrics_df)
         self._search_metrics: list[dict[str, Any]] = []
+        # serving handles and the resolved chunks table, dropped by every
+        # writer (class docstring); the lock guards them and the ring
+        self._lock = threading.Lock()
+        self._handles: dict[str, _Handle] = {}
+        self._chunk_table: DataFrame | None = None
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths and frozen state ----------------------------------------
@@ -109,18 +175,44 @@ class VectorEngine:
                 return kind, path
         return None
 
+    def _handle(self, library_id: str) -> _Handle:
+        """The library's serving handle, opened on first use after the
+        last write."""
+        with self._lock:
+            handle = self._handles.get(library_id)
+            if handle is None:
+                handle = self._handles[library_id] = self._open_handle(library_id)
+        return handle
+
+    def _open_handle(self, library_id: str) -> _Handle:
+        meta = self._index_meta(library_id)
+        if meta is None:
+            return _Handle()
+        kind, path = meta
+        profile, array = self._index_state(path)
+        if kind in TEXT_KINDS:
+            return _Handle(kind, profile, array, text=self._read_text_index(path))
+        if kind == "ivf" and array is None:
+            return _Handle(kind, profile)  # untrained: no rows to read
+        return _Handle(kind, profile, array, index=self.spark.read.parquet(path))
+
+    def _drop_handles(self) -> None:
+        """End the write generation: the next read resolves afresh."""
+        with self._lock:
+            self._handles.clear()
+            self._chunk_table = None
+
     def _text_index(
         self, library_id: str, caller: str, kinds: tuple[str, ...] = TEXT_KINDS
-    ) -> str:
-        """Path of the library's keyword index; ``caller`` raises unless
+    ) -> _Handle:
+        """The library's keyword-index handle; ``caller`` raises unless
         the built index is one of ``kinds``."""
-        meta = self._index_meta(library_id)
-        kind = meta[0] if meta is not None else None
-        if kind not in kinds:
+        handle = self._handle(library_id)
+        if handle.kind not in kinds:
             raise ValueError(
-                f"{caller} needs a {' or '.join(kinds)} index, not '{kind}'"
+                f"{caller} needs a {' or '.join(kinds)} index, not '{handle.kind}'"
             )
-        return meta[1]
+        return handle
 
     def _lsh_planes(self, profile: dict[str, int] | None = None):
         """Hyperplanes for the given profile dict (num_tables/hash_length),
@@ -170,6 +262,7 @@ class VectorEngine:
             rows = sq_mod.encode_with_bounds(chunks, array[0], array[1])
         return {"": rows}
 
+    @_writer
     def _write_index(
         self,
         kind: str,
@@ -225,6 +318,7 @@ class VectorEngine:
 
     # -- ingestion (M1; chunk_service.py:22-54) ------------------------
 
+    @_writer
     def ingest_chunks(self, rows: DataFrame) -> None:
         """Append chunk rows; NULL embeddings are filled by the
         deterministic embedder (reference embeds on create,
@@ -239,13 +333,19 @@ class VectorEngine:
         )
 
     def chunks(self, library_id: str | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self._chunks_dir())
+        """The chunks table (one library's rows when given), resolved once
+        per write generation."""
+        with self._lock:
+            if self._chunk_table is None:
+                self._chunk_table = self.spark.read.parquet(self._chunks_dir())
+            df = self._chunk_table
         if library_id is not None:
             df = df.filter(F.col("library_id") == library_id)
         return df
 
     # -- index build (M4; library_service.py:120-158) ------------------
 
+    @_writer
     def index_library(
         self,
         library_id: str,
@@ -400,6 +500,7 @@ class VectorEngine:
             tables = {sub: df.unionByName(fresh[sub]) for sub, df in tables.items()}
         self._write_index(kind, path, tables, state, snapshot=True)
 
+    @_writer
     def _overwrite_library_chunks(self, library_id: str, new_rows: DataFrame) -> None:
         """Atomic snapshot replace of ONE library partition.  Dynamic
         partition overwrite touches only the partitions present in
@@ -474,8 +575,8 @@ class VectorEngine:
         ``hybrid_linear_fusion``) or ``"combmnz"`` (normalized score
         sum x legs-retrieving count, twin ``hybrid_combmnz_fusion``).
         The result schema follows the fusion's native columns."""
-        meta = self._index_meta(library_id)
-        kind, path = meta if meta is not None else (None, None)
+        handle = self._handle(library_id)
+        kind = handle.kind
         self._check_modes(kind, mode, ranking)
         if fusion not in ("rrf", "linear", "combmnz"):
             raise ValueError(
@@ -497,7 +598,7 @@ class VectorEngine:
             if query_text is None:
                 raise ValueError("a bm25 index searches by query_text")
             result = self._bm25_topk(
-                path, chunks, query_text, k, metadata_filters, mode=mode,
+                handle, chunks, query_text, k, metadata_filters, mode=mode,
                 ranking=ranking,
             )
             return self._apply_threshold(
@@ -510,7 +611,7 @@ class VectorEngine:
 
         if kind == "hybrid":
             return self._hybrid_topk(
-                path,
+                handle,
                 chunks,
                 query,
                 query_text,
@@ -527,10 +628,10 @@ class VectorEngine:
                 ),
                 similarity_threshold,
             )
-        profile, array = self._index_state(path)
+        profile, array = handle.profile, handle.array
         query_vec = np.asarray(query_embedding, dtype=np.float64)
         if kind in ("pq", "sq8"):
-            codes_df = self.spark.read.parquet(path)
+            codes_df = handle.index
             if metadata_filters:
                 filtered_ids = apply_metadata_filters(
                     chunks, metadata_filters
@@ -578,7 +679,7 @@ class VectorEngine:
                     self._lsh_planes(profile),
                     k=k,
                     metadata_filters=metadata_filters,
-                    index_df=self.spark.read.parquet(path),
+                    index_df=handle.index,
                 ),
                 similarity_threshold,
             )
@@ -591,7 +692,7 @@ class VectorEngine:
         ivf_params = profile or {}
         index = ivf_mod.IVFIndex(
             centroids=array,
-            index_df=self.spark.read.parquet(path),
+            index_df=handle.index,
             trained=True,
             nlist=ivf_params.get("nlist", self.config.ivf_nlist),
             nprobe=ivf_params.get("nprobe", self.config.ivf_nprobe),
@@ -686,8 +787,8 @@ class VectorEngine:
             "execution_time_ms": round(elapsed_ms, 3),
             **obs.get,
         }
-        self._search_metrics.append(metrics)
-        if len(self._search_metrics) > self.SEARCH_METRICS_CAP:
+        with self._lock:
+            self._search_metrics.append(metrics)
             del self._search_metrics[: -self.SEARCH_METRICS_CAP]
         return rows, metrics
 
@@ -702,6 +803,8 @@ class VectorEngine:
             "fusion string, execution_time_ms double, "
             "n_results bigint, best_score double, worst_score double"
         )
+        with self._lock:
+            log = list(self._search_metrics)
         return self.spark.createDataFrame(
             [
                 (
@@ -714,7 +817,7 @@ class VectorEngine:
                     m["best_score"],
                     m["worst_score"],
                 )
-                for m in self._search_metrics
+                for m in log
             ],
             schema,
         )
@@ -764,7 +867,7 @@ class VectorEngine:
 
     def _bm25_topk(
         self,
-        path: str,
+        handle: _Handle,
         chunks: DataFrame,
         query_text: str,
         k: int,
@@ -783,7 +886,7 @@ class VectorEngine:
         modes return results identical to "or"; see
         operators/bm25.py::bm25_maxscore_search).  ``after``: the
         (score, id) keyset cursor of :meth:`search_after`."""
-        postings, doclens, n_docs, avgdl = self._read_text_index(path)
+        postings, doclens, n_docs, avgdl = handle.text
         cand = None
         if metadata_filters:
             cand = apply_metadata_filters(chunks, metadata_filters).select("id")
@@ -813,7 +916,7 @@ class VectorEngine:
 
     def _hybrid_topk(
         self,
-        path: str,
+        handle: _Handle,
         chunks: DataFrame,
         query: DataFrame,
         query_text: str | None,
@@ -848,7 +951,7 @@ class VectorEngine:
         ).select("id", "similarity")
         if query_text is not None:
             kw_leg = self._bm25_topk(
-                path, chunks, query_text, k, metadata_filters
+                handle, chunks, query_text, k, metadata_filters
             )
             # both legs collect CONCURRENTLY (operators/bm25.py) — the
             # fan-out a real hybrid engine does; wall-clock max(legs)
@@ -1040,7 +1143,7 @@ class VectorEngine:
         rank <= k per qid."""
         from pyspark.sql.window import Window
 
-        path = self._text_index(library_id, "search_hybrid_batch", ("hybrid",))
+        handle = self._text_index(library_id, "search_hybrid_batch", ("hybrid",))
         term_lists, qdf = self._batch_request_inputs(requests)
         k = self.config.clamp_k(k)
         if similarity_threshold is None:
@@ -1051,7 +1154,7 @@ class VectorEngine:
         # keyword legs: one plan over the stored postings; per-term df
         # stays corpus-level, candidates restrict scoring (the same
         # filter-then-search split as _bm25_topk)
-        postings, doclens, n_docs, avgdl = self._read_text_index(path)
+        postings, doclens, n_docs, avgdl = handle.text
         cand = scoped.select("id") if metadata_filters else None
         kwr = bm25_mod.bm25_batch_search(
             postings, doclens, n_docs, avgdl, term_lists, k=k,
@@ -1136,14 +1239,14 @@ class VectorEngine:
             cosine_similarity,
         )
 
-        path = self._text_index(library_id, "export_ltr_features")
+        handle = self._text_index(library_id, "export_ltr_features")
         term_lists, qdf = self._batch_request_inputs(requests)
         k_pool = self.config.clamp_k(k_pool)
         scoped = apply_metadata_filters(
             self.chunks(library_id), metadata_filters
         )
 
-        postings, doclens, n_docs, avgdl = self._read_text_index(path)
+        postings, doclens, n_docs, avgdl = handle.text
         cand = scoped.select("id") if metadata_filters else None
         kw = bm25_mod.bm25_batch_search(
             postings, doclens, n_docs, avgdl, term_lists, k=k_pool,
@@ -1608,9 +1711,9 @@ class VectorEngine:
         size, so a ``min_nqc`` threshold calibrated from the registry
         surface transfers only for queries with full top-10 lists —
         calibrate from this method's own scores for tail queries."""
-        postings, doclens, n_docs, avgdl = self._read_text_index(
-            self._text_index(library_id, "search_expanded")
-        )
+        postings, doclens, n_docs, avgdl = self._text_index(
+            library_id, "search_expanded"
+        ).text
         k = self.config.clamp_k(k)
         cand = None
         if metadata_filters:
@@ -1704,8 +1807,8 @@ class VectorEngine:
         ranking (operators/bm25.py::bm25_maxscore_search(after=)), so
         pruning stays lossless per page (pinned page-for-page equal to
         mode="or" pagination in pytest)."""
-        meta = self._index_meta(library_id)
-        kind, path = meta if meta is not None else (None, None)
+        handle = self._handle(library_id)
+        kind = handle.kind
         self._check_modes(kind, mode, ranking)
         k = self.config.clamp_k(k)
         if similarity_threshold is None:
@@ -1716,7 +1819,7 @@ class VectorEngine:
             if query_text is None:
                 raise ValueError("a bm25 index searches by query_text")
             page = self._bm25_topk(
-                path, chunks, query_text, k, metadata_filters, mode=mode,
+                handle, chunks, query_text, k, metadata_filters, mode=mode,
                 ranking=ranking, after=after,
             )
             return self._apply_threshold(
@@ -1757,9 +1860,7 @@ class VectorEngine:
         the whole vocabulary)."""
         if not prefix:
             raise ValueError("prefix must be non-empty")
-        postings, _, _, _ = self._read_text_index(
-            self._text_index(library_id, "suggest_terms")
-        )
+        postings = self._text_index(library_id, "suggest_terms").text[0]
         return (
             postings.filter(F.col("term").startswith(prefix))
             .groupBy("term")
@@ -1814,9 +1915,9 @@ class VectorEngine:
                 [(r["id"], r["similarity"], r["distance"]) for r in keep],
                 "id string, similarity double, distance double",
             )
-        postings, doclens, n_docs, avgdl = self._read_text_index(
-            self._text_index(library_id, "find_similar(by='text')")
-        )
+        postings, doclens, n_docs, avgdl = self._text_index(
+            library_id, "find_similar(by='text')"
+        ).text
         seed_post = postings.filter(F.col("id") == chunk_id).filter(
             F.length("term") >= 3
         )

@@ -1333,21 +1333,6 @@ class writer_guard:
         self.markers = []
 
 
-def check_not_compacting(*store_dirs: str) -> None:
-    """One-shot form of the writer check (kept for probes/tests): fails
-    fast if any store's compaction lock exists.  Writers must use
-    :class:`writer_guard` around the actual writes — this function
-    alone cannot exclude a compactor that starts mid-write."""
-    import os
-
-    for d in store_dirs:
-        if os.path.exists(_compaction_lock(d)):
-            raise CompactionInProgressError(
-                f"store {d} is being compacted (lock {_compaction_lock(d)}); "
-                "micro-batch writes must wait for compaction to finish"
-            )
-
-
 def compact_batch_store(
     spark: SparkSession,
     store_dir: str,
