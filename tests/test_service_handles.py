@@ -46,9 +46,10 @@ def _rows(df):
 
 @pytest.mark.parametrize("kind", ALL_INDEX_TYPES + (None,))
 def test_fresh_results_after_every_write(engine, spark, kind):
-    """A warm engine's search after each kind of engine write equals the
-    search of a newly constructed engine on the same warehouse (ids,
-    order and scores); search_after too on the bm25 and brute paths."""
+    """A warm engine's search and search_timed after each kind of engine
+    write equal those of a newly constructed engine on the same
+    warehouse (ids, order and scores); search_after too on the bm25 and
+    brute paths.  An ingested chunk is encoded into the built index."""
     if kind is not None:
         engine.index_library("libA", kind)
     new_text = "zebra quantum lighthouse"
@@ -59,6 +60,11 @@ def test_fresh_results_after_every_write(engine, spark, kind):
         got = engine.search("libA", query_text=query_text, k=K).collect()
         want = fresh.search("libA", query_text=query_text, k=K).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
+        timed = [
+            [tuple(r) for r in eng.search_timed("libA", query_text=query_text, k=K)[0]]
+            for eng in (engine, fresh)
+        ]
+        assert timed[0] == timed[1] == [tuple(r) for r in want]
         ids = {r["id"] for r in got}
         assert set(present) <= ids and not set(absent) & ids
         served = engine._handle("libA").kind
@@ -75,8 +81,9 @@ def test_fresh_results_after_every_write(engine, spark, kind):
             [_chunk(99, "libA", new_text, "zoo")], CHUNK_INGEST_SCHEMA
         )
     )
-    # an index covers ingested chunks from its next build on
-    check(new_text, present=["c99"] if kind in (None, "hybrid") else [])
+    # every index here holds rows (ivf trains on 16 >= nlist chunks), so
+    # the ingested chunk is found on every path
+    check(new_text, present=["c99"])
     engine.update_chunk_texts("libA", {"c03": upd_text})
     check(upd_text, present=["c03"])
     engine.delete_chunks("libA", ["c03"])
@@ -150,10 +157,27 @@ def test_warm_search_launches_no_read(engine, spark, monkeypatch, kind, params, 
         assert _jobs_and_reads(spark, monkeypatch, build) == (jobs, 0)
 
 
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "pq", "sq8", None])
+def test_warm_driver_plane_runs_nothing(engine, spark, monkeypatch, kind):
+    """Once a library's driver copy is loaded, search_timed on the
+    driver-plane kinds launches no Spark job and reads no parquet."""
+    if kind is not None:
+        engine.index_library("libA", kind)
+    q = "python document about databases"
+
+    def timed():
+        assert engine.search_timed("libA", query_text=q, k=5)[1]["plane"] == "driver"
+        engine.search_timed("libA", query_text=q, k=5, metadata_filters={"topic": "ml"})
+
+    timed()  # opens the handle and loads the copy
+    assert _jobs_and_reads(spark, monkeypatch, timed) == (0, 0)
+
+
 def test_concurrent_searches_open_each_handle_once(engine, spark, monkeypatch):
     """4 threads x 5 search_timed calls over two libraries of different
     kinds: rows equal the serial results, the telemetry log holds every
-    request, and each library's handle is opened exactly once."""
+    request, each library's handle is opened exactly once and the lsh
+    library's driver copy is loaded once (the bm25 library's never)."""
     engine.index_library("libA", "lsh")
     engine.index_library("libB", "bm25")
     calls = [
@@ -172,6 +196,14 @@ def test_concurrent_searches_open_each_handle_once(engine, spark, monkeypatch):
         return orig_open(library_id)
 
     monkeypatch.setattr(engine, "_open_handle", counting_open)
+    loaded = []
+    orig_load = engine._load_copy
+
+    def counting_load(library_id, handle):
+        loaded.append(library_id)
+        return orig_load(library_id, handle)
+
+    monkeypatch.setattr(engine, "_load_copy", counting_load)
 
     def run(t):
         return [
@@ -190,3 +222,6 @@ def test_concurrent_searches_open_each_handle_once(engine, spark, monkeypatch):
     assert got == want
     assert len(engine._search_metrics) == min(20, engine.SEARCH_METRICS_CAP)
     assert sorted(opened) == ["libA", "libB"]
+    assert loaded == ["libA"]
+    assert engine._handle("libB").local is None
+    assert [m["plane"] for m in engine._search_metrics].count("driver") == 10

@@ -151,3 +151,39 @@ def test_md5_embedder_matches_duckdb_bit_exact():
     for i, text in enumerate(texts):
         expected = emb.md5_text_to_vector(text)
         assert list(rows[i][1:]) == expected, (text, rows[i][1:], expected)
+
+
+def test_numpy_twins_are_bit_exact(spark):
+    """The *_np twins (the driver plane of VectorEngine.search_timed)
+    equal their Column forms to the bit, on random float32 vectors
+    including a zero vector, as row and as query."""
+    from vector_database_api_spark.functions.vector import (
+        cosine_similarity_np,
+        dot_product_np,
+        euclidean_distance_np,
+        norm2,
+        norm2_np,
+    )
+
+    rng = np.random.default_rng(11)
+    mat = rng.normal(size=(40, 24)).astype(np.float32)
+    mat[5] = 0.0
+    for q in (rng.normal(size=24).astype(np.float32), np.zeros(24, np.float32)):
+        df = spark.createDataFrame(
+            [([float(x) for x in row], [float(x) for x in q]) for row in mat],
+            SCHEMA,
+        )
+        got = df.select(
+            norm2("a").alias("n2"),
+            dot_product("a", "b").alias("dot"),
+            cosine_similarity("a", "b").alias("cos"),
+            euclidean_distance("a", "b").alias("euc"),
+        ).collect()
+        twins = {
+            "n2": norm2_np(mat),
+            "dot": dot_product_np(mat, q),
+            "cos": cosine_similarity_np(mat, q),
+            "euc": euclidean_distance_np(mat, q),
+        }
+        for name, values in twins.items():
+            assert [r[name] for r in got] == values.tolist(), name

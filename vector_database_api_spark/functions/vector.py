@@ -17,10 +17,16 @@ Implementation notes (scale + oracle parity):
   order and precision (``list_zip``/``list_transform``/``list_reduce`` with
   DOUBLE casts), making results bit-identical between Spark and DuckDB —
   which keeps top-k ordering stable across both engines.
+- The ``*_np`` twins score the rows of a driver-side matrix with the same
+  operation order: one dimension at a time, vectorised across rows, in
+  DOUBLE, so they are bit-equal to the Column forms (pinned by
+  tests/test_vector_functions.py).  ``VectorEngine.search_timed`` serves
+  small libraries with them.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -100,6 +106,45 @@ def euclidean_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
         * (x.cast("double") - y.cast("double")),
     )
     return F.sqrt(F.aggregate(diffs2, F.lit(0.0).cast("double"), lambda acc, v: acc + v))
+
+
+def norm2_np(mat: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`norm2` for every row of ``mat`` (n, d)."""
+    acc = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        x = np.asarray(mat[:, j], dtype=np.float64)
+        acc = acc + x * x
+    return acc
+
+
+def dot_product_np(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`dot_product`: each row of ``mat`` with ``q``."""
+    acc = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        acc = acc + np.asarray(mat[:, j], dtype=np.float64) * float(q[j])
+    return acc
+
+
+def euclidean_distance_np(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`euclidean_distance`."""
+    acc = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        diff = np.asarray(mat[:, j], dtype=np.float64) - float(q[j])
+        acc = acc + diff * diff
+    return np.sqrt(acc)
+
+
+def cosine_similarity_np(
+    mat: np.ndarray, q: np.ndarray, na2: np.ndarray | None = None
+) -> np.ndarray:
+    """NumPy twin of :func:`cosine_similarity`, with the rows' squared
+    norms ``na2`` passed in when already staged."""
+    na2 = norm2_np(mat) if na2 is None else na2
+    qn2 = norm2_np(np.asarray(q)[None, :])[0]
+    dot = dot_product_np(mat, q)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = dot / (np.sqrt(na2) * np.sqrt(qn2))
+    return np.where((na2 == 0.0) | (qn2 == 0.0), 0.0, sim)
 
 
 def normalize_vector(a: ColumnOrName) -> Column:

@@ -29,6 +29,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def filter_form(key: str) -> str:
+    """The predicate form of a filter key: 'created_after',
+    'created_before', 'contains' or 'exact'."""
+    for prefix in ("created_after", "created_before"):
+        if key.startswith(prefix):
+            return prefix
+    return "contains" if key.endswith("_contains") else "exact"
+
+
 def metadata_predicate(
     filters: dict[str, Any],
     metadata_col: str = "metadata",
@@ -38,11 +47,12 @@ def metadata_predicate(
     preds: list[Column] = []
     meta = F.col(metadata_col)
     for key, value in filters.items():
-        if key.startswith("created_after"):
+        form = filter_form(key)
+        if form == "created_after":
             preds.append(F.col(created_at_col) > F.lit(value))
-        elif key.startswith("created_before"):
+        elif form == "created_before":
             preds.append(F.col(created_at_col) < F.lit(value))
-        elif key.endswith("_contains"):
+        elif form == "contains":
             base = key[: -len("_contains")]
             preds.append(
                 F.lower(meta[base]).contains(F.lower(F.lit(str(value))))
@@ -52,6 +62,14 @@ def metadata_predicate(
     if not preds:
         return F.lit(True)
     return reduce(lambda a, b: a & b, preds)
+
+
+def exact_match(metadata: dict[str, str] | None, filters: dict[str, Any]) -> bool:
+    """Python twin of :func:`metadata_predicate` for exact-match keys
+    only: a missing map, a missing key or a NULL value fails."""
+    return metadata is not None and all(
+        metadata.get(key) == str(value) for key, value in filters.items()
+    )
 
 
 def apply_metadata_filters(

@@ -118,21 +118,25 @@ def srp_hash_udf(planes: np.ndarray):
     computed by the sequential JVM expression either way, so oracle
     bit-exactness is preserved.
     """
-    num_tables, hash_len, dim = planes.shape
-    flat = planes.reshape(num_tables * hash_len, dim).astype(np.float64)
 
     @F.pandas_udf("array<string>")
     def all_hashes(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         m = np.vstack(vecs.map(lambda v: np.asarray(v, dtype=np.float64)))
-        bits = (m @ flat.T) >= 0.0
-        chars = np.where(bits, "1", "0").reshape(len(m), num_tables, hash_len)
-        return pd.Series(
-            [["".join(tbl) for tbl in row] for row in chars]
-        )
+        return pd.Series(srp_hashes(m, planes))
 
     return all_hashes
+
+
+def srp_hashes(mat: np.ndarray, planes: np.ndarray) -> list[list[str]]:
+    """Pure hash kernel behind :func:`srp_hash_udf`: the L sign-bit
+    strings of every row of ``mat`` (float64, one row per vector)."""
+    num_tables, hash_len, dim = planes.shape
+    flat = planes.reshape(num_tables * hash_len, dim).astype(np.float64)
+    bits = (mat @ flat.T) >= 0.0
+    chars = np.where(bits, "1", "0").reshape(len(mat), num_tables, hash_len)
+    return [["".join(tbl) for tbl in row] for row in chars]
 
 
 def hash_table_df(

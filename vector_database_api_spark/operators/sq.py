@@ -166,17 +166,25 @@ def encode_with_bounds(
     )
 
 
+def sq_query_weights(
+    vmins: np.ndarray, vmaxs: np.ndarray, query_vec: np.ndarray
+) -> tuple[np.ndarray, float]:
+    """The (w, bias) of the affine score ``bias + dot(codes, w)`` for a
+    query: w_i = vdiff_i * q_i / 255 and bias = dot(vmins, q) on the
+    normalized query."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    qn = np.linalg.norm(q)
+    if qn > 0:
+        q = q / qn
+    return (vmaxs - vmins) * q / 255.0, float(vmins @ q)
+
+
 def sq_search(index: SQIndex, query_vec: np.ndarray, k: int = 5) -> DataFrame:
     """Affine-decomposed ADC: score = bias + dot(codes, w) with
     w_i = vdiff_i * q_i / 255 and bias = dot(vmins, q) folded on the
     driver — one fused zip_with/aggregate over the int codes per row,
     deterministic ``ORDER BY similarity DESC, id LIMIT k``."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    w = (index.vmaxs - index.vmins) * q / 255.0
-    bias = float(index.vmins @ q)
+    w, bias = sq_query_weights(index.vmins, index.vmaxs, query_vec)
     return (
         index.codes_df.select(
             "id",

@@ -46,20 +46,34 @@ index build or kind switch) drops all handles when it finishes; the next
 read re-resolves.  Writers outside the engine (the streaming maintainers
 of ``streaming/maintenance.py``, another engine) are not seen until a new
 ``VectorEngine`` is created: one engine is the warehouse's single writer.
+
+Two serving planes.  Spark is the build plane and serves every
+DataFrame-returning read: ``search()`` returns its plan.
+``search_timed`` answers a request on the driver plane instead when the
+library is small (at most ``LOCAL_MAX_ROWS`` chunk rows) and its kind is
+lsh, trained ivf, pq, sq8 or none: the handle keeps a NumPy copy of the
+chunks and index, loaded once per write generation, and the request is
+scored in NumPy with the plan's arithmetic, so the rows are bit-equal to
+``search().collect()`` (selection rule in ``search_timed``).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
 import shutil
 import threading
+import time
+from collections import defaultdict
 from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -70,6 +84,12 @@ from vector_database_api_spark.config import (
     EngineConfig,
 )
 from vector_database_api_spark.functions.embedding import make_embedder, text_to_vector
+from vector_database_api_spark.functions.vector import (
+    cosine_similarity_np,
+    dot_product_np,
+    euclidean_distance_np,
+    norm2_np,
+)
 from vector_database_api_spark.operators import bm25 as bm25_mod
 from vector_database_api_spark.operators import ivf as ivf_mod
 from vector_database_api_spark.operators import lsh as lsh_mod
@@ -77,7 +97,11 @@ from vector_database_api_spark.operators import pq as pq_mod
 from vector_database_api_spark.operators import presentation as pres_mod
 from vector_database_api_spark.operators import rerank as rerank_mod
 from vector_database_api_spark.operators import sq as sq_mod
-from vector_database_api_spark.operators.filters import apply_metadata_filters
+from vector_database_api_spark.operators.filters import (
+    apply_metadata_filters,
+    exact_match,
+    filter_form,
+)
 from vector_database_api_spark.operators.knn import knn_brute_force
 
 # reference parity: IndexManager accepts exactly lsh|ivf (indexes.py:408-422)
@@ -89,6 +113,15 @@ VALID_INDEX_TYPES = ("lsh", "ivf")
 ALL_INDEX_TYPES = VALID_INDEX_TYPES + ("pq", "sq8", "bm25", "hybrid")
 # the kinds whose index is the keyword artifact (postings, doclens, stats)
 TEXT_KINDS = ("bm25", "hybrid")
+# the kinds search_timed can answer on the driver (None = brute force)
+DRIVER_KINDS = (None, "lsh", "ivf", "pq", "sq8")
+# search_timed's driver plane serves libraries of at most this many chunk
+# rows.  Measured on a 4-core box: the NumPy twins score 50 000 rows at
+# d=64 (cosine, distance and top-50) in 10 ms, median of 9, from a 24 MB
+# float64 copy, while a warm Spark search of a 250-row library costs
+# 170-1180 ms by kind.
+LOCAL_MAX_ROWS = 50_000
+_UNLOADED = object()  # a handle whose driver copy was not read yet
 
 
 def _writer(method):
@@ -112,13 +145,88 @@ class _Handle:
     the frozen (profile, array) of :meth:`VectorEngine._index_state`,
     and the resolved index tables — ``index`` for the vector kinds
     (None for an untrained IVF index), ``text`` = the (postings,
-    doclens, n_docs, avgdl) of the keyword kinds."""
+    doclens, n_docs, avgdl) of the keyword kinds.  ``local`` is the
+    driver-plane :class:`_DriverCopy`, None for a library served on
+    Spark only, ``_UNLOADED`` until the first ``search_timed``."""
 
     kind: str | None = None
     profile: dict[str, int] | None = None
     array: Any = None
     index: DataFrame | None = None
     text: tuple[DataFrame, DataFrame, int, float] | None = None
+    local: Any = _UNLOADED
+
+
+@dataclass(frozen=True)
+class _DriverCopy:
+    """A library's NumPy copy for the driver plane of
+    :meth:`VectorEngine.search_timed`.  The scored rows are the embedded
+    chunks (brute force, lsh) or the index rows (ivf, pq, sq8): their
+    ``ids``, ``vals`` (float64 embeddings in column-major order, or the
+    pq/sq8 codes) and ``na2`` (the embeddings' squared norms).
+    ``chunk_ids`` and ``chunk_meta`` are every chunk row's; ``rows`` are
+    the scored chunks' positions among them (brute force, lsh; the other
+    kinds semi-join on id).  ``keys``: lsh (table_idx, hash) -> scored
+    positions, ivf the cluster id of each scored row."""
+
+    dim: int
+    ids: np.ndarray
+    vals: np.ndarray
+    na2: np.ndarray | None
+    rows: np.ndarray | None
+    chunk_ids: np.ndarray
+    chunk_meta: list
+    keys: Any = None
+
+
+def _arrow_matrix(column: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray] | None:
+    """(positions of the non-NULL rows, their values as one (n, d)
+    matrix) of an Arrow list column; None when no row has a value or a
+    NULL element or a ragged length would leave the Spark plan's NULL
+    corners to a second implementation."""
+    arr = column.combine_chunks()
+    present = np.flatnonzero(~arr.is_null().to_numpy(zero_copy_only=False))
+    if not len(present):
+        return None
+    values = arr.flatten()
+    lengths = pc.list_value_length(arr).to_numpy(zero_copy_only=False)[present]
+    if values.null_count or (lengths != lengths[0]).any():
+        return None
+    return present, values.to_numpy().reshape(len(present), int(lengths[0]))
+
+
+def _embeddings(column: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray] | None:
+    """:func:`_arrow_matrix` of an embedding column as float64 in
+    column-major order (one contiguous array per dimension); None also
+    when a value is not finite."""
+    got = _arrow_matrix(column)
+    if got is None or not np.isfinite(got[1]).all():
+        return None
+    return got[0], np.asfortranarray(got[1], dtype=np.float64)
+
+
+def _top_rows(
+    ids: np.ndarray,
+    sim: np.ndarray,
+    dist: np.ndarray,
+    k: int,
+    threshold: float | None,
+) -> list[Row]:
+    """The Spark plan's ``ORDER BY similarity DESC, id LIMIT k`` and
+    post-top-k threshold over driver-scored rows (UTF-8 byte order of
+    the ids equals Python's code-point order)."""
+    cand = range(len(sim))
+    if len(sim) > k:
+        cut = np.partition(sim, len(sim) - k)[len(sim) - k]
+        cand = np.flatnonzero(sim >= cut)
+    top = sorted(cand, key=lambda i: (-sim[i], ids[i]))[:k]
+    rows = [
+        Row(id=ids[i], similarity=float(sim[i]), distance=float(dist[i]))
+        for i in top
+    ]
+    if threshold is None:
+        return rows
+    return [r for r in rows if r["similarity"] >= float(threshold)]
 
 
 class VectorEngine:
@@ -136,9 +244,13 @@ class VectorEngine:
     listing of its read, which a write leaves pointing at replaced
     files.  Single-writer contract: a process that writes the warehouse
     outside this engine (the streaming maintainers, another engine) is
-    not seen until a new ``VectorEngine`` is created on it.  One lock
-    guards the handles, the chunks table and the request-telemetry log,
-    so concurrent searches open each handle once."""
+    not seen until a new ``VectorEngine`` is created on it.  One
+    (reentrant) lock guards the handles, their driver-plane copies, the
+    chunks table and the request-telemetry log, so concurrent searches
+    open each handle and load each copy once.  ``search_timed`` serves
+    small vector libraries on the driver plane from that copy and
+    everything else through ``search()``'s Spark plan (module
+    docstring)."""
 
     def __init__(
         self,
@@ -154,7 +266,7 @@ class VectorEngine:
         self._search_metrics: list[dict[str, Any]] = []
         # serving handles and the resolved chunks table, dropped by every
         # writer (class docstring); the lock guards them and the ring
-        self._lock = threading.Lock()
+        self._lock = threading.RLock()
         self._handles: dict[str, _Handle] = {}
         self._chunk_table: DataFrame | None = None
         os.makedirs(warehouse, exist_ok=True)
@@ -195,6 +307,84 @@ class VectorEngine:
         if kind == "ivf" and array is None:
             return _Handle(kind, profile)  # untrained: no rows to read
         return _Handle(kind, profile, array, index=self.spark.read.parquet(path))
+
+    def _driver_copy(self, library_id: str) -> tuple[_Handle, _DriverCopy | None]:
+        """The library's handle and its driver-plane copy, loaded on the
+        first call after the last write (once, also under concurrent
+        requests)."""
+        with self._lock:
+            handle = self._handle(library_id)
+            if handle.local is _UNLOADED:
+                kind = handle.kind
+                servable = kind in DRIVER_KINDS and (
+                    kind != "ivf" or handle.array is not None
+                )
+                local = self._load_copy(library_id, handle) if servable else None
+                handle = self._handles[library_id] = dataclasses.replace(
+                    handle, local=local
+                )
+        return handle, handle.local
+
+    def _load_copy(self, library_id: str, handle: _Handle) -> _DriverCopy | None:
+        """One ``toArrow()`` of the library's chunks and, when they fit
+        in LOCAL_MAX_ROWS, one of its index; None keeps the library on
+        the Spark plane (``search_timed`` docstring)."""
+        kind = handle.kind
+        chunks = self.chunks(library_id)
+        if dict(chunks.dtypes).get("metadata") != "map<string,string>":
+            return None  # the exact-match twin reads a string map
+        tbl = (
+            chunks.select("id", "embedding", "metadata")
+            .limit(LOCAL_MAX_ROWS + 1)
+            .toArrow()
+        )
+        if tbl.num_rows > LOCAL_MAX_ROWS or tbl.column("id").null_count:
+            return None
+        emb = _embeddings(tbl.column("embedding"))
+        if emb is None:
+            return None
+        present, mat = emb
+        chunk_ids = np.array(tbl.column("id").to_pylist(), dtype=object)
+        chunk_meta = [
+            None if m is None else dict(m) for m in tbl.column("metadata").to_pylist()
+        ]
+        common = dict(dim=mat.shape[1], chunk_ids=chunk_ids, chunk_meta=chunk_meta)
+        if kind in (None, "lsh"):
+            ids = chunk_ids[present]
+            keys = None
+            if kind == "lsh":
+                at = defaultdict(list)
+                for pos, i in enumerate(ids):
+                    at[i].append(pos)
+                buckets = defaultdict(list)
+                index = handle.index.toArrow()
+                cols = ("id", "table_idx", "hash")
+                for i, t, h in zip(*(index.column(c).to_pylist() for c in cols)):
+                    buckets[(t, h)].extend(at.get(i, ()))
+                keys = {key: np.array(v, dtype=np.int64) for key, v in buckets.items()}
+            return _DriverCopy(
+                ids=ids, vals=mat, na2=norm2_np(mat), rows=present, keys=keys,
+                **common,
+            )
+        index = handle.index.toArrow()
+        ids = np.array(index.column("id").to_pylist(), dtype=object)
+        if kind == "ivf":
+            got = _embeddings(index.column("embedding"))
+            keys = index.column("cluster_id").to_numpy()
+        else:
+            got = _arrow_matrix(index.column("codes"))
+            keys = None
+        if (
+            got is None
+            or len(got[0]) != len(ids)
+            or index.column("id").null_count
+            or (kind == "ivf" and got[1].shape[1] != mat.shape[1])
+        ):
+            return None
+        na2 = norm2_np(got[1]) if kind == "ivf" else None
+        return _DriverCopy(
+            ids=ids, vals=got[1], na2=na2, rows=None, keys=keys, **common
+        )
 
     def _drop_handles(self) -> None:
         """End the write generation: the next read resolves afresh."""
@@ -323,14 +513,36 @@ class VectorEngine:
         """Append chunk rows; NULL embeddings are filled by the
         deterministic embedder (reference embeds on create,
         chunk_service.py:31).  Partitioned by library_id so every
-        library-scoped read prunes."""
+        library-scoped read prunes.  A library with a built index gets
+        its new rows encoded into it with the frozen state (reference
+        index-on-create, chunk_service.py:22-54); when no library has an
+        index, the append is the only work."""
         filled = rows.withColumn(
             "embedding",
             F.coalesce(F.col("embedding"), self._embedder(F.col("text"))),
         )
+        indexed = [
+            lib
+            for kind in ALL_INDEX_TYPES
+            if os.path.isdir(parent := os.path.join(self.warehouse, f"{kind}_index"))
+            for lib in os.listdir(parent)
+        ]
+        if indexed:
+            # the rows appended are the rows encoded
+            filled = filled.localCheckpoint()
         filled.write.mode("append").partitionBy("library_id").parquet(
             self._chunks_dir()
         )
+        if not indexed:
+            return
+        new = filled.filter(F.col("library_id").isin(indexed))
+        new_ids: dict[str, list[str]] = defaultdict(list)
+        for r in new.select("library_id", "id").collect():
+            new_ids[r["library_id"]].append(r["id"])
+        for library_id, ids in new_ids.items():
+            self._replace_index_rows(
+                library_id, ids, new.filter(F.col("library_id") == library_id)
+            )
 
     def chunks(self, library_id: str | None = None) -> DataFrame:
         """The chunks table (one library's rows when given), resolved once
@@ -686,20 +898,9 @@ class VectorEngine:
         if array is None:
             # untrained IVF index
             return self.spark.createDataFrame([], ivf_mod.RESULT_SCHEMA)
-        # probe with the layout the index was BUILT with (the persisted
-        # profile — e.g. the measured 'trained-p4' serving layout);
-        # config values remain the reference-parity fallback
-        ivf_params = profile or {}
-        index = ivf_mod.IVFIndex(
-            centroids=array,
-            index_df=handle.index,
-            trained=True,
-            nlist=ivf_params.get("nlist", self.config.ivf_nlist),
-            nprobe=ivf_params.get("nprobe", self.config.ivf_nprobe),
-        )
         return self._apply_threshold(
             ivf_mod.ivf_search(
-                index,
+                self._ivf_index(handle),
                 query,
                 query_vec,
                 k=k,
@@ -707,6 +908,20 @@ class VectorEngine:
                 metadata_filters=metadata_filters,
             ),
             similarity_threshold,
+        )
+
+    def _ivf_index(self, handle: _Handle) -> ivf_mod.IVFIndex:
+        """A trained IVF handle as the operator's index.  It probes with
+        the layout the index was BUILT with (the persisted profile — e.g.
+        the measured 'trained-p4' serving layout); config values remain
+        the reference-parity fallback."""
+        ivf_params = handle.profile or {}
+        return ivf_mod.IVFIndex(
+            centroids=handle.array,
+            index_df=handle.index,
+            trained=True,
+            nlist=ivf_params.get("nlist", self.config.ivf_nlist),
+            nprobe=ivf_params.get("nprobe", self.config.ivf_nprobe),
         )
 
     @staticmethod
@@ -726,9 +941,7 @@ class VectorEngine:
 
     # -- per-request telemetry (reference parity: search_service.py:59-66
     # wraps every search in wall-clock ms and returns execution_time_ms on
-    # the response; here the counters additionally ride the SAME job via
-    # DataFrame.observe — the operators/quality.py pattern on the read
-    # path, so telemetry never costs a second scan) --------------------
+    # the response) and the driver plane -------------------------------
 
     SEARCH_METRICS_CAP = 1024  # bounded ring: a long-lived service must
     # not grow driver memory with request count
@@ -746,62 +959,187 @@ class VectorEngine:
         fusion: str = "rrf",
     ) -> tuple[list, dict[str, Any]]:
         """``search()`` with the reference's per-request telemetry
-        (``execution_time_ms``): dispatches identically, attaches an
-        ``Observation`` (result count, best/worst score) to the same job,
-        runs the action, and returns ``(rows, metrics)``.  Each request's
-        metrics are also appended to a bounded in-memory log —
-        :meth:`search_metrics_df` exposes it as a DataFrame so serving
-        latency is QUERYABLE (percentiles, per-mode breakdowns), not just
-        printable."""
-        import time
+        (``execution_time_ms``): returns ``(rows, metrics)`` and appends
+        the metrics to a bounded in-memory log — :meth:`search_metrics_df`
+        exposes it as a DataFrame so serving latency is QUERYABLE
+        (percentiles, per-mode and per-plane breakdowns), not just
+        printable.
 
-        from pyspark.sql import Observation
+        Two planes answer it, and ``metrics["plane"]`` names the one used.
+        The reference scores every search in its own process with NumPy
+        (search_service.py:112-153); batch index building maps to Spark,
+        online serving of a small library does not.
 
-        result = self.search(
-            library_id,
-            query_text=query_text,
-            query_embedding=query_embedding,
-            k=k,
-            metadata_filters=metadata_filters,
-            similarity_threshold=similarity_threshold,
-            mode=mode,
-            ranking=ranking,
-            fusion=fusion,
-        )
-        score_col = self._score_column(result)
-        obs = Observation()
-        observed = result.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_results"),
-            F.max(F.col(score_col).cast("double")).alias("best_score"),
-            F.min(F.col(score_col).cast("double")).alias("worst_score"),
-        )
-        t0 = time.perf_counter()
-        rows = observed.collect()
-        elapsed_ms = (time.perf_counter() - t0) * 1000.0
+        - ``"driver"``: the library's handle keeps a NumPy copy of its
+          chunks and index (one ``toArrow()`` each, loaded by the first
+          ``search_timed`` of a write generation and dropped by every
+          writer) and the request is scored in NumPy with no Spark job.
+          The arithmetic is the Spark plan's operation for operation
+          (the ``*_np`` twins of functions/vector.py, the pq ADC kernels,
+          ``sq_query_weights``, ``srp_hashes``, ``probe_clusters``), so
+          ids, order and every float equal ``search().collect()``.
+          Rows, not a DataFrame: wrapping 50 result rows in
+          ``createDataFrame`` and collecting them costs about as much as
+          the Spark search itself (0.3-0.4 s measured), so n_results and
+          best/worst score are computed in Python.
+        - ``"spark"``: ``search()``'s plan runs with an ``Observation``
+          (result count, best/worst score) attached, so the counters ride
+          the same job via ``DataFrame.observe``.
+
+        The driver plane serves a request when all of these hold: the
+        built kind is lsh, trained ivf, pq, sq8 or none (brute force);
+        mode, ranking and fusion are the defaults; every filter key is
+        an exact-match key (``operators.filters.filter_form``); the
+        library has at most LOCAL_MAX_ROWS chunk rows; no stored
+        embedding has a NULL or non-finite element; and the query
+        vector is finite Python floats of the library's dimension.
+        Everything else, bm25 and hybrid included, takes the Spark plane.
+        ``execution_time_ms`` is the collect on the Spark plane and the
+        scoring on the driver plane; neither counts plan building or the
+        copy load."""
+        served = None
+        if (mode, ranking, fusion) == ("or", "bm25", "rrf"):
+            served = self._search_driver(
+                library_id, query_text, query_embedding, k,
+                metadata_filters, similarity_threshold,
+            )
+        if served is not None:
+            plane, (rows, elapsed_ms) = "driver", served
+            scores = [r["similarity"] for r in rows]
+            observed = {
+                "n_results": len(rows),
+                "best_score": max(scores, default=None),
+                "worst_score": min(scores, default=None),
+            }
+        else:
+            from pyspark.sql import Observation
+
+            plane = "spark"
+            result = self.search(
+                library_id,
+                query_text=query_text,
+                query_embedding=query_embedding,
+                k=k,
+                metadata_filters=metadata_filters,
+                similarity_threshold=similarity_threshold,
+                mode=mode,
+                ranking=ranking,
+                fusion=fusion,
+            )
+            score_col = self._score_column(result)
+            obs = Observation()
+            result = result.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_results"),
+                F.max(F.col(score_col).cast("double")).alias("best_score"),
+                F.min(F.col(score_col).cast("double")).alias("worst_score"),
+            )
+            t0 = time.perf_counter()
+            rows = result.collect()
+            elapsed_ms = (time.perf_counter() - t0) * 1000.0
+            observed = obs.get
         metrics: dict[str, Any] = {
             "library_id": library_id,
             "mode": mode,
             "ranking": ranking,
             "fusion": fusion,
+            "plane": plane,
             "execution_time_ms": round(elapsed_ms, 3),
-            **obs.get,
+            **observed,
         }
         with self._lock:
             self._search_metrics.append(metrics)
             del self._search_metrics[: -self.SEARCH_METRICS_CAP]
         return rows, metrics
 
+    def _search_driver(
+        self,
+        library_id: str,
+        query_text: str | None,
+        query_embedding: list[float] | None,
+        k: int | None,
+        metadata_filters: dict[str, Any] | None,
+        similarity_threshold: float | None,
+    ) -> tuple[list[Row], float] | None:
+        """The driver plane of :meth:`search_timed`: (rows, scoring ms),
+        or None when the request must take the Spark plane."""
+        filters = metadata_filters or {}
+        if any(filter_form(key) != "exact" for key in filters):
+            return None
+        handle, copy = self._driver_copy(library_id)
+        if copy is None:
+            return None
+        vec = self._query_vector(query_text, query_embedding)
+        # the Spark plan's query frame is array<float>: it accepts exactly
+        # Python floats, rounded to float32
+        if len(vec) != copy.dim or any(type(x) is not float for x in vec):
+            return None
+        qf = np.asarray(vec, dtype=np.float32).astype(np.float64)
+        if not np.isfinite(qf).all():
+            return None
+        q64 = np.asarray(vec, dtype=np.float64)  # the driver-side query_vec
+        k = self.config.clamp_k(k)
+        if similarity_threshold is None:
+            similarity_threshold = self.config.similarity_threshold
+        kind, n = handle.kind, len(copy.ids)
+
+        t0 = time.perf_counter()
+        keep = np.ones(n, dtype=bool)
+        if filters:
+            passes = np.array([exact_match(m, filters) for m in copy.chunk_meta])
+        if kind in (None, "lsh"):
+            if filters:
+                keep = passes[copy.rows]
+            if kind == "lsh":
+                # candidates: the union of the query's buckets, or every
+                # row when no bucket exists (counted before the filter)
+                planes = self._lsh_planes(handle.profile)
+                hashes = lsh_mod.srp_hashes(qf[None, :], planes)[0]
+                hits = [copy.keys[b] for b in enumerate(hashes) if b in copy.keys]
+                if hits:
+                    cand = np.zeros(n, dtype=bool)
+                    cand[np.concatenate(hits)] = True
+                    keep &= cand
+        elif filters or kind == "ivf":
+            # ivf_search always semi-joins the library's (filtered) chunk
+            # ids; pq and sq8 only when a filter is given
+            passing = set(copy.chunk_ids[passes] if filters else copy.chunk_ids)
+            keep = np.fromiter((i in passing for i in copy.ids), bool, n)
+        if kind == "ivf":
+            probed = ivf_mod.probe_clusters(self._ivf_index(handle), q64)
+            keep &= np.isin(copy.keys, probed)
+        pos = np.flatnonzero(keep)
+        ids, vals, na2 = copy.ids[pos], copy.vals, copy.na2
+        if len(pos) < n:
+            # pq codes stay row-major, as the UDF's np.vstack lays them
+            # out: adc_scores' row sum is pairwise along contiguous rows
+            vals = vals[pos] if kind == "pq" else np.asfortranarray(vals[pos])
+            na2 = None if na2 is None else na2[pos]
+        if kind == "pq":
+            sim = pq_mod.adc_scores(vals, pq_mod.adc_lut(q64, handle.array))
+        elif kind == "sq8":
+            w, bias = sq_mod.sq_query_weights(handle.array[0], handle.array[1], q64)
+            sim = bias + dot_product_np(vals, w)
+        else:
+            sim = cosine_similarity_np(vals, qf, na2)
+            dist = euclidean_distance_np(vals, qf)
+        if kind in ("pq", "sq8"):
+            # cosine -> euclidean on unit vectors, as search() does
+            dist = np.sqrt(np.maximum(2.0 - 2.0 * sim, 0.0))
+        rows = _top_rows(ids, sim, dist, k, similarity_threshold)
+        return rows, (time.perf_counter() - t0) * 1000.0
+
     def search_metrics_df(self) -> DataFrame:
         """The request-telemetry log as a DataFrame (newest last):
         (library_id, mode, ranking, fusion, execution_time_ms,
-        n_results, best_score, worst_score) — aggregate it like any
-        other table (p95 latency, per-mode means).  Bounded by
-        SEARCH_METRICS_CAP requests."""
+        n_results, best_score, worst_score, plane) — aggregate it like
+        any other table (p95 latency, per-mode or per-plane means).
+        Bounded by SEARCH_METRICS_CAP requests."""
         schema = (
             "library_id string, mode string, ranking string, "
             "fusion string, execution_time_ms double, "
-            "n_results bigint, best_score double, worst_score double"
+            "n_results bigint, best_score double, worst_score double, "
+            "plane string"
         )
         with self._lock:
             log = list(self._search_metrics)
@@ -816,6 +1154,7 @@ class VectorEngine:
                     int(m["n_results"]),
                     m["best_score"],
                     m["worst_score"],
+                    m.get("plane", "spark"),
                 )
                 for m in log
             ],
