@@ -1,7 +1,8 @@
-"""The driver plane of ``VectorEngine.search_timed``: on every kind it
-serves, its rows equal ``search().collect()`` as tuples (ids, order and
-every float) and its metrics equal the Spark plane's; requests it must
-not serve fall back to the Spark plane with the same rows."""
+"""The driver plane of ``VectorEngine.search_timed``: on every kind and
+bm25 scoring mode it serves, its rows equal ``search().collect()`` as
+tuples (ids, order and every float) and its metrics equal the Spark
+plane's; requests it must not serve fall back to the Spark plane with
+the same rows."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import itertools
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -46,19 +48,27 @@ PATHS = {
     "sq8": {"index_type": "sq8"},
     "brute": None,
 }
+# bm25 libraries: their postings in one scan partition, and in several
+# (built with shuffle-partition coalescing off, so the postings table is
+# one file per shuffle partition)
+TEXT_PATHS = {"bm25": True, "bm25-split": False}
 FILTERS = (None, {"lang": "de"}, {"lang": "xx"})
 KS = (1, 5, 100)
 THRESHOLDS = (None, 0.1)
+COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 
 
-def _rows(library_id, n=N, embedding=None):
+def _rows(library_id, n=N, embedding=None, words=None):
+    """Chunk rows of 6 words each, or of 1 to ``words`` words."""
     rng = np.random.default_rng(len(library_id))
     return [
         (
             f"{library_id}-{i:03d}",
             library_id,
             f"d{i}",
-            " ".join(rng.choice(WORDS, size=6)),
+            " ".join(
+                rng.choice(WORDS, size=int(rng.integers(1, words + 1)) if words else 6)
+            ),
             embedding(i) if embedding else None,
             {"lang": LANGS[i % 3], "n": str(i)},
             f"2024-01-{1 + i % 28:02d}",
@@ -74,14 +84,26 @@ def _spark_plane(engine):
     return other
 
 
+def _index_bm25(engine, library_id, coalesce):
+    spark = engine.spark
+    spark.conf.set(COALESCE, str(coalesce).lower())
+    try:
+        engine.index_library(library_id, "bm25")
+    finally:
+        spark.conf.set(COALESCE, "true")
+
+
 @pytest.fixture(scope="module")
 def engines(spark, tmp_path_factory):
     engine = VectorEngine(spark, str(tmp_path_factory.mktemp("local") / "wh"), CFG)
     rows = [r for lib in PATHS for r in _rows(lib)]
+    rows += [r for lib in TEXT_PATHS for r in _rows(lib, words=12)]
     engine.ingest_chunks(spark.createDataFrame(rows, SCHEMA))
     for lib, kwargs in PATHS.items():
         if kwargs is not None:
             engine.index_library(lib, **kwargs)
+    for lib, coalesce in TEXT_PATHS.items():
+        _index_bm25(engine, lib, coalesce)
     return engine, _spark_plane(engine)
 
 
@@ -121,6 +143,121 @@ def test_driver_plane_equals_spark_plan(engines, library_id):
         _same_plane_results(got, want)
 
 
+def _split_docs(copy):
+    """The documents whose postings span more than one scan partition."""
+    pairs = set(zip(copy.doc.tolist(), copy.part.tolist()))
+    per_doc = np.bincount([d for d, _ in pairs])
+    return int((per_doc > 1).sum())
+
+
+@pytest.mark.parametrize("library_id", list(TEXT_PATHS))
+@pytest.mark.parametrize("ranking", ["bm25", "ql"])
+@pytest.mark.parametrize("mode", ["or", "and"])
+def test_bm25_driver_plane_equals_spark_plan(engines, library_id, mode, ranking):
+    """Every (filter, k, threshold) case of a bm25 scoring mode; on the
+    split library most documents' postings span several scan
+    partitions, so the plan's partial and final sums both show."""
+    engine, spark_plane = engines
+    cut = kept = 0
+    for filters, k, thresholded in itertools.product(FILTERS, KS, (False, True)):
+        args = dict(
+            query_text="python vector garden",
+            k=k,
+            metadata_filters=filters,
+            mode=mode,
+            ranking=ranking,
+        )
+        if thresholded:
+            # the middle score of the unthresholded result
+            scores = [r[1] for r in engine.search_timed(library_id, **args)[0]]
+            args["similarity_threshold"] = scores[len(scores) // 2] if scores else 0.0
+        got = engine.search_timed(library_id, **args)
+        want = spark_plane.search_timed(library_id, **args)
+        assert (got[1]["plane"], want[1]["plane"]) == ("driver", "spark")
+        _same_plane_results(got, want)
+        if thresholded:
+            cut += len(got[0]) < len(scores)
+            kept += bool(got[0])
+    assert cut and kept  # the threshold cuts some results and keeps some
+    copy = engine._handle(library_id).local
+    if TEXT_PATHS[library_id]:
+        assert set(copy.part.tolist()) == {0}
+    else:
+        assert _split_docs(copy) > N // 2
+
+
+def test_bm25_driver_plane_after_writes(spark, tmp_path):
+    """A split library after a text update and a delete, which append
+    the rewritten postings as more files; once with the search plans
+    run with coalescing off too."""
+    engine = VectorEngine(spark, str(tmp_path / "wh"), config=CFG)
+    engine.ingest_chunks(spark.createDataFrame(_rows("w", words=12), SCHEMA))
+    _index_bm25(engine, "w", coalesce=False)
+
+    def check():
+        spark_plane = _spark_plane(engine)  # opened after the writes
+        for mode, ranking, filters, k in itertools.product(
+            ("or", "and"), ("bm25", "ql"), FILTERS[:2], (5, 100)
+        ):
+            args = dict(
+                query_text="python vector garden spark", k=k,
+                metadata_filters=filters, mode=mode, ranking=ranking,
+            )
+            got = engine.search_timed("w", **args)
+            assert got[1]["plane"] == "driver"
+            _same_plane_results(got, spark_plane.search_timed("w", **args))
+
+    check()
+    engine.update_chunk_texts("w", {"w-003": "python python garden", "w-010": "spark"})
+    engine.delete_chunks("w", ["w-004", "w-011"])
+    check()
+    spark.conf.set(COALESCE, "false")
+    try:
+        check()
+    finally:
+        spark.conf.set(COALESCE, "true")
+
+
+def test_bm25_driver_plane_edge_cases(engines, spark, tmp_path):
+    """A blank query, absent terms, a text-only library whose chunks have
+    NULL embeddings, and a request without query_text, which raises the
+    same ValueError on both planes."""
+    engine, spark_plane = engines
+    for text in ("   ", "zebra", "python zebra", "Python  VECTOR python"):
+        for mode, ranking in itertools.product(("or", "and"), ("bm25", "ql")):
+            args = dict(query_text=text, k=10, mode=mode, ranking=ranking)
+            got = engine.search_timed("bm25", **args)
+            assert got[1]["plane"] == "driver"
+            _same_plane_results(got, spark_plane.search_timed("bm25", **args))
+    for eng in (engine, spark_plane):
+        with pytest.raises(ValueError, match="a bm25 index searches by query_text"):
+            eng.search_timed("bm25", query_embedding=[0.5] * 16, k=5)
+
+    text_only = VectorEngine(spark, str(tmp_path / "wh"), config=CFG)
+    text_only._embedder = lambda text: F.lit(None).cast("array<float>")
+    text_only.ingest_chunks(spark.createDataFrame(_rows("t", words=12), SCHEMA))
+    text_only.index_library("t", "bm25")
+    assert text_only.chunks("t").filter(F.col("embedding").isNotNull()).count() == 0
+    for mode, ranking in itertools.product(("or", "and"), ("bm25", "ql")):
+        args = dict(
+            query_text="river stone", k=20, mode=mode, ranking=ranking,
+            metadata_filters={"lang": "fr"},
+        )
+        got = text_only.search_timed("t", **args)
+        assert got[1]["plane"] == "driver" and got[0]
+        _same_plane_results(got, _spark_plane(text_only).search_timed("t", **args))
+
+
+def test_pruned_modes_take_the_spark_plane(engines):
+    """maxscore and blockmax keep the Spark plane on a driver-served
+    bm25 library."""
+    engine, _ = engines
+    for mode in ("maxscore", "blockmax"):
+        assert _falls_back(
+            engine, "bm25-split", query_text="python vector garden", k=5, mode=mode
+        )
+
+
 def _falls_back(engine, library_id, **args):
     rows, metrics = engine.search_timed(library_id, **args)
     assert metrics["plane"] == "spark"
@@ -136,7 +273,7 @@ def _falls_back(engine, library_id, **args):
 )
 def test_non_exact_filters_take_the_spark_plane(engines, filters):
     engine, _ = engines
-    for library_id in ("lsh-tuned", "pq", "brute"):
+    for library_id in ("lsh-tuned", "pq", "brute", "bm25"):
         assert _falls_back(
             engine, library_id, query_text="river stone", k=10,
             metadata_filters=filters,

@@ -41,6 +41,7 @@ B = 0.75
 # contiguous-range granule is queries._BMW_BLOCK
 BLOCKMAX_BLOCKS = 64
 RRF_K = 60  # the standard RRF constant, shared by the single and batch paths
+QL_MU = 2000.0  # Dirichlet prior of the served query-likelihood ranking
 
 
 def tokens_expr(text_col: str) -> Column:
@@ -87,6 +88,59 @@ def tokenize_query(text: str) -> list[str]:
     return [t for t in dict.fromkeys(text.lower().split(" ")) if t]
 
 
+def _bm25_idf(n_docs: int) -> Column:
+    """Lucene's idf ln(1 + (N - df + 0.5) / (df + 0.5)) of a ``df`` column."""
+    return F.log(
+        F.lit(1.0)
+        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+
+
+def _bm25_tf_norm(avgdl: float, k1: float, b: float) -> Column:
+    """BM25's saturated, length-normalised ``tf`` of a posting whose
+    document length is ``dl``."""
+    tf = F.col("tf").cast("double")
+    return (
+        tf
+        * (k1 + 1.0)
+        / (tf + k1 * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl))))
+    )
+
+
+def bm25_contrib(n_docs: int, avgdl: float, k1: float = K1, b: float = B) -> Column:
+    """One posting's BM25 contribution from its term's ``df`` and its own
+    ``tf`` and ``dl`` columns: the one expression the scoring operators
+    here and the driver-plane copy of ``service.py`` evaluate, so every
+    plane sums the same doubles."""
+    return _bm25_idf(n_docs) * _bm25_tf_norm(avgdl, k1, b)
+
+
+def ql_posting_exprs(total_tokens: float, mu: float) -> tuple[Column, Column]:
+    """(matched, lp) of a posting joined to its term's collection
+    frequency ``cf``: the Dirichlet matched-term part
+    ln(1 + tf / (mu * p_t)) and the term's ln(mu * p_t), with
+    p_t = cf / total_tokens (:func:`ql_dirichlet_search`)."""
+    mu_p = F.lit(float(mu)) * (F.col("cf") / F.lit(float(total_tokens)))
+    return F.log(F.lit(1.0) + F.col("tf").cast("double") / mu_p), F.log(mu_p)
+
+
+def ql_doc_norm(mu: float) -> Column:
+    """ln(dl + mu) of a ``dl`` column: the per-document QL normaliser."""
+    return F.log(F.col("dl").cast("double") + F.lit(float(mu)))
+
+
+def ql_model_constant(lp_by_term: dict[str, float], terms: list[str]) -> tuple[float, int]:
+    """(sum_t ln(mu * p_t), number of model terms) over the query terms
+    present in ``lp_by_term``, added one by one in query-term order, so
+    the constant does not depend on an aggregate's output order."""
+    lp_sum, n_model_terms = 0.0, 0
+    for t in terms:
+        if t in lp_by_term:
+            lp_sum += lp_by_term[t]
+            n_model_terms += 1
+    return lp_sum, n_model_terms
+
+
 def bm25_search(
     postings: DataFrame,
     doclens: DataFrame,
@@ -129,16 +183,7 @@ def bm25_search(
     df_t = hits.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf = F.col("tf").cast("double")
-    contrib = idf * (
-        tf
-        * (k1 + 1.0)
-        / (tf + k1 * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl))))
-    )
+    contrib = bm25_contrib(n_docs, avgdl, k1, b)
     scored = (
         hits.join(F.broadcast(df_t), "term")
         .join(doclens, "id")
@@ -229,16 +274,7 @@ def bm25_batch_search(
     )
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf = F.col("tf").cast("double")
-    contrib = idf * (
-        tf
-        * (k1 + 1.0)
-        / (tf + k1 * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl))))
-    )
+    contrib = bm25_contrib(n_docs, avgdl, k1, b)
     scored = (
         hits.join(F.broadcast(df_t), "term")
         .join(doclens, "id")
@@ -316,16 +352,7 @@ def bm25_maxscore_search(
     df_t = hits.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf = F.col("tf").cast("double")
-    contrib_expr = idf * (
-        tf
-        * (k1 + 1.0)
-        / (tf + k1 * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl))))
-    )
+    contrib_expr = bm25_contrib(n_docs, avgdl, k1, b)
     contribs = (
         hits.join(F.broadcast(df_t), "term")
         .join(doclens, "id")
@@ -512,7 +539,7 @@ def ql_dirichlet_search(
     query_terms: list[str],
     k: int = 10,
     candidate_ids: DataFrame | None = None,
-    mu: float = 2000.0,
+    mu: float = QL_MU,
     after: tuple | None = None,
     operator: str = "or",
 ) -> DataFrame:
@@ -551,29 +578,22 @@ def ql_dirichlet_search(
     cf_t = hits.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    mu = float(mu)
-    mu_p = F.lit(mu) * (F.col("cf") / F.lit(float(total_tokens)))
-    matched = F.log(F.lit(1.0) + F.col("tf").cast("double") / mu_p)
+    matched, lp = ql_posting_exprs(total_tokens, mu)
     per_doc = (
         hits.join(F.broadcast(cf_t), "term")
-        .select("id", matched.alias("m"), F.log(mu_p).alias("lp"))
+        .select("id", matched.alias("m"))
         .groupBy("id")
         .agg(
             F.sum("m").alias("m_sum"),
             F.count(F.lit(1)).alias("_matched"),
         )
     )
-    # sum_t ln(mu*p_t) over the model's terms (cf_t > 0), a 1-row scalar
-    const_row = (
-        cf_t.filter(F.col("cf") > 0)
-        .agg(
-            F.sum(F.log(F.lit(mu) * (F.col("cf") / F.lit(float(total_tokens)))))
-            .alias("lp_sum"),
-            F.count(F.lit(1)).alias("n_model_terms"),
-        )
-        .collect()[0]
+    # sum_t ln(mu*p_t) over the model's terms (cf_t > 0): |terms| rows
+    lp_rows = cf_t.filter(F.col("cf") > 0).select("term", lp.alias("lp")).collect()
+    lp_sum, n_model_terms = ql_model_constant(
+        {r["term"]: r["lp"] for r in lp_rows}, terms
     )
-    if const_row["n_model_terms"] == 0:
+    if n_model_terms == 0:
         return spark.createDataFrame([], "id string, score double")
     scored = (
         per_doc.join(doclens, "id")
@@ -582,9 +602,8 @@ def ql_dirichlet_search(
             "_matched",
             (
                 F.col("m_sum")
-                + F.lit(float(const_row["lp_sum"]))
-                - F.lit(float(const_row["n_model_terms"]))
-                * F.log(F.col("dl").cast("double") + F.lit(mu))
+                + F.lit(lp_sum)
+                - F.lit(float(n_model_terms)) * ql_doc_norm(mu)
             ).alias("score"),
         )
     )
@@ -681,24 +700,7 @@ def rm3_search(
     )
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("wt")
-        * idf
-        * (
-            tf
-            * (k1 + 1.0)
-            / (
-                tf
-                + k1
-                * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl)))
-            )
-        )
-    )
+    contrib = F.col("wt") * _bm25_idf(n_docs) * _bm25_tf_norm(avgdl, k1, b)
     return (
         hits.join(F.broadcast(df_t), "term")
         .join(doclens, "id")

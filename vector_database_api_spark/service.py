@@ -51,10 +51,15 @@ Two serving planes.  Spark is the build plane and serves every
 DataFrame-returning read: ``search()`` returns its plan.
 ``search_timed`` answers a request on the driver plane instead when the
 library is small (at most ``LOCAL_MAX_ROWS`` chunk rows) and its kind is
-lsh, trained ivf, pq, sq8 or none: the handle keeps a NumPy copy of the
-chunks and index, loaded once per write generation, and the request is
-scored in NumPy with the plan's arithmetic, so the rows are bit-equal to
-``search().collect()`` (selection rule in ``search_timed``).
+lsh, trained ivf, pq, sq8, none, or bm25 in the scoring modes ("or",
+"and"; ranking bm25 or ql): the handle keeps a NumPy copy of the chunks
+and index, loaded once per write generation, and the request is scored
+in NumPy with the plan's arithmetic, so the rows are bit-equal to
+``search().collect()``.  A bm25 copy holds every posting's contribution
+as Spark computed it, and the driver only adds them in the plan's
+aggregation order, filters, sorts and cuts.  The pruned bm25 modes
+(maxscore, blockmax) keep the Spark plane (selection rule and reasons in
+``search_timed``).
 """
 
 from __future__ import annotations
@@ -114,7 +119,7 @@ ALL_INDEX_TYPES = VALID_INDEX_TYPES + ("pq", "sq8", "bm25", "hybrid")
 # the kinds whose index is the keyword artifact (postings, doclens, stats)
 TEXT_KINDS = ("bm25", "hybrid")
 # the kinds search_timed can answer on the driver (None = brute force)
-DRIVER_KINDS = (None, "lsh", "ivf", "pq", "sq8")
+DRIVER_KINDS = (None, "lsh", "ivf", "pq", "sq8", "bm25")
 # search_timed's driver plane serves libraries of at most this many chunk
 # rows.  Measured on a 4-core box: the NumPy twins score 50 000 rows at
 # d=64 (cosine, distance and top-50) in 10 ms, median of 9, from a 24 MB
@@ -167,7 +172,8 @@ class _DriverCopy:
     ``chunk_ids`` and ``chunk_meta`` are every chunk row's; ``rows`` are
     the scored chunks' positions among them (brute force, lsh; the other
     kinds semi-join on id).  ``keys``: lsh (table_idx, hash) -> scored
-    positions, ivf the cluster id of each scored row."""
+    positions, ivf the cluster id of each scored row.  A bm25 library's
+    copy is a :class:`_PostingsCopy` instead."""
 
     dim: int
     ids: np.ndarray
@@ -177,6 +183,36 @@ class _DriverCopy:
     chunk_ids: np.ndarray
     chunk_meta: list
     keys: Any = None
+
+
+@dataclass(frozen=True)
+class _PostingsCopy:
+    """A bm25 library's copy for the driver plane: every posting with
+    its BM25 contribution (``bm25``) and QL matched term (``ql``), both
+    computed by Spark with the operators' own Column expressions
+    (``operators/bm25.py``; Spark's ``log`` is ``StrictMath.log``, which
+    NumPy's may miss by an ulp).  Postings are grouped by term, term
+    ``t``'s being ``[starts[terms[t]], starts[terms[t] + 1])``, each with
+    its document (``doc``, a position in ``doc_ids``), the postings
+    scan's ``spark_partition_id()`` (``part``) and
+    ``monotonically_increasing_id()`` (``seq``: scan order across
+    partitions).  ``lp`` is each term's ln(mu * p_t), ``norm`` each
+    document's ln(dl + mu); ``chunk_doc`` maps every chunk row to its
+    document (-1 when it has no posting) and ``chunk_meta`` holds every
+    chunk row's metadata."""
+
+    terms: dict[str, int]
+    starts: np.ndarray
+    doc: np.ndarray
+    part: np.ndarray
+    seq: np.ndarray
+    bm25: np.ndarray
+    ql: np.ndarray
+    lp: np.ndarray
+    doc_ids: np.ndarray
+    norm: np.ndarray
+    chunk_doc: np.ndarray
+    chunk_meta: list
 
 
 def _arrow_matrix(column: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray] | None:
@@ -207,26 +243,46 @@ def _embeddings(column: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray] | None
 
 def _top_rows(
     ids: np.ndarray,
-    sim: np.ndarray,
-    dist: np.ndarray,
+    by: np.ndarray,
     k: int,
     threshold: float | None,
+    **columns: np.ndarray,
 ) -> list[Row]:
-    """The Spark plan's ``ORDER BY similarity DESC, id LIMIT k`` and
-    post-top-k threshold over driver-scored rows (UTF-8 byte order of
-    the ids equals Python's code-point order)."""
-    cand = range(len(sim))
-    if len(sim) > k:
-        cut = np.partition(sim, len(sim) - k)[len(sim) - k]
-        cand = np.flatnonzero(sim >= cut)
-    top = sorted(cand, key=lambda i: (-sim[i], ids[i]))[:k]
-    rows = [
-        Row(id=ids[i], similarity=float(sim[i]), distance=float(dist[i]))
+    """The Spark plan's ``ORDER BY <by> DESC, id LIMIT k`` and post-top-k
+    threshold on ``by`` over driver-scored rows, as Rows of ``id`` and
+    ``columns`` (UTF-8 byte order of the ids equals Python's code-point
+    order)."""
+    cand = range(len(by))
+    if len(by) > k:
+        cut = np.partition(by, len(by) - k)[len(by) - k]
+        cand = np.flatnonzero(by >= cut)
+    top = sorted(cand, key=lambda i: (-by[i], ids[i]))[:k]
+    if threshold is not None:
+        top = [i for i in top if by[i] >= float(threshold)]
+    return [
+        Row(id=ids[i], **{name: float(col[i]) for name, col in columns.items()})
         for i in top
     ]
-    if threshold is None:
-        return rows
-    return [r for r in rows if r["similarity"] >= float(threshold)]
+
+
+def _run_sums(vals: np.ndarray, *keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sum, first position) of each run of rows with equal ``keys``, the
+    rows of a run added left to right from 0.0, as Spark's ``sum``
+    updates its buffer.  One vector add per position in a run, so the
+    loop is as long as the longest run."""
+    n = len(vals)
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    for key in keys:
+        new[1:] |= key[1:] != key[:-1]
+    starts = np.flatnonzero(new)
+    run = np.cumsum(new) - 1
+    pos = np.arange(n) - starts[run]
+    sums = np.zeros(len(starts))
+    for r in range(int(pos.max()) + 1 if n else 0):
+        at = pos == r
+        sums[run[at]] += vals[at]
+    return sums, starts
 
 
 class VectorEngine:
@@ -248,9 +304,9 @@ class VectorEngine:
     (reentrant) lock guards the handles, their driver-plane copies, the
     chunks table and the request-telemetry log, so concurrent searches
     open each handle and load each copy once.  ``search_timed`` serves
-    small vector libraries on the driver plane from that copy and
-    everything else through ``search()``'s Spark plan (module
-    docstring)."""
+    small vector libraries and small bm25 libraries' scoring modes on
+    the driver plane from that copy and everything else through
+    ``search()``'s Spark plan (module docstring)."""
 
     def __init__(
         self,
@@ -325,7 +381,9 @@ class VectorEngine:
                 )
         return handle, handle.local
 
-    def _load_copy(self, library_id: str, handle: _Handle) -> _DriverCopy | None:
+    def _load_copy(
+        self, library_id: str, handle: _Handle
+    ) -> _DriverCopy | _PostingsCopy | None:
         """One ``toArrow()`` of the library's chunks and, when they fit
         in LOCAL_MAX_ROWS, one of its index; None keeps the library on
         the Spark plane (``search_timed`` docstring)."""
@@ -333,21 +391,20 @@ class VectorEngine:
         chunks = self.chunks(library_id)
         if dict(chunks.dtypes).get("metadata") != "map<string,string>":
             return None  # the exact-match twin reads a string map
-        tbl = (
-            chunks.select("id", "embedding", "metadata")
-            .limit(LOCAL_MAX_ROWS + 1)
-            .toArrow()
-        )
+        cols = ("id", "metadata") if kind == "bm25" else ("id", "embedding", "metadata")
+        tbl = chunks.select(*cols).limit(LOCAL_MAX_ROWS + 1).toArrow()
         if tbl.num_rows > LOCAL_MAX_ROWS or tbl.column("id").null_count:
             return None
-        emb = _embeddings(tbl.column("embedding"))
-        if emb is None:
-            return None
-        present, mat = emb
         chunk_ids = np.array(tbl.column("id").to_pylist(), dtype=object)
         chunk_meta = [
             None if m is None else dict(m) for m in tbl.column("metadata").to_pylist()
         ]
+        if kind == "bm25":
+            return self._load_postings(handle, chunk_ids, chunk_meta)
+        emb = _embeddings(tbl.column("embedding"))
+        if emb is None:
+            return None
+        present, mat = emb
         common = dict(dim=mat.shape[1], chunk_ids=chunk_ids, chunk_meta=chunk_meta)
         if kind in (None, "lsh"):
             ids = chunk_ids[present]
@@ -384,6 +441,73 @@ class VectorEngine:
         na2 = norm2_np(got[1]) if kind == "ivf" else None
         return _DriverCopy(
             ids=ids, vals=got[1], na2=na2, rows=None, keys=keys, **common
+        )
+
+    def _load_postings(
+        self, handle: _Handle, chunk_ids: np.ndarray, chunk_meta: list
+    ) -> _PostingsCopy | None:
+        """One query over the keyword index: every posting, tagged with
+        its scan partition and position before anything else runs, joined
+        to its term's df and cf and its document's dl, and scored with
+        the operators' expressions.  None when a posting has no doclens
+        row or a document has two: the plan's inner join would drop or
+        repeat that posting."""
+        postings, doclens, n_docs, avgdl = handle.text
+        mu = bm25_mod.QL_MU
+        matched, lp = bm25_mod.ql_posting_exprs(float(n_docs) * float(avgdl), mu)
+        stats = postings.groupBy("term").agg(
+            F.count(F.lit(1)).cast("double").alias("df"),
+            F.sum("tf").cast("double").alias("cf"),
+        )
+        scan = postings.select(
+            "term",
+            "id",
+            "tf",
+            F.spark_partition_id().alias("part"),
+            F.monotonically_increasing_id().alias("seq"),
+        )
+        if n_docs == 0:
+            scan = scan.limit(0)  # both rankings answer nothing; p_t is 0/0
+        tbl = (
+            scan.join(F.broadcast(stats), "term")
+            .join(F.broadcast(doclens), "id", "left")
+            .select(
+                "term",
+                "id",
+                "part",
+                "seq",
+                bm25_mod.bm25_contrib(n_docs, avgdl).alias("bm25"),
+                matched.alias("ql"),
+                lp.alias("lp"),
+                bm25_mod.ql_doc_norm(mu).alias("norm"),
+            )
+            .toArrow()
+        )
+        seq = tbl.column("seq").to_numpy()
+        if any(c.null_count for c in tbl.columns) or len(np.unique(seq)) < len(seq):
+            return None
+        terms = tbl.column("term").combine_chunks().dictionary_encode()
+        docs = tbl.column("id").combine_chunks().dictionary_encode()
+        term, doc = terms.indices.to_numpy(), docs.indices.to_numpy()
+        order = np.lexsort((seq, term))
+        lp_of, norm_of = (np.zeros(len(e.dictionary)) for e in (terms, docs))
+        lp_of[term] = tbl.column("lp").to_numpy()
+        norm_of[doc] = tbl.column("norm").to_numpy()
+        doc_ids = np.array(docs.dictionary.to_pylist(), dtype=object)
+        at = {d: i for i, d in enumerate(doc_ids)}
+        return _PostingsCopy(
+            terms={t: i for i, t in enumerate(terms.dictionary.to_pylist())},
+            starts=np.r_[0, np.cumsum(np.bincount(term, minlength=len(lp_of)))],
+            doc=doc[order],
+            part=tbl.column("part").to_numpy()[order],
+            seq=seq[order],
+            bm25=tbl.column("bm25").to_numpy()[order],
+            ql=tbl.column("ql").to_numpy()[order],
+            lp=lp_of,
+            doc_ids=doc_ids,
+            norm=norm_of,
+            chunk_doc=np.array([at.get(c, -1) for c in chunk_ids], dtype=np.int64),
+            chunk_meta=chunk_meta,
         )
 
     def _drop_handles(self) -> None:
@@ -986,26 +1110,44 @@ class VectorEngine:
           (result count, best/worst score) attached, so the counters ride
           the same job via ``DataFrame.observe``.
 
-        The driver plane serves a request when all of these hold: the
-        built kind is lsh, trained ivf, pq, sq8 or none (brute force);
-        mode, ranking and fusion are the defaults; every filter key is
-        an exact-match key (``operators.filters.filter_form``); the
-        library has at most LOCAL_MAX_ROWS chunk rows; no stored
-        embedding has a NULL or non-finite element; and the query
-        vector is finite Python floats of the library's dimension.
-        Everything else, bm25 and hybrid included, takes the Spark plane.
+        The driver plane serves a request when every filter key is an
+        exact-match key (``operators.filters.filter_form``), the library
+        has at most LOCAL_MAX_ROWS chunk rows, and one of these holds:
+
+        - the built kind is lsh, trained ivf, pq, sq8 or none (brute
+          force); mode, ranking and fusion are the defaults; no stored
+          embedding has a NULL or non-finite element; and the query
+          vector is finite Python floats of the library's dimension;
+        - the built kind is bm25, mode is "or" or "and", ranking is
+          "bm25" or "ql", fusion is the default and ``query_text`` is
+          given.  The copy is one query over the keyword index that
+          scores every posting with the operators' own Column
+          expressions (Spark's ``log`` is ``StrictMath.log``) and records
+          the postings scan's partition and row order.  The driver sums a
+          document's contributions as the plan's ``HashAggregate`` does
+          (partial sums per scan partition in scan order, then the
+          partials in partition order), so every score is bit-equal; it
+          then filters, sorts and cuts.
+
+        Everything else takes the Spark plane: hybrid, other filter
+        forms, and the pruned bm25 modes "maxscore" and "blockmax".  The
+        pruned modes could be answered from the same copy; they stay on
+        Spark because ``perfbench``'s serve-read check re-runs each
+        pruned request's "or" reference on Spark after the timed window,
+        so serving them faster would multiply that check's cost.
         ``execution_time_ms`` is the collect on the Spark plane and the
         scoring on the driver plane; neither counts plan building or the
         copy load."""
         served = None
-        if (mode, ranking, fusion) == ("or", "bm25", "rrf"):
+        # bm25's scoring modes; the pruned ones keep the Spark plane
+        if fusion == "rrf" and mode in ("or", "and") and ranking in ("bm25", "ql"):
             served = self._search_driver(
                 library_id, query_text, query_embedding, k,
-                metadata_filters, similarity_threshold,
+                metadata_filters, similarity_threshold, mode, ranking,
             )
         if served is not None:
             plane, (rows, elapsed_ms) = "driver", served
-            scores = [r["similarity"] for r in rows]
+            scores = [r[1] for r in rows]
             observed = {
                 "n_results": len(rows),
                 "best_score": max(scores, default=None),
@@ -1060,6 +1202,8 @@ class VectorEngine:
         k: int | None,
         metadata_filters: dict[str, Any] | None,
         similarity_threshold: float | None,
+        mode: str,
+        ranking: str,
     ) -> tuple[list[Row], float] | None:
         """The driver plane of :meth:`search_timed`: (rows, scoring ms),
         or None when the request must take the Spark plane."""
@@ -1069,6 +1213,19 @@ class VectorEngine:
         handle, copy = self._driver_copy(library_id)
         if copy is None:
             return None
+        k = self.config.clamp_k(k)
+        if similarity_threshold is None:
+            similarity_threshold = self.config.similarity_threshold
+        if handle.kind == "bm25":
+            if query_text is None:
+                return None  # search() raises
+            t0 = time.perf_counter()
+            rows = self._search_postings(
+                copy, query_text, k, filters, similarity_threshold, mode, ranking
+            )
+            return rows, (time.perf_counter() - t0) * 1000.0
+        if (mode, ranking) != ("or", "bm25"):
+            return None  # search() raises
         vec = self._query_vector(query_text, query_embedding)
         # the Spark plan's query frame is array<float>: it accepts exactly
         # Python floats, rounded to float32
@@ -1078,9 +1235,6 @@ class VectorEngine:
         if not np.isfinite(qf).all():
             return None
         q64 = np.asarray(vec, dtype=np.float64)  # the driver-side query_vec
-        k = self.config.clamp_k(k)
-        if similarity_threshold is None:
-            similarity_threshold = self.config.similarity_threshold
         kind, n = handle.kind, len(copy.ids)
 
         t0 = time.perf_counter()
@@ -1126,8 +1280,55 @@ class VectorEngine:
         if kind in ("pq", "sq8"):
             # cosine -> euclidean on unit vectors, as search() does
             dist = np.sqrt(np.maximum(2.0 - 2.0 * sim, 0.0))
-        rows = _top_rows(ids, sim, dist, k, similarity_threshold)
+        rows = _top_rows(
+            ids, sim, k, similarity_threshold, similarity=sim, distance=dist
+        )
         return rows, (time.perf_counter() - t0) * 1000.0
+
+    @staticmethod
+    def _search_postings(
+        copy: _PostingsCopy,
+        query_text: str,
+        k: int,
+        filters: dict[str, Any],
+        threshold: float | None,
+        mode: str,
+        ranking: str,
+    ) -> list[Row]:
+        """``_bm25_topk``'s plan over the copy, adding, filtering, sorting
+        and cutting only.  The plan sums a document's contributions in
+        its ``HashAggregate``: a partial sum per postings-scan partition,
+        in scan order, then the partials in partition order; so the
+        query terms' postings are put in scan order, summed per
+        (document, partition) run and the runs summed per document."""
+        terms = bm25_mod.tokenize_query(query_text)
+        have = [copy.terms[t] for t in terms if t in copy.terms]
+        if not have or (mode == "and" and len(have) < len(terms)):
+            return []
+        sel = np.concatenate([np.arange(copy.starts[i], copy.starts[i + 1]) for i in have])
+        if filters:
+            passes = np.array([exact_match(m, filters) for m in copy.chunk_meta], bool)
+            hit = copy.chunk_doc[passes]
+            keep = np.zeros(len(copy.doc_ids), dtype=bool)
+            keep[hit[hit >= 0]] = True
+            sel = sel[keep[copy.doc[sel]]]
+        sel = sel[np.argsort(copy.seq[sel])]
+        vals = (copy.ql if ranking == "ql" else copy.bm25)[sel]
+        by_doc = np.argsort(copy.doc[sel], kind="stable")
+        doc, part, vals = copy.doc[sel][by_doc], copy.part[sel][by_doc], vals[by_doc]
+        partial, runs = _run_sums(vals, doc, part)
+        score, firsts = _run_sums(partial, doc[runs])
+        docs = doc[runs][firsts]
+        if mode == "and":
+            full = np.bincount(doc, minlength=len(copy.doc_ids))[docs] == len(terms)
+            docs, score = docs[full], score[full]
+        if ranking == "ql":
+            lp_sum, n_model_terms = bm25_mod.ql_model_constant(
+                {t: float(copy.lp[copy.terms[t]]) for t in terms if t in copy.terms},
+                terms,
+            )
+            score = (score + lp_sum) - float(n_model_terms) * copy.norm[docs]
+        return _top_rows(copy.doc_ids[docs], score, k, threshold, score=score)
 
     def search_metrics_df(self) -> DataFrame:
         """The request-telemetry log as a DataFrame (newest last):
