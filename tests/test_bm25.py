@@ -221,11 +221,11 @@ def test_streaming_bm25_index_matches_batch(spark, tmp_path):
 
 def test_maxscore_equals_plain_on_random_corpora(spark):
     """Lossless-pruning sweep: bm25_maxscore_search must return the SAME
-    ranked ids as bm25_search on seeded random corpora for adversarial
-    term sets — single term (theta prunes nothing it shouldn't), all
-    common terms (bounds nearly tie), rare+common mix (the real win),
-    corpus-absent term (df=0 path), fewer-than-k matches (theta = -inf,
-    pruning a no-op), and a candidate-restricted query."""
+    ranked ids and scores as bm25_search on seeded random corpora for
+    adversarial term sets — single term (theta prunes nothing it
+    shouldn't), all common terms (bounds nearly tie), rare+common mix
+    (the real win), corpus-absent term (df=0 path), fewer-than-k matches
+    (theta = -inf, pruning a no-op), and a candidate-restricted query."""
     import random
 
     rng = random.Random(421)
@@ -259,9 +259,7 @@ def test_maxscore_equals_plain_on_random_corpora(spark):
             pruned = bm25_mod.bm25_maxscore_search(
                 postings, doclens, n_docs, avgdl, terms, k=k
             ).collect()
-            assert [r["id"] for r in pruned] == [r["id"] for r in plain], terms
-            for a, b in zip(pruned, plain):
-                assert abs(a["score"] - b["score"]) < 1e-9
+            assert [tuple(r) for r in pruned] == [tuple(r) for r in plain], terms
             # block-max bounds (hash blocks) must stay lossless on the
             # same adversarial sets, at both a multi-doc-per-block and a
             # nearly-1-doc-per-block granularity
@@ -270,8 +268,8 @@ def test_maxscore_equals_plain_on_random_corpora(spark):
                     postings, doclens, n_docs, avgdl, terms, k=k,
                     n_blocks=nb,
                 ).collect()
-                assert [r["id"] for r in bmw] == [
-                    r["id"] for r in plain
+                assert [tuple(r) for r in bmw] == [
+                    tuple(r) for r in plain
                 ], (terms, nb)
 
     cand = docs.filter(F.col("id") < "d060").select("id")
@@ -281,13 +279,13 @@ def test_maxscore_equals_plain_on_random_corpora(spark):
     pruned = bm25_mod.bm25_maxscore_search(
         postings, doclens, n_docs, avgdl, [rare, "w0"], k=5, candidate_ids=cand
     ).collect()
-    assert [r["id"] for r in pruned] == [r["id"] for r in plain]
+    assert [tuple(r) for r in pruned] == [tuple(r) for r in plain]
     assert all(r["id"] < "d060" for r in pruned)
     bmw = bm25_mod.bm25_maxscore_search(
         postings, doclens, n_docs, avgdl, [rare, "w0"], k=5,
         candidate_ids=cand, n_blocks=16,
     ).collect()
-    assert [r["id"] for r in bmw] == [r["id"] for r in plain]
+    assert [tuple(r) for r in bmw] == [tuple(r) for r in plain]
     postings.unpersist(), doclens.unpersist()
 
 

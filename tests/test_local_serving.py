@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 
 from vector_database_api_spark import service
 from vector_database_api_spark.config import EngineConfig
+from vector_database_api_spark.operators import bm25 as bm25_mod
 from vector_database_api_spark.service import VectorEngine
 
 CFG = EngineConfig(embedding_dim=16)
@@ -143,20 +144,18 @@ def test_driver_plane_equals_spark_plan(engines, library_id):
         _same_plane_results(got, want)
 
 
-def _split_docs(copy):
-    """The documents whose postings span more than one scan partition."""
-    pairs = set(zip(copy.doc.tolist(), copy.part.tolist()))
-    per_doc = np.bincount([d for d, _ in pairs])
-    return int((per_doc > 1).sum())
+def _scan_partitions(engine, library_id):
+    """The number of partitions of the library's postings scan."""
+    return engine._handle(library_id).text[0].rdd.getNumPartitions()
 
 
 @pytest.mark.parametrize("library_id", list(TEXT_PATHS))
 @pytest.mark.parametrize("ranking", ["bm25", "ql"])
 @pytest.mark.parametrize("mode", ["or", "and"])
 def test_bm25_driver_plane_equals_spark_plan(engines, library_id, mode, ranking):
-    """Every (filter, k, threshold) case of a bm25 scoring mode; on the
-    split library most documents' postings span several scan
-    partitions, so the plan's partial and final sums both show."""
+    """Every (filter, k, threshold) case of a bm25 scoring mode, on a
+    library whose postings are one scan partition and on one whose
+    postings are several."""
     engine, spark_plane = engines
     cut = kept = 0
     for filters, k, thresholded in itertools.product(FILTERS, KS, (False, True)):
@@ -179,11 +178,8 @@ def test_bm25_driver_plane_equals_spark_plan(engines, library_id, mode, ranking)
             cut += len(got[0]) < len(scores)
             kept += bool(got[0])
     assert cut and kept  # the threshold cuts some results and keeps some
-    copy = engine._handle(library_id).local
-    if TEXT_PATHS[library_id]:
-        assert set(copy.part.tolist()) == {0}
-    else:
-        assert _split_docs(copy) > N // 2
+    if not TEXT_PATHS[library_id]:
+        assert _scan_partitions(engine, library_id) > 1
 
 
 def test_bm25_driver_plane_after_writes(spark, tmp_path):
@@ -316,3 +312,43 @@ def test_unservable_libraries_take_the_spark_plane(spark, tmp_path, monkeypatch)
     log = engine.search_metrics_df()
     assert dict(log.dtypes)["plane"] == "string"
     assert [r["plane"] for r in log.collect()] == ["spark"] * 2 + ["driver", "spark"]
+
+
+def test_spark_plane_scores_do_not_depend_on_the_postings_layout(spark, tmp_path):
+    """One corpus indexed with its postings in one scan partition and in
+    several: ``search()`` rows are bit-equal for every mode and ranking,
+    and ``bm25_batch_search``'s per-query scores equal ``bm25_search``'s
+    bit for bit."""
+    rows = _rows("c", n=200, words=12)
+    engines = []
+    for coalesce in (True, False):
+        eng = VectorEngine(spark, str(tmp_path / f"wh-{coalesce}"), config=CFG)
+        eng.ingest_chunks(spark.createDataFrame(rows, SCHEMA))
+        _index_bm25(eng, "c", coalesce)
+        engines.append(eng)
+    one, split = engines
+    assert _scan_partitions(one, "c") == 1 and _scan_partitions(split, "c") > 1
+    texts = (
+        "python vector garden spark",
+        "river stone cloud music index query",
+        "garden music stone python cloud river spark",
+    )
+    cases = list(itertools.product(("or", "and"), ("bm25", "ql")))
+    cases += [("maxscore", "bm25"), ("blockmax", "bm25")]
+    for text, (mode, ranking) in itertools.product(texts, cases):
+        args = dict(query_text=text, k=100, mode=mode, ranking=ranking)
+        got = [tuple(r) for r in split.search("c", **args).collect()]
+        assert got, args
+        assert got == [tuple(r) for r in one.search("c", **args).collect()], args
+
+    postings, doclens, n_docs, avgdl = split._handle("c").text
+    term_lists = [bm25_mod.tokenize_query(t) for t in texts]
+    batch = bm25_mod.bm25_batch_search(
+        postings, doclens, n_docs, avgdl, term_lists, k=100
+    ).collect()
+    for qid, terms in enumerate(term_lists):
+        single = bm25_mod.bm25_search(postings, doclens, n_docs, avgdl, terms, k=100)
+        ranked = sorted(
+            (r["rank"], r["id"], r["score"]) for r in batch if r["qid"] == qid
+        )
+        assert [(i, s) for _, i, s in ranked] == [tuple(r) for r in single.collect()]

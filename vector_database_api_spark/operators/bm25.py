@@ -25,7 +25,12 @@ Scale shape (100 TB):
   search_service.py:88-110) — the same decision the registry's
   ``hybrid_rrf_filtered`` documents and oracle-checks;
 - scoring is whole-stage-codegen arithmetic; top-k is
-  ``TakeOrderedAndProject``.
+  ``TakeOrderedAndProject``;
+- a document's score is ``0.0 + c(t1) + c(t2) + ...`` over the query
+  terms in :func:`tokenize_query` order (:func:`term_order_sum`), so it
+  depends on the query and the corpus only, never on how the postings
+  are laid out in files or partitions: every operator here, and the
+  driver plane of ``service.py``, returns the same double.
 """
 
 from __future__ import annotations
@@ -141,6 +146,56 @@ def ql_model_constant(lp_by_term: dict[str, float], terms: list[str]) -> tuple[f
     return lp_sum, n_model_terms
 
 
+def term_order_sum(value: str, key: str, keys: list) -> Column:
+    """The one summation rule of the scoring operators: per group (a
+    document), ``0.0 + v(keys[0]) + v(keys[1]) + ...`` added left to
+    right, where ``v(x)`` is the group's ``value`` on its row with
+    ``key = x`` and 0.0 when it has none.  ``build_bm25_index`` writes one
+    posting per (term, id), so each ``sum(when(key = x, value))`` adds at
+    most one row and is exact in any aggregation order; the result does
+    not depend on the rows' partitions or order."""
+    total = F.lit(0.0)
+    for x in keys:
+        one = F.sum(F.when(F.col(key) == F.lit(x), F.col(value)))
+        total = total + F.coalesce(one, F.lit(0.0))
+    return total
+
+
+def _query_postings(
+    postings: DataFrame,
+    terms: list[str],
+    candidate_ids: DataFrame | None,
+    stat: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """(stats, hits): the query terms' per-term corpus statistic ``stat``
+    (df or cf), computed from their postings BEFORE any candidate
+    restriction, and those postings restricted to ``candidate_ids`` and
+    joined to it (filter-then-search)."""
+    hits = postings.filter(F.col("term").isin(terms))
+    stats = hits.groupBy("term").agg(stat)
+    if candidate_ids is not None:
+        hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
+    return stats, hits.join(F.broadcast(stats), "term")
+
+
+def _bm25_contribs(
+    postings: DataFrame,
+    doclens: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    terms: list[str],
+    candidate_ids: DataFrame | None,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """(term, id, contrib): each query-term posting's BM25 contribution."""
+    df = F.count(F.lit(1)).cast("double").alias("df")
+    _, hits = _query_postings(postings, terms, candidate_ids, df)
+    return hits.join(doclens, "id").select(
+        "term", "id", bm25_contrib(n_docs, avgdl, k1, b).alias("contrib")
+    )
+
+
 def bm25_search(
     postings: DataFrame,
     doclens: DataFrame,
@@ -179,18 +234,11 @@ def bm25_search(
     terms = [t for t in dict.fromkeys(query_terms) if t]
     if not terms or n_docs == 0:
         return spark.createDataFrame([], "id string, score double")
-    hits = postings.filter(F.col("term").isin(terms))
-    df_t = hits.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    if candidate_ids is not None:
-        hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    contrib = bm25_contrib(n_docs, avgdl, k1, b)
     scored = (
-        hits.join(F.broadcast(df_t), "term")
-        .join(doclens, "id")
-        .select("id", contrib.alias("contrib"))
+        _bm25_contribs(postings, doclens, n_docs, avgdl, terms, candidate_ids, k1, b)
         .groupBy("id")
         .agg(
-            F.sum("contrib").alias("score"),
+            term_order_sum("contrib", "term", terms).alias("score"),
             F.count(F.lit(1)).alias("_matched"),
         )
     )
@@ -248,22 +296,22 @@ def bm25_batch_search(
     term-filtered postings BEFORE any candidate restriction
     (corpus-level statistics), and ``candidate_ids`` restricts which
     docs may score (filter-then-search).  A query with no terms simply
-    contributes no rows.  Ordering per qid is (score DESC, id ASC) —
-    the same tie-break as the single path, so ranks agree wherever
-    scores do (pinned against per-request search in
-    tests/test_service.py)."""
+    contributes no rows.  A query's terms are summed at their positions
+    in it (:func:`term_order_sum`), and ordering per qid is (score DESC,
+    id ASC), so every qid's scores and ranks equal the single path's bit
+    for bit (pinned in tests/test_local_serving.py)."""
     spark = postings.sparkSession
+    term_lists = [[t for t in dict.fromkeys(terms) if t] for terms in queries]
     qt_rows = [
-        (qid, t)
-        for qid, terms in enumerate(queries)
-        for t in dict.fromkeys(terms)
-        if t
+        (qid, pos, t)
+        for qid, terms in enumerate(term_lists)
+        for pos, t in enumerate(terms)
     ]
     if not qt_rows or n_docs == 0:
         return spark.createDataFrame(
             [], "qid int, id string, score double, rank int"
         )
-    qterms = spark.createDataFrame(qt_rows, "qid int, term string")
+    qterms = spark.createDataFrame(qt_rows, "qid int, pos int, term string")
     hits = postings.join(F.broadcast(qterms), "term")
     df_t = (
         postings.join(
@@ -275,12 +323,13 @@ def bm25_batch_search(
     if candidate_ids is not None:
         hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
     contrib = bm25_contrib(n_docs, avgdl, k1, b)
+    n_pos = max(len(terms) for terms in term_lists)
     scored = (
         hits.join(F.broadcast(df_t), "term")
         .join(doclens, "id")
-        .select("qid", "id", contrib.alias("contrib"))
+        .select("qid", "id", "pos", contrib.alias("contrib"))
         .groupBy("qid", "id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(term_order_sum("contrib", "pos", list(range(n_pos))).alias("score"))
     )
     from vector_database_api_spark.operators.skew import grouped_topk
 
@@ -348,15 +397,8 @@ def bm25_maxscore_search(
     terms = [t for t in dict.fromkeys(query_terms) if t]
     if not terms or n_docs == 0:
         return spark.createDataFrame([], "id string, score double")
-    hits = postings.filter(F.col("term").isin(terms))
-    df_t = hits.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    if candidate_ids is not None:
-        hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    contrib_expr = bm25_contrib(n_docs, avgdl, k1, b)
-    contribs = (
-        hits.join(F.broadcast(df_t), "term")
-        .join(doclens, "id")
-        .select("term", "id", contrib_expr.alias("contrib"))
+    contribs = _bm25_contribs(
+        postings, doclens, n_docs, avgdl, terms, candidate_ids, k1, b
     )
     if n_blocks is not None:
         contribs = contribs.withColumn(
@@ -393,7 +435,7 @@ def bm25_maxscore_search(
     ess_scores = (
         contribs.join(ess_ids, "id", "left_semi")
         .groupBy("id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(term_order_sum("contrib", "term", terms).alias("score"))
     )
     if after is not None:
         ess_scores = _after_filter(ess_scores, after)
@@ -407,31 +449,25 @@ def bm25_maxscore_search(
         )
     )
     if n_blocks is not None:
-        doc_ub = (
-            contribs.join(F.broadcast(block_ubs), ["term", "_blk"])
-            .groupBy("id")
-            .agg(F.sum("ub").alias("ub_sum"))
-        )
+        bounded = contribs.join(F.broadcast(block_ubs), ["term", "_blk"])
     else:
-        doc_ub = (
-            contribs.join(F.broadcast(ubs), "term")
-            .groupBy("id")
-            .agg(F.sum("ub").alias("ub_sum"))
-        )
-    # prune only STRICTLY below theta minus an absolute FP-fuzz margin:
-    # ub_sum and theta are unrounded double sums whose accumulation
-    # order differs, so a mathematical tie can land an ulp apart — the
-    # margin makes every pruned doc's true score strictly below theta
-    # (the registry twin's rounding-guard rationale, queries.py)
+        bounded = contribs.join(F.broadcast(ubs), "term")
+    doc_ub = bounded.groupBy("id").agg(
+        term_order_sum("ub", "term", terms).alias("ub_sum")
+    )
+    # prune only STRICTLY below theta: ub_sum adds a bound >= each of the
+    # doc's contributions in the same term order as its score, and
+    # rounding is monotone, so ub_sum >= score exactly and every pruned
+    # doc's score is strictly below theta
     survivors = (
         doc_ub.crossJoin(F.broadcast(theta))
-        .filter(F.col("ub_sum") >= F.col("theta") - F.lit(1e-9))
+        .filter(F.col("ub_sum") >= F.col("theta"))
         .select("id")
     )
     final = (
         contribs.join(survivors, "id", "left_semi")
         .groupBy("id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(term_order_sum("contrib", "term", terms).alias("score"))
     )
     if after is not None:
         final = _after_filter(final, after)
@@ -574,17 +610,14 @@ def ql_dirichlet_search(
     terms = [t for t in dict.fromkeys(query_terms) if t]
     if not terms or total_tokens <= 0:
         return spark.createDataFrame([], "id string, score double")
-    hits = postings.filter(F.col("term").isin(terms))
-    cf_t = hits.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
-    if candidate_ids is not None:
-        hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
+    cf = F.sum("tf").cast("double").alias("cf")
+    cf_t, hits = _query_postings(postings, terms, candidate_ids, cf)
     matched, lp = ql_posting_exprs(total_tokens, mu)
     per_doc = (
-        hits.join(F.broadcast(cf_t), "term")
-        .select("id", matched.alias("m"))
+        hits.select("term", "id", matched.alias("m"))
         .groupBy("id")
         .agg(
-            F.sum("m").alias("m_sum"),
+            term_order_sum("m", "term", terms).alias("m_sum"),
             F.count(F.lit(1)).alias("_matched"),
         )
     )

@@ -56,10 +56,10 @@ lsh, trained ivf, pq, sq8, none, or bm25 in the scoring modes ("or",
 and index, loaded once per write generation, and the request is scored
 in NumPy with the plan's arithmetic, so the rows are bit-equal to
 ``search().collect()``.  A bm25 copy holds every posting's contribution
-as Spark computed it, and the driver only adds them in the plan's
-aggregation order, filters, sorts and cuts.  The pruned bm25 modes
-(maxscore, blockmax) keep the Spark plane (selection rule and reasons in
-``search_timed``).
+as Spark computed it, and the driver only adds them in query-term
+order (the operators' one summation rule), filters, sorts and cuts.
+The pruned bm25 modes (maxscore, blockmax) keep the Spark plane
+(selection rule and reasons in ``search_timed``).
 """
 
 from __future__ import annotations
@@ -193,19 +193,15 @@ class _PostingsCopy:
     (``operators/bm25.py``; Spark's ``log`` is ``StrictMath.log``, which
     NumPy's may miss by an ulp).  Postings are grouped by term, term
     ``t``'s being ``[starts[terms[t]], starts[terms[t] + 1])``, each with
-    its document (``doc``, a position in ``doc_ids``), the postings
-    scan's ``spark_partition_id()`` (``part``) and
-    ``monotonically_increasing_id()`` (``seq``: scan order across
-    partitions).  ``lp`` is each term's ln(mu * p_t), ``norm`` each
-    document's ln(dl + mu); ``chunk_doc`` maps every chunk row to its
-    document (-1 when it has no posting) and ``chunk_meta`` holds every
-    chunk row's metadata."""
+    its document (``doc``, a position in ``doc_ids``; a document appears
+    at most once per term).  ``lp`` is each term's ln(mu * p_t),
+    ``norm`` each document's ln(dl + mu); ``chunk_doc`` maps every chunk
+    row to its document (-1 when it has no posting) and ``chunk_meta``
+    holds every chunk row's metadata."""
 
     terms: dict[str, int]
     starts: np.ndarray
     doc: np.ndarray
-    part: np.ndarray
-    seq: np.ndarray
     bm25: np.ndarray
     ql: np.ndarray
     lp: np.ndarray
@@ -265,26 +261,6 @@ def _top_rows(
     ]
 
 
-def _run_sums(vals: np.ndarray, *keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sum, first position) of each run of rows with equal ``keys``, the
-    rows of a run added left to right from 0.0, as Spark's ``sum``
-    updates its buffer.  One vector add per position in a run, so the
-    loop is as long as the longest run."""
-    n = len(vals)
-    new = np.zeros(n, dtype=bool)
-    new[:1] = True
-    for key in keys:
-        new[1:] |= key[1:] != key[:-1]
-    starts = np.flatnonzero(new)
-    run = np.cumsum(new) - 1
-    pos = np.arange(n) - starts[run]
-    sums = np.zeros(len(starts))
-    for r in range(int(pos.max()) + 1 if n else 0):
-        at = pos == r
-        sums[run[at]] += vals[at]
-    return sums, starts
-
-
 class VectorEngine:
     """Library/document/chunk store + per-library ANN indexes.
 
@@ -325,6 +301,8 @@ class VectorEngine:
         self._lock = threading.RLock()
         self._handles: dict[str, _Handle] = {}
         self._chunk_table: DataFrame | None = None
+        # the feature pool export_ltr_features keeps persisted
+        self._ltr_pool: DataFrame | None = None
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths and frozen state ----------------------------------------
@@ -446,12 +424,12 @@ class VectorEngine:
     def _load_postings(
         self, handle: _Handle, chunk_ids: np.ndarray, chunk_meta: list
     ) -> _PostingsCopy | None:
-        """One query over the keyword index: every posting, tagged with
-        its scan partition and position before anything else runs, joined
-        to its term's df and cf and its document's dl, and scored with
-        the operators' expressions.  None when a posting has no doclens
-        row or a document has two: the plan's inner join would drop or
-        repeat that posting."""
+        """One query over the keyword index: every posting joined to its
+        term's df and cf and its document's dl, and scored with the
+        operators' expressions.  None when a posting has no doclens row,
+        a document has two (the plan's inner join would drop or repeat
+        that posting) or a (term, id) pair repeats (the plan would add
+        its postings in layout order)."""
         postings, doclens, n_docs, avgdl = handle.text
         mu = bm25_mod.QL_MU
         matched, lp = bm25_mod.ql_posting_exprs(float(n_docs) * float(avgdl), mu)
@@ -459,23 +437,15 @@ class VectorEngine:
             F.count(F.lit(1)).cast("double").alias("df"),
             F.sum("tf").cast("double").alias("cf"),
         )
-        scan = postings.select(
-            "term",
-            "id",
-            "tf",
-            F.spark_partition_id().alias("part"),
-            F.monotonically_increasing_id().alias("seq"),
-        )
         if n_docs == 0:
-            scan = scan.limit(0)  # both rankings answer nothing; p_t is 0/0
+            # both rankings answer nothing; p_t is 0/0
+            postings = postings.limit(0)
         tbl = (
-            scan.join(F.broadcast(stats), "term")
+            postings.join(F.broadcast(stats), "term")
             .join(F.broadcast(doclens), "id", "left")
             .select(
                 "term",
                 "id",
-                "part",
-                "seq",
                 bm25_mod.bm25_contrib(n_docs, avgdl).alias("bm25"),
                 matched.alias("ql"),
                 lp.alias("lp"),
@@ -483,24 +453,24 @@ class VectorEngine:
             )
             .toArrow()
         )
-        seq = tbl.column("seq").to_numpy()
-        if any(c.null_count for c in tbl.columns) or len(np.unique(seq)) < len(seq):
+        if any(c.null_count for c in tbl.columns):
             return None
         terms = tbl.column("term").combine_chunks().dictionary_encode()
         docs = tbl.column("id").combine_chunks().dictionary_encode()
         term, doc = terms.indices.to_numpy(), docs.indices.to_numpy()
-        order = np.lexsort((seq, term))
         lp_of, norm_of = (np.zeros(len(e.dictionary)) for e in (terms, docs))
         lp_of[term] = tbl.column("lp").to_numpy()
         norm_of[doc] = tbl.column("norm").to_numpy()
+        order = np.lexsort((doc, term))
+        term, doc = term[order], doc[order]
+        if ((term[1:] == term[:-1]) & (doc[1:] == doc[:-1])).any():
+            return None
         doc_ids = np.array(docs.dictionary.to_pylist(), dtype=object)
         at = {d: i for i, d in enumerate(doc_ids)}
         return _PostingsCopy(
             terms={t: i for i, t in enumerate(terms.dictionary.to_pylist())},
             starts=np.r_[0, np.cumsum(np.bincount(term, minlength=len(lp_of)))],
-            doc=doc[order],
-            part=tbl.column("part").to_numpy()[order],
-            seq=seq[order],
+            doc=doc,
             bm25=tbl.column("bm25").to_numpy()[order],
             ql=tbl.column("ql").to_numpy()[order],
             lp=lp_of,
@@ -1122,12 +1092,12 @@ class VectorEngine:
           "bm25" or "ql", fusion is the default and ``query_text`` is
           given.  The copy is one query over the keyword index that
           scores every posting with the operators' own Column
-          expressions (Spark's ``log`` is ``StrictMath.log``) and records
-          the postings scan's partition and row order.  The driver sums a
-          document's contributions as the plan's ``HashAggregate`` does
-          (partial sums per scan partition in scan order, then the
-          partials in partition order), so every score is bit-equal; it
-          then filters, sorts and cuts.
+          expressions (Spark's ``log`` is ``StrictMath.log``); a library
+          whose postings repeat a (term, id) pair has none.  The driver
+          adds a document's contributions in query-term order from 0.0,
+          the one summation rule of the operators
+          (``operators/bm25.py::term_order_sum``), so every score is
+          bit-equal; it then filters, sorts and cuts.
 
         Everything else takes the Spark plane: hybrid, other filter
         forms, and the pruned bm25 modes "maxscore" and "blockmax".  The
@@ -1296,32 +1266,29 @@ class VectorEngine:
         ranking: str,
     ) -> list[Row]:
         """``_bm25_topk``'s plan over the copy, adding, filtering, sorting
-        and cutting only.  The plan sums a document's contributions in
-        its ``HashAggregate``: a partial sum per postings-scan partition,
-        in scan order, then the partials in partition order; so the
-        query terms' postings are put in scan order, summed per
-        (document, partition) run and the runs summed per document."""
+        and cutting only.  A document's score adds each query term's
+        contribution in query-term order from 0.0, the operators' one
+        summation rule (``bm25_mod.term_order_sum``)."""
         terms = bm25_mod.tokenize_query(query_text)
         have = [copy.terms[t] for t in terms if t in copy.terms]
         if not have or (mode == "and" and len(have) < len(terms)):
             return []
-        sel = np.concatenate([np.arange(copy.starts[i], copy.starts[i + 1]) for i in have])
+        vals = copy.ql if ranking == "ql" else copy.bm25
+        score = np.zeros(len(copy.doc_ids))
+        matched = np.zeros(len(copy.doc_ids), dtype=np.int64)
+        for i in have:
+            span = slice(copy.starts[i], copy.starts[i + 1])
+            score[copy.doc[span]] += vals[span]
+            matched[copy.doc[span]] += 1
+        keep = matched == len(terms) if mode == "and" else matched > 0
         if filters:
             passes = np.array([exact_match(m, filters) for m in copy.chunk_meta], bool)
             hit = copy.chunk_doc[passes]
-            keep = np.zeros(len(copy.doc_ids), dtype=bool)
-            keep[hit[hit >= 0]] = True
-            sel = sel[keep[copy.doc[sel]]]
-        sel = sel[np.argsort(copy.seq[sel])]
-        vals = (copy.ql if ranking == "ql" else copy.bm25)[sel]
-        by_doc = np.argsort(copy.doc[sel], kind="stable")
-        doc, part, vals = copy.doc[sel][by_doc], copy.part[sel][by_doc], vals[by_doc]
-        partial, runs = _run_sums(vals, doc, part)
-        score, firsts = _run_sums(partial, doc[runs])
-        docs = doc[runs][firsts]
-        if mode == "and":
-            full = np.bincount(doc, minlength=len(copy.doc_ids))[docs] == len(terms)
-            docs, score = docs[full], score[full]
+            passing = np.zeros(len(copy.doc_ids), dtype=bool)
+            passing[hit[hit >= 0]] = True
+            keep &= passing
+        docs = np.flatnonzero(keep)
+        score = score[docs]
         if ranking == "ql":
             lp_sum, n_model_terms = bm25_mod.ql_model_constant(
                 {t: float(copy.lp[copy.terms[t]]) for t in terms if t in copy.terms},
@@ -1349,13 +1316,13 @@ class VectorEngine:
                 (
                     m["library_id"],
                     m["mode"],
-                    m.get("ranking", "bm25"),
-                    m.get("fusion", "rrf"),
+                    m["ranking"],
+                    m["fusion"],
                     float(m["execution_time_ms"]),
                     int(m["n_results"]),
                     m["best_score"],
                     m["worst_score"],
-                    m.get("plane", "spark"),
+                    m["plane"],
                 )
                 for m in log
             ],
@@ -1824,7 +1791,7 @@ class VectorEngine:
         # either materialized or abandoned; an export frame held across
         # a LATER export call recomputes its legs if touched again,
         # the standard lazily-returned-frame contract.
-        if getattr(self, "_ltr_pool", None) is not None:
+        if self._ltr_pool is not None:
             self._ltr_pool.unpersist()
         pool = kw.join(vr, ["qid", "id"], "full_outer").persist()
         self._ltr_pool = pool
