@@ -219,76 +219,6 @@ def test_streaming_bm25_index_matches_batch(spark, tmp_path):
     ]
 
 
-def test_maxscore_equals_plain_on_random_corpora(spark):
-    """Lossless-pruning sweep: bm25_maxscore_search must return the SAME
-    ranked ids and scores as bm25_search on seeded random corpora for
-    adversarial term sets — single term (theta prunes nothing it
-    shouldn't), all common terms (bounds nearly tie), rare+common mix
-    (the real win), corpus-absent term (df=0 path), fewer-than-k matches
-    (theta = -inf, pruning a no-op), and a candidate-restricted query."""
-    import random
-
-    rng = random.Random(421)
-    vocab = [f"w{i}" for i in range(12)]
-    rare = "rareterm"
-    rows = []
-    for i in range(120):
-        n = rng.randint(1, 12)
-        words = [vocab[min(int(rng.expovariate(0.45)), 11)] for _ in range(n)]
-        if i % 17 == 0:
-            words.append(rare)
-        rows.append((f"d{i:03d}", " ".join(words)))
-    docs = spark.createDataFrame(rows, "id string, text string")
-    postings, doclens, stats = bm25_mod.build_bm25_index(docs)
-    postings, doclens = postings.persist(), doclens.persist()
-    s = stats.first()
-    n_docs, avgdl = int(s["n_docs"]), float(s["avgdl"])
-
-    term_sets = [
-        [rare],
-        ["w0", "w1", "w2"],          # all common
-        [rare, "w0", "w5"],          # rare + common
-        ["zzz_absent", "w3"],        # absent term
-        [rare, "zzz_absent"],        # < k matches -> theta = -inf
-    ]
-    for terms in term_sets:
-        for k in (3, 10):
-            plain = bm25_mod.bm25_search(
-                postings, doclens, n_docs, avgdl, terms, k=k
-            ).collect()
-            pruned = bm25_mod.bm25_maxscore_search(
-                postings, doclens, n_docs, avgdl, terms, k=k
-            ).collect()
-            assert [tuple(r) for r in pruned] == [tuple(r) for r in plain], terms
-            # block-max bounds (hash blocks) must stay lossless on the
-            # same adversarial sets, at both a multi-doc-per-block and a
-            # nearly-1-doc-per-block granularity
-            for nb in (8, 256):
-                bmw = bm25_mod.bm25_maxscore_search(
-                    postings, doclens, n_docs, avgdl, terms, k=k,
-                    n_blocks=nb,
-                ).collect()
-                assert [tuple(r) for r in bmw] == [
-                    tuple(r) for r in plain
-                ], (terms, nb)
-
-    cand = docs.filter(F.col("id") < "d060").select("id")
-    plain = bm25_mod.bm25_search(
-        postings, doclens, n_docs, avgdl, [rare, "w0"], k=5, candidate_ids=cand
-    ).collect()
-    pruned = bm25_mod.bm25_maxscore_search(
-        postings, doclens, n_docs, avgdl, [rare, "w0"], k=5, candidate_ids=cand
-    ).collect()
-    assert [tuple(r) for r in pruned] == [tuple(r) for r in plain]
-    assert all(r["id"] < "d060" for r in pruned)
-    bmw = bm25_mod.bm25_maxscore_search(
-        postings, doclens, n_docs, avgdl, [rare, "w0"], k=5,
-        candidate_ids=cand, n_blocks=16,
-    ).collect()
-    assert [tuple(r) for r in bmw] == [tuple(r) for r in plain]
-    postings.unpersist(), doclens.unpersist()
-
-
 def test_conjunctive_operator_semantics(spark):
     """operator='and' == the 'or' result restricted to docs matching
     every term, scores unchanged; an absent term empties the AND but not
@@ -313,46 +243,6 @@ def test_conjunctive_operator_semantics(spark):
     ).collect()
     with pytest.raises(ValueError, match="operator"):
         bm25_mod.bm25_search(postings, doclens, n, avgdl, ["x"], operator="nor")
-
-
-def test_maxscore_cursor_pages_equal_plain_pages(spark):
-    """Cursor-aware MaxScore: for a seeded corpus, paging through the
-    full ranking with bm25_maxscore_search(after=) yields exactly the
-    pages bm25_search(after=) yields — theta from the cursored
-    essential-term ranking keeps pruning lossless on every page."""
-    import random
-
-    rng = random.Random(99)
-    vocab = [f"w{i}" for i in range(8)]
-    rows = [
-        (
-            f"d{i:03d}",
-            " ".join(
-                [vocab[min(int(rng.expovariate(0.5)), 7)] for _ in range(rng.randint(2, 9))]
-                + (["nugget"] if i % 11 == 0 else [])
-            ),
-        )
-        for i in range(90)
-    ]
-    docs = spark.createDataFrame(rows, "id string, text string")
-    postings, doclens, stats = bm25_mod.build_bm25_index(docs)
-    postings, doclens = postings.persist(), doclens.persist()
-    s = stats.first()
-    n, avgdl = int(s["n_docs"]), float(s["avgdl"])
-    terms = ["nugget", "w0"]
-    cursor = None
-    for _ in range(4):  # 4 pages of 5
-        plain = bm25_mod.bm25_search(
-            postings, doclens, n, avgdl, terms, k=5, after=cursor
-        ).collect()
-        pruned = bm25_mod.bm25_maxscore_search(
-            postings, doclens, n, avgdl, terms, k=5, after=cursor
-        ).collect()
-        assert [r["id"] for r in pruned] == [r["id"] for r in plain]
-        if not plain:
-            break
-        cursor = (plain[-1]["score"], plain[-1]["id"])
-    postings.unpersist(), doclens.unpersist()
 
 
 def test_ql_dirichlet_matches_direct_formula_on_random_corpora(spark):
@@ -443,10 +333,7 @@ def test_stored_bounds_go_stale_under_ingest(spark):
     score upper bound stored at epoch A can be VIOLATED after ingest —
     shorter new docs raise saturation (dl falls) and drift avgdl/df, so
     the new best doc can score above the old bound, and pruning with
-    the stale artifact would silently drop it.  The served pruning
-    paths derive bounds from the live posting lists per query, so they
-    stay lossless across the same ingest (both maxscore and block-max
-    forms pinned here)."""
+    the stale artifact would silently drop it."""
     term = "q"
     epoch_a = spark.createDataFrame(
         [(f"a{i}", term + " " + " ".join(["pad"] * 9)) for i in range(20)]
@@ -493,14 +380,3 @@ def test_stored_bounds_go_stale_under_ingest(spark):
     assert new_max > stored_bound + 1e-9, (
         "construction failed: ingest did not raise the true bound"
     )
-
-    # the served pruning paths recompute bounds per query -> lossless
-    plain = bm25_mod.bm25_search(
-        pm, dm, int(rm["n_docs"]), float(rm["avgdl"]), [term, "pad"], k=10
-    ).collect()
-    for nb in (None, 8):
-        pruned = bm25_mod.bm25_maxscore_search(
-            pm, dm, int(rm["n_docs"]), float(rm["avgdl"]), [term, "pad"],
-            k=10, n_blocks=nb,
-        ).collect()
-        assert [r["id"] for r in pruned] == [r["id"] for r in plain], nb

@@ -7,6 +7,7 @@ the same rows."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import numpy as np
 import pytest
@@ -254,6 +255,27 @@ def test_pruned_modes_take_the_spark_plane(engines):
         )
 
 
+def _plan_text(df):
+    """The optimized plan of ``df`` with expression ids stripped."""
+    return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+@pytest.mark.parametrize("mode", ["maxscore", "blockmax"])
+def test_pruned_mode_names_build_the_or_plan(engines, mode):
+    """``search`` and ``search_after`` in a pruned mode build the plan of
+    mode "or", with and without a filter."""
+    engine, _ = engines
+    for filters in (None, {"lang": "de"}):
+        args = dict(query_text="python vector garden", k=5, metadata_filters=filters)
+        assert _plan_text(engine.search("bm25", mode=mode, **args)) == _plan_text(
+            engine.search("bm25", **args)
+        )
+        after = (1.0, "bm25-010")
+        assert _plan_text(
+            engine.search_after("bm25", *after, mode=mode, **args)
+        ) == _plan_text(engine.search_after("bm25", *after, **args))
+
+
 def _falls_back(engine, library_id, **args):
     rows, metrics = engine.search_timed(library_id, **args)
     assert metrics["plane"] == "spark"
@@ -317,8 +339,8 @@ def test_unservable_libraries_take_the_spark_plane(spark, tmp_path, monkeypatch)
 def test_spark_plane_scores_do_not_depend_on_the_postings_layout(spark, tmp_path):
     """One corpus indexed with its postings in one scan partition and in
     several: ``search()`` rows are bit-equal for every mode and ranking,
-    and ``bm25_batch_search``'s per-query scores equal ``bm25_search``'s
-    bit for bit."""
+    and so are ``search_expanded()`` rows (RM3); ``bm25_batch_search``'s
+    per-query scores equal ``bm25_search``'s bit for bit."""
     rows = _rows("c", n=200, words=12)
     engines = []
     for coalesce in (True, False):
@@ -340,6 +362,12 @@ def test_spark_plane_scores_do_not_depend_on_the_postings_layout(spark, tmp_path
         got = [tuple(r) for r in split.search("c", **args).collect()]
         assert got, args
         assert got == [tuple(r) for r in one.search("c", **args).collect()], args
+    for text in texts:
+        got = [tuple(r) for r in split.search_expanded("c", text, k=100).collect()]
+        assert got, text
+        assert got == [
+            tuple(r) for r in one.search_expanded("c", text, k=100).collect()
+        ], text
 
     postings, doclens, n_docs, avgdl = split._handle("c").text
     term_lists = [bm25_mod.tokenize_query(t) for t in texts]

@@ -938,8 +938,8 @@ def test_search_mode_validation(engine):
 def test_search_timed_telemetry(engine):
     """Reference-parity per-request telemetry (search_service.py:59-66):
     search_timed returns the same rows as search() plus a metrics dict
-    whose counters rode the SAME job via DataFrame.observe, and the
-    bounded request log is queryable as a DataFrame."""
+    whose counters are computed from those rows, and the bounded request
+    log is queryable as a DataFrame."""
     qt = "python document number 0 about python"
     plain = engine.search("libA", query_text=qt, k=5).collect()
     rows, m = engine.search_timed("libA", query_text=qt, k=5)
@@ -974,10 +974,9 @@ def test_search_timed_telemetry(engine):
 
 def test_search_after_conjunctive_and_maxscore_pages(engine):
     """Keyset pagination composes with both r7 modes: two conjunctive
-    pages == the conjunctive top-2k in one shot, and MaxScore pagination
-    (cursor-aware theta — bm25_maxscore_search(after=)) returns pages
-    id-identical to mode='or' pagination, so pruning stays lossless per
-    page."""
+    pages == the conjunctive top-2k in one shot, and mode='maxscore'
+    (an accepted name of 'or') returns pages id-identical to mode='or'
+    pagination."""
     engine.index_library("libA", "bm25")
     qt = "python document"
     both = engine.search("libA", query_text=qt, k=6, mode="and").collect()
@@ -1037,11 +1036,10 @@ def test_presentation_wrappers_compose_with_mode(engine):
 
 
 def test_search_mode_blockmax_equals_or_and_paginates(engine):
-    """Block-Max WAND served through VectorEngine.search (mode=
-    "blockmax"): results equal mode="or" exactly — per-(term, block)
-    bounds are lossless like the registry twin bm25_blockmax_topk —
+    """mode="blockmax" (an accepted name of "or") served through
+    VectorEngine.search: results equal mode="or" exactly,
     filter-then-search composes, and pagination pages are id-identical
-    to mode='or' pages (cursor-aware theta with block-tight bounds)."""
+    to mode='or' pages."""
     engine.index_library("libA", "bm25")
     qt = "python document"
     plain = engine.search("libA", query_text=qt, k=8).collect()

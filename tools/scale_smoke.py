@@ -959,7 +959,7 @@ def main() -> None:
                 ]
             )
         ).persist()
-        n_blocks = bm.count()
+        blocks = bm.count()
         ubs = bm.agg(
             *[F.max(f"bm_{t}").alias(f"ub_{t}") for t in _BM25_TERMS]
         ).collect()[0]
@@ -1015,7 +1015,7 @@ def main() -> None:
         frac = round(survivors / total, 4)
         assert frac <= results["maxscore_survivor_frac"] + 1e-9, (
             f"block-max bounds looser than MaxScore: {frac}"
-            f" > {results['maxscore_survivor_frac']} ({n_blocks} blocks)"
+            f" > {results['maxscore_survivor_frac']} ({blocks} blocks)"
         )
         return frac
 
@@ -1025,8 +1025,8 @@ def main() -> None:
 
     def rm3_scaled():
         # RM3 second pass against the postings artifact at scale: the
-        # 5-row expansion-term table broadcasts into the postings join,
-        # so only the expansion terms' posting lists are touched.
+        # <=5 collected expansion terms filter the postings by term, so
+        # only the expansion terms' posting lists are touched.
         from vector_database_api_spark.operators.bm25 import (
             bm25_search,
             build_bm25_index,
@@ -1045,7 +1045,7 @@ def main() -> None:
             postings, doclens, int(row["n_docs"]), float(row["avgdl"]),
             terms, k=10,
         ).select("id")
-        exp = rm3_expansion(postings, doclens, terms, fb)
+        exp = rm3_expansion(postings, doclens, terms, fb).collect()
         out = rm3_search(
             postings, doclens, int(row["n_docs"]), float(row["avgdl"]),
             exp, k=10,
@@ -1059,36 +1059,6 @@ def main() -> None:
     # round-7 serving extras (r6 verdict task 4): the queries whose
     # 100 TB claims rest on artifact-probe plans, each verified with one
     # order-of-magnitude datapoint + its headline invariant.
-
-    def maxscore_served():
-        # the SERVED MaxScore path (operators/bm25.py::bm25_maxscore_search,
-        # arbitrary terms) at 500k docs: must agree with plain bm25_search
-        # id-for-id (lossless pruning) on a rare+common term mix.
-        from vector_database_api_spark.operators import bm25 as B
-
-        postings, doclens, stats = B.build_bm25_index(docs, id_col="doc_id")
-        postings = postings.persist()
-        postings.count()
-        doclens = doclens.persist()
-        doclens.count()
-        row = stats.collect()[0]
-        terms = ["dup", "vector", "hash"]
-        plain = B.bm25_search(
-            postings, doclens, int(row["n_docs"]), float(row["avgdl"]),
-            terms, k=10,
-        ).collect()
-        pruned = B.bm25_maxscore_search(
-            postings, doclens, int(row["n_docs"]), float(row["avgdl"]),
-            terms, k=10,
-        ).collect()
-        postings.unpersist()
-        doclens.unpersist()
-        assert [r["id"] for r in pruned] == [r["id"] for r in plain], (
-            "served MaxScore changed the top-10 at scale"
-        )
-        return len(pruned)
-
-    results["maxscore_served_sec"], _ = timed(maxscore_served)
 
     def ql_served():
         # Dirichlet-QL serving at 500k docs: the Lucene decomposition

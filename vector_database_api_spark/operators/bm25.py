@@ -31,6 +31,17 @@ Scale shape (100 TB):
   depends on the query and the corpus only, never on how the postings
   are laid out in files or partitions: every operator here, and the
   driver plane of ``service.py``, returns the same double.
+
+Dynamic pruning is not served here.  ``VectorEngine``'s ``"maxscore"``
+and ``"blockmax"`` modes are accepted names of the ``"or"`` ranking and
+run :func:`bm25_search`: MaxScore (Turtle & Flood 1995) and Block-Max
+WAND (Ding & Suel 2011) save work only when the score bounds are stored
+and postings are skipped, which the registry twins
+``bm25_maxscore_topk`` and ``bm25_blockmax_topk`` do over their stored
+bound artifacts.  Re-expressed relationally over a request's postings,
+the per-document bound sum aggregates every candidate posting, which is
+all of ``"or"``'s work, so a served pruned plan could only cost more and
+return the same rows.
 """
 
 from __future__ import annotations
@@ -42,9 +53,6 @@ from pyspark.sql import functions as F
 # oracle-checked queries.py family (_bm25_contrib_sql)
 K1 = 1.2
 B = 0.75
-# served Block-Max WAND granule (mode="blockmax"); the registry twin's
-# contiguous-range granule is queries._BMW_BLOCK
-BLOCKMAX_BLOCKS = 64
 RRF_K = 60  # the standard RRF constant, shared by the single and batch paths
 QL_MU = 2000.0  # Dirichlet prior of the served query-likelihood ranking
 
@@ -93,31 +101,22 @@ def tokenize_query(text: str) -> list[str]:
     return [t for t in dict.fromkeys(text.lower().split(" ")) if t]
 
 
-def _bm25_idf(n_docs: int) -> Column:
-    """Lucene's idf ln(1 + (N - df + 0.5) / (df + 0.5)) of a ``df`` column."""
-    return F.log(
+def bm25_contrib(n_docs: int, avgdl: float, k1: float = K1, b: float = B) -> Column:
+    """One posting's BM25 contribution from its term's ``df`` and its own
+    ``tf`` and ``dl`` columns: Lucene's idf ln(1 + (N - df + 0.5) /
+    (df + 0.5)) times the saturated, length-normalised ``tf``.  The one
+    expression the scoring operators here and the driver-plane copy of
+    ``service.py`` evaluate, so every plane sums the same doubles."""
+    idf = F.log(
         F.lit(1.0)
         + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
-
-
-def _bm25_tf_norm(avgdl: float, k1: float, b: float) -> Column:
-    """BM25's saturated, length-normalised ``tf`` of a posting whose
-    document length is ``dl``."""
     tf = F.col("tf").cast("double")
-    return (
+    return idf * (
         tf
         * (k1 + 1.0)
         / (tf + k1 * ((1.0 - b) + b * (F.col("dl").cast("double") / float(avgdl))))
     )
-
-
-def bm25_contrib(n_docs: int, avgdl: float, k1: float = K1, b: float = B) -> Column:
-    """One posting's BM25 contribution from its term's ``df`` and its own
-    ``tf`` and ``dl`` columns: the one expression the scoring operators
-    here and the driver-plane copy of ``service.py`` evaluate, so every
-    plane sums the same doubles."""
-    return _bm25_idf(n_docs) * _bm25_tf_norm(avgdl, k1, b)
 
 
 def ql_posting_exprs(total_tokens: float, mu: float) -> tuple[Column, Column]:
@@ -252,8 +251,8 @@ def bm25_search(
 
 def _after_filter(scored: DataFrame, after: tuple) -> DataFrame:
     """The strictly-after keyset cursor predicate on (score DESC, id ASC)
-    order — shared by the plain and MaxScore search paths so page
-    semantics are identical."""
+    order — shared by the BM25 and QL search paths so page semantics are
+    identical."""
     a_score, a_id = after
     return scored.filter(
         (F.col("score") < F.lit(float(a_score)))
@@ -336,142 +335,6 @@ def bm25_batch_search(
     return grouped_topk(scored, "qid", "score", "id", int(k)).select(
         "qid", "id", "score", F.col("rank").cast("int").alias("rank")
     )
-
-
-def bm25_maxscore_search(
-    postings: DataFrame,
-    doclens: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    query_terms: list[str],
-    k: int = 10,
-    candidate_ids: DataFrame | None = None,
-    k1: float = K1,
-    b: float = B,
-    after: tuple | None = None,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """MaxScore-pruned top-k over the postings index for ARBITRARY query
-    terms — the served form of the registry's hash-proven-lossless
-    ``bm25_maxscore_topk`` (Turtle & Flood's dynamic pruning; same
-    adjudication, different artifact: the registry derives bounds from
-    the pivoted-corpus artifact, serving derives them from the query
-    terms' posting lists).  Results equal :func:`bm25_search` exactly
-    (pinned in tests/test_service.py): a doc is pruned only when the sum
-    of its matched terms' upper bounds cannot reach theta — the k-th
-    best score among docs matching the highest-bound ("essential")
-    term — so dropping it can never change the top-k (theta degrades to
-    -inf when fewer than k essential docs exist: pruning becomes a
-    lossless no-op).
-
-    100 TB shape: every frame here is bounded by the query terms'
-    posting lists (never the corpus); the per-(term,doc) contribution
-    fact is built once and reused by the bound derivation, the
-    essential leg, and final scoring; theta is in-plan (k-row top-k ->
-    1-row aggregate, broadcast back); the win is skipping full scoring
-    of the common-terms-only doc mass.  Filter-then-search composes the
-    same way as :func:`bm25_search` (corpus-level df, candidates
-    restricted).
-
-    ``after`` = (score, id) keyset cursor, same contract as
-    :func:`bm25_search`: theta is then the k-th best score among the
-    CURSORED essential-term docs (the cursor composes before every
-    top-k), so the lossless argument holds for the cursored ranking — a
-    pruned doc's score is below the k cursored docs already at or above
-    theta and can never appear on this page.
-
-    ``n_blocks`` switches the bound granularity to BLOCK-MAX (Ding &
-    Suel 2011, the registry twin ``bm25_blockmax_topk``): bounds are
-    per (term, block) with block = hash(id) mod n_blocks, so a doc's
-    bound sums the maxima of its OWN block — pointwise <= the
-    corpus-wide per-term bound, hence a survivor set that is a SUBSET
-    of MaxScore's with the same theta (still lossless: a doc's own
-    contribution is one of the values its block's max ranges over).  A
-    physical index would use contiguous doc-id ranges (the skip-pointer
-    layout, as the registry artifact does over the BIGINT doc ids);
-    over opaque string chunk ids, hash blocks give the same
-    bound-tightening with the same guarantee.  The per-(term, block)
-    bound table is |terms| x n_blocks rows — still query-bounded
-    metadata."""
-    spark = postings.sparkSession
-    terms = [t for t in dict.fromkeys(query_terms) if t]
-    if not terms or n_docs == 0:
-        return spark.createDataFrame([], "id string, score double")
-    contribs = _bm25_contribs(
-        postings, doclens, n_docs, avgdl, terms, candidate_ids, k1, b
-    )
-    if n_blocks is not None:
-        contribs = contribs.withColumn(
-            "_blk", F.pmod(F.xxhash64(F.col("id")), F.lit(int(n_blocks)))
-        )
-        # per-(term, block) upper bounds — the block-max metadata; the
-        # per-term global max (for essential-term selection) is its
-        # max-over-blocks, identical to the MaxScore bound
-        # NOT persisted: it is rebuilt by the doc_ub leg below, but the
-        # rebuild is posting-list-bounded, and a per-request persist
-        # with no unpersist hook is the r6 cache-leak class
-        block_ubs = contribs.groupBy("term", "_blk").agg(
-            F.max("contrib").alias("ub")
-        )
-        ub_rows = (
-            block_ubs.groupBy("term")
-            .agg(F.max("ub").alias("ub"))
-            .collect()
-        )
-    else:
-        # per-term upper bounds: |terms| rows — the serving twin of the
-        # registry's _cached_bm25_maxscores artifact, derived from the
-        # term-bounded posting lists only
-        ub_rows = (
-            contribs.groupBy("term")
-            .agg(F.max("contrib").alias("ub"))
-            .collect()
-        )
-    if not ub_rows:
-        return spark.createDataFrame([], "id string, score double")
-    ess = max(ub_rows, key=lambda r: r["ub"])["term"]
-    ubs = spark.createDataFrame(ub_rows, "term string, ub double")
-    ess_ids = contribs.filter(F.col("term") == ess).select("id")
-    ess_scores = (
-        contribs.join(ess_ids, "id", "left_semi")
-        .groupBy("id")
-        .agg(term_order_sum("contrib", "term", terms).alias("score"))
-    )
-    if after is not None:
-        ess_scores = _after_filter(ess_scores, after)
-    theta = (
-        ess_scores.orderBy(F.desc("score"), "id")
-        .limit(int(k))
-        .agg(
-            F.when(F.count(F.lit(1)) >= int(k), F.min("score"))
-            .otherwise(F.lit(float("-inf")))
-            .alias("theta")
-        )
-    )
-    if n_blocks is not None:
-        bounded = contribs.join(F.broadcast(block_ubs), ["term", "_blk"])
-    else:
-        bounded = contribs.join(F.broadcast(ubs), "term")
-    doc_ub = bounded.groupBy("id").agg(
-        term_order_sum("ub", "term", terms).alias("ub_sum")
-    )
-    # prune only STRICTLY below theta: ub_sum adds a bound >= each of the
-    # doc's contributions in the same term order as its score, and
-    # rounding is monotone, so ub_sum >= score exactly and every pruned
-    # doc's score is strictly below theta
-    survivors = (
-        doc_ub.crossJoin(F.broadcast(theta))
-        .filter(F.col("ub_sum") >= F.col("theta"))
-        .select("id")
-    )
-    final = (
-        contribs.join(survivors, "id", "left_semi")
-        .groupBy("id")
-        .agg(term_order_sum("contrib", "term", terms).alias("score"))
-    )
-    if after is not None:
-        final = _after_filter(final, after)
-    return final.orderBy(F.desc("score"), "id").limit(int(k))
 
 
 def rrf_fuse(
@@ -673,31 +536,35 @@ def rm3_expansion(
     min_len: int = 3,
 ) -> DataFrame:
     """(term, wt) RM3 relevance-model expansion terms, computed FROM THE
-    INDEX: join the feedback docs' posting rows (a broadcast semi-join of
-    the <=fb_k feedback ids into the postings — feedback-bounded, never a
-    corpus scan or a text re-tokenize), weight each term by
-    sum(tf/dl) over the feedback docs, drop the original query terms,
-    sub-``min_len``-char tokens, and terms in fewer than ``min_fb_df``
-    feedback docs; keep the top ``n_terms`` by weight (term ASC ties).
+    INDEX: read the feedback docs' posting rows (the <=fb_k feedback ids
+    are collected and pushed into the postings scan as an ``id IN``
+    predicate — feedback-bounded, never a corpus scan or a text
+    re-tokenize), weight each term by sum(tf/dl) over the feedback docs,
+    drop the original query terms, sub-``min_len``-char tokens, and
+    terms in fewer than ``min_fb_df`` feedback docs; keep the top
+    ``n_terms`` by weight (term ASC ties).  A term's weight adds its
+    feedback docs in ascending id order (:func:`term_order_sum` keyed
+    on the ids), so it does not depend on the postings layout.
     The registry twin (`queries.py::rm3_expansion_terms`) derives the
     same weights from raw text for its DuckDB oracle; this is the
     serving form a keyword engine actually runs."""
-    fb = feedback_ids.select("id")
+    fb = sorted(r["id"] for r in feedback_ids.select("id").collect())
+    if not fb:
+        return postings.sparkSession.createDataFrame([], "term string, wt double")
     fb_post = (
-        postings.join(F.broadcast(fb), "id")
-        .filter(
-            (F.length("term") >= min_len)
-            & (~F.col("term").isin([t for t in query_terms]))
+        postings.filter(
+            F.col("id").isin(fb)
+            & (F.length("term") >= min_len)
+            & (~F.col("term").isin(query_terms))
         )
         .join(doclens, "id")
+        .withColumn("w", F.col("tf").cast("double") / F.col("dl").cast("double"))
     )
     return (
         fb_post.groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("fb_df"),
-            F.sum(
-                F.col("tf").cast("double") / F.col("dl").cast("double")
-            ).alias("wt"),
+            term_order_sum("w", "id", fb).alias("wt"),
         )
         .filter(F.col("fb_df") >= min_fb_df)
         .orderBy(F.desc("wt"), "term")
@@ -711,35 +578,29 @@ def rm3_search(
     doclens: DataFrame,
     n_docs: int,
     avgdl: float,
-    expansion: DataFrame,
+    expansion: list[tuple[str, float]],
     k: int = 10,
     candidate_ids: DataFrame | None = None,
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
     """Top-k (id, score) for a WEIGHTED, data-dependent term set — the
-    second pass of RM3 pseudo-relevance feedback.  ``expansion`` is a
-    small (term, wt) frame (rm3_expansion's output): it broadcasts into
-    the postings join, so only the expansion terms' posting lists are
-    read; per-term df is computed from those lists BEFORE any candidate
-    restriction (corpus-level statistics, the bm25_search convention);
-    each contribution is wt x Lucene idf x BM25 tf saturation."""
-    spark = postings.sparkSession
-    if n_docs == 0:
-        return spark.createDataFrame([], "id string, score double")
-    hits = postings.join(F.broadcast(expansion), "term")
-    df_t = hits.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    if candidate_ids is not None:
-        hits = hits.join(candidate_ids.select("id"), "id", "left_semi")
-    contrib = F.col("wt") * _bm25_idf(n_docs) * _bm25_tf_norm(avgdl, k1, b)
+    second pass of RM3 pseudo-relevance feedback.  ``expansion`` is the
+    collected (term, wt) rows of :func:`rm3_expansion`, in its (wt DESC,
+    term) order: only those terms' posting lists are read; per-term df
+    is computed from them BEFORE any candidate restriction (corpus-level
+    statistics, the bm25_search convention); each contribution is
+    :func:`bm25_contrib` x wt, and a document's contributions add in
+    expansion-term order (:func:`term_order_sum`)."""
+    terms = [t for t, _ in expansion]
+    if not terms or n_docs == 0:
+        return postings.sparkSession.createDataFrame([], "id string, score double")
+    wt = F.create_map(*[F.lit(x) for pair in expansion for x in pair])
     return (
-        hits.join(F.broadcast(df_t), "term")
-        .join(doclens, "id")
-        .select("id", contrib.alias("contrib"))
+        _bm25_contribs(postings, doclens, n_docs, avgdl, terms, candidate_ids, k1, b)
+        .withColumn("contrib", F.col("contrib") * wt[F.col("term")])
         .groupBy("id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(term_order_sum("contrib", "term", terms).alias("score"))
         .orderBy(F.desc("score"), "id")
         .limit(int(k))
     )

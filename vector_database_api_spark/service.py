@@ -58,8 +58,8 @@ in NumPy with the plan's arithmetic, so the rows are bit-equal to
 ``search().collect()``.  A bm25 copy holds every posting's contribution
 as Spark computed it, and the driver only adds them in query-term
 order (the operators' one summation rule), filters, sorts and cuts.
-The pruned bm25 modes (maxscore, blockmax) keep the Spark plane
-(selection rule and reasons in ``search_timed``).
+The pruned bm25 mode names (maxscore, blockmax) run the "or" plan and
+keep the Spark plane (selection rule and reasons in ``search_timed``).
 """
 
 from __future__ import annotations
@@ -259,6 +259,13 @@ def _top_rows(
         Row(id=ids[i], **{name: float(col[i]) for name, col in columns.items()})
         for i in top
     ]
+
+
+def _filter_mask(chunk_meta: list, filters: dict[str, Any]) -> np.ndarray:
+    """Which chunk rows of a driver copy pass the exact-match ``filters``."""
+    return np.fromiter(
+        (exact_match(m, filters) for m in chunk_meta), bool, len(chunk_meta)
+    )
 
 
 class VectorEngine:
@@ -858,19 +865,20 @@ class VectorEngine:
         any other path raises on a non-default mode): ``"or"`` (default,
         disjunctive full scoring), ``"and"`` (conjunctive: only docs
         containing EVERY query term — registry twin
-        ``bm25_conjunctive_topk``), ``"maxscore"`` (dynamic pruning,
-        results identical to "or" by construction — registry twin
-        ``bm25_maxscore_topk``, hash-proven lossless), ``"blockmax"``
-        (Block-Max WAND: per-(term, block) bounds, a survivor subset of
-        maxscore's, still identical results — registry twin
-        ``bm25_blockmax_topk``).
+        ``bm25_conjunctive_topk``), ``"maxscore"`` and ``"blockmax"``.
+        The last two are accepted names of the ``"or"`` ranking and run
+        its plan: their contract is rows identical to "or", and dynamic
+        pruning saves work only over stored bounds with posting skips
+        (the registry twins ``bm25_maxscore_topk`` and
+        ``bm25_blockmax_topk``), not as a per-request plan over the
+        postings (operators/bm25.py).
 
         ``ranking`` selects the keyword scoring model (bm25 index only):
         ``"bm25"`` (default) or ``"ql"`` — Dirichlet-smoothed query
         likelihood (registry twin ``ql_dirichlet_topk``; served via the
         Lucene LMDirichlet decomposition in
-        operators/bm25.py::ql_dirichlet_search).  The pruning modes
-        ("maxscore"/"blockmax") are BM25-bound-specific and raise with
+        operators/bm25.py::ql_dirichlet_search).  The pruning mode names
+        ("maxscore"/"blockmax") name BM25-bound algorithms and raise with
         ranking="ql"; "or"/"and" compose.
 
         ``fusion`` selects the hybrid-index leg combiner (hybrid index
@@ -1074,11 +1082,11 @@ class VectorEngine:
           ids, order and every float equal ``search().collect()``.
           Rows, not a DataFrame: wrapping 50 result rows in
           ``createDataFrame`` and collecting them costs about as much as
-          the Spark search itself (0.3-0.4 s measured), so n_results and
-          best/worst score are computed in Python.
-        - ``"spark"``: ``search()``'s plan runs with an ``Observation``
-          (result count, best/worst score) attached, so the counters ride
-          the same job via ``DataFrame.observe``.
+          the Spark search itself (0.3-0.4 s measured).
+        - ``"spark"``: ``search()``'s plan is collected.
+
+        On both planes n_results and best/worst score are computed in
+        Python from the collected rows (``_result_metrics``).
 
         The driver plane serves a request when every filter key is an
         exact-match key (``operators.filters.filter_form``), the library
@@ -1100,11 +1108,12 @@ class VectorEngine:
           bit-equal; it then filters, sorts and cuts.
 
         Everything else takes the Spark plane: hybrid, other filter
-        forms, and the pruned bm25 modes "maxscore" and "blockmax".  The
-        pruned modes could be answered from the same copy; they stay on
-        Spark because ``perfbench``'s serve-read check re-runs each
-        pruned request's "or" reference on Spark after the timed window,
-        so serving them faster would multiply that check's cost.
+        forms, and the pruned bm25 mode names "maxscore" and "blockmax",
+        which ``search()`` answers with the "or" plan.  They could be
+        answered from the same copy; they stay on Spark because
+        ``perfbench``'s serve-read check re-runs each pruned request's
+        "or" reference on Spark after the timed window, so serving them
+        faster would multiply that check's cost.
         ``execution_time_ms`` is the collect on the Spark plane and the
         scoring on the driver plane; neither counts plan building or the
         copy load."""
@@ -1117,15 +1126,7 @@ class VectorEngine:
             )
         if served is not None:
             plane, (rows, elapsed_ms) = "driver", served
-            scores = [r[1] for r in rows]
-            observed = {
-                "n_results": len(rows),
-                "best_score": max(scores, default=None),
-                "worst_score": min(scores, default=None),
-            }
         else:
-            from pyspark.sql import Observation
-
             plane = "spark"
             result = self.search(
                 library_id,
@@ -1138,18 +1139,9 @@ class VectorEngine:
                 ranking=ranking,
                 fusion=fusion,
             )
-            score_col = self._score_column(result)
-            obs = Observation()
-            result = result.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_results"),
-                F.max(F.col(score_col).cast("double")).alias("best_score"),
-                F.min(F.col(score_col).cast("double")).alias("worst_score"),
-            )
             t0 = time.perf_counter()
             rows = result.collect()
             elapsed_ms = (time.perf_counter() - t0) * 1000.0
-            observed = obs.get
         metrics: dict[str, Any] = {
             "library_id": library_id,
             "mode": mode,
@@ -1157,12 +1149,27 @@ class VectorEngine:
             "fusion": fusion,
             "plane": plane,
             "execution_time_ms": round(elapsed_ms, 3),
-            **observed,
+            **self._result_metrics(rows),
         }
         with self._lock:
             self._search_metrics.append(metrics)
             del self._search_metrics[: -self.SEARCH_METRICS_CAP]
         return rows, metrics
+
+    @staticmethod
+    def _result_metrics(rows: list[Row]) -> dict[str, Any]:
+        """n_results and best/worst score of a search's collected rows.
+        NULL scores are skipped, as SQL ``max``/``min`` skip them; an
+        empty result has no best or worst score."""
+        scores = []
+        if rows:
+            col = VectorEngine._score_column(rows[0].__fields__)
+            scores = [r[col] for r in rows if r[col] is not None]
+        return {
+            "n_results": len(rows),
+            "best_score": max(scores, default=None),
+            "worst_score": min(scores, default=None),
+        }
 
     def _search_driver(
         self,
@@ -1210,7 +1217,7 @@ class VectorEngine:
         t0 = time.perf_counter()
         keep = np.ones(n, dtype=bool)
         if filters:
-            passes = np.array([exact_match(m, filters) for m in copy.chunk_meta])
+            passes = _filter_mask(copy.chunk_meta, filters)
         if kind in (None, "lsh"):
             if filters:
                 keep = passes[copy.rows]
@@ -1282,8 +1289,7 @@ class VectorEngine:
             matched[copy.doc[span]] += 1
         keep = matched == len(terms) if mode == "and" else matched > 0
         if filters:
-            passes = np.array([exact_match(m, filters) for m in copy.chunk_meta], bool)
-            hit = copy.chunk_doc[passes]
+            hit = copy.chunk_doc[_filter_mask(copy.chunk_meta, filters)]
             passing = np.zeros(len(copy.doc_ids), dtype=bool)
             passing[hit[hit >= 0]] = True
             keep &= passing
@@ -1335,8 +1341,8 @@ class VectorEngine:
     def _check_modes(kind: str | None, mode: str, ranking: str) -> None:
         """Keyword evaluation validation shared by search()/search_after():
         a non-"or" mode and "ql" ranking need a bm25 index, and "ql"
-        composes only with "or"/"and" (the pruning modes are
-        BM25-bound-specific)."""
+        composes only with "or"/"and" (the pruning mode names are
+        BM25-bound algorithms)."""
         if mode not in ("or", "and", "maxscore", "blockmax"):
             raise ValueError(
                 "mode must be 'or', 'and', 'maxscore' or 'blockmax', "
@@ -1388,11 +1394,12 @@ class VectorEngine:
         while per-term document frequency stays corpus-level from the
         stored index — k results are k filtered results, fewer allowed
         (reference search_service.py:88-110 semantics on the keyword
-        leg).  ``mode``: "or" full scoring, "and" conjunctive, "maxscore"
-        dynamic pruning, "blockmax" block-max pruning (both pruning
-        modes return results identical to "or"; see
-        operators/bm25.py::bm25_maxscore_search).  ``after``: the
-        (score, id) keyset cursor of :meth:`search_after`."""
+        leg).  ``mode``: "or" full scoring, "and" conjunctive; "maxscore"
+        and "blockmax" are accepted names of "or" and build its plan, the
+        rows their contract promises, because a per-request pruning plan
+        over the postings aggregates every candidate posting anyway (see
+        the operators/bm25.py module).  ``after``: the (score, id) keyset
+        cursor of :meth:`search_after`."""
         postings, doclens, n_docs, avgdl = handle.text
         cand = None
         if metadata_filters:
@@ -1403,12 +1410,6 @@ class VectorEngine:
                 postings, doclens, float(n_docs) * float(avgdl), terms,
                 k=k, candidate_ids=cand, after=after, operator=mode,
             )
-        if mode in ("maxscore", "blockmax"):
-            return bm25_mod.bm25_maxscore_search(
-                postings, doclens, n_docs, avgdl, terms, k=k,
-                candidate_ids=cand, after=after,
-                n_blocks=bm25_mod.BLOCKMAX_BLOCKS if mode == "blockmax" else None,
-            )
         return bm25_mod.bm25_search(
             postings,
             doclens,
@@ -1418,7 +1419,7 @@ class VectorEngine:
             k=k,
             candidate_ids=cand,
             after=after,
-            operator=mode,
+            operator="and" if mode == "and" else "or",
         )
 
     def _hybrid_topk(
@@ -2037,14 +2038,14 @@ class VectorEngine:
     # highlight snippets, per-key collapsing, dynamic-k autocut.
 
     @staticmethod
-    def _score_column(result: DataFrame) -> str:
-        """The native score column of a search result, per dispatch path:
-        'score' (bm25), 'rrf'/'fused'/'combmnz' (hybrid, per fusion mode),
-        else 'similarity' (vector)."""
+    def _score_column(columns: list[str]) -> str:
+        """The native score column of a search result's ``columns``, per
+        dispatch path: 'score' (bm25), 'rrf'/'fused'/'combmnz' (hybrid,
+        per fusion mode), else 'similarity' (vector)."""
         for c in ("score", "rrf", "fused", "combmnz", "similarity"):
-            if c in result.columns:
+            if c in columns:
                 return c
-        raise ValueError(f"no score column in {result.columns}")
+        raise ValueError(f"no score column in {columns}")
 
     def search_with_snippets(
         self,
@@ -2071,7 +2072,7 @@ class VectorEngine:
             metadata_filters=metadata_filters,
             mode=mode,
         )
-        score_col = self._score_column(result)
+        score_col = self._score_column(result.columns)
         texts = self.chunks(library_id).select("id", "text")
         hits = F.broadcast(result).join(texts, "id")
         return pres_mod.best_snippet(
@@ -2114,7 +2115,7 @@ class VectorEngine:
             metadata_filters=metadata_filters,
             mode=mode,
         )
-        score_col = self._score_column(pool)
+        score_col = self._score_column(pool.columns)
         keys = self.chunks(library_id).select(
             "id", F.col("metadata")[collapse_key].alias("collapse_value")
         )
@@ -2152,7 +2153,7 @@ class VectorEngine:
             metadata_filters=metadata_filters,
             mode=mode,
         )
-        score_col = self._score_column(result)
+        score_col = self._score_column(result.columns)
 
         def _s(r):
             v = r[score_col]
@@ -2264,7 +2265,7 @@ class VectorEngine:
             ).select("id")
         expansion = bm25_mod.rm3_expansion(
             postings, doclens, terms, feedback, n_terms=n_expansion_terms
-        )
+        ).collect()
         return bm25_mod.rm3_search(
             postings,
             doclens,
@@ -2307,13 +2308,10 @@ class VectorEngine:
         filtered out (it didn't until r7: the r6 ADVICE inconsistency).
 
         ``mode`` (bm25 path): "or", "and", "maxscore" or "blockmax" — a
-        conjunctive
-        ranking paginates like any other (the cursor composes with the
-        all-terms filter before the top-k), and MaxScore pagination is
-        CURSOR-AWARE: theta derives from the cursored essential-term
-        ranking (operators/bm25.py::bm25_maxscore_search(after=)), so
-        pruning stays lossless per page (pinned page-for-page equal to
-        mode="or" pagination in pytest)."""
+        conjunctive ranking paginates like any other (the cursor composes
+        with the all-terms filter before the top-k); "maxscore" and
+        "blockmax" are accepted names of "or" and page with its plan
+        (see :meth:`search`)."""
         handle = self._handle(library_id)
         kind = handle.kind
         self._check_modes(kind, mode, ranking)
