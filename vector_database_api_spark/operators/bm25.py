@@ -147,7 +147,8 @@ def ql_model_constant(lp_by_term: dict[str, float], terms: list[str]) -> tuple[f
 
 def term_order_sum(value: str, key: str, keys: list) -> Column:
     """The one summation rule of the scoring operators: per group (a
-    document), ``0.0 + v(keys[0]) + v(keys[1]) + ...`` added left to
+    document; a term for RM3's feedback weights, keyed on the feedback
+    ids), ``0.0 + v(keys[0]) + v(keys[1]) + ...`` added left to
     right, where ``v(x)`` is the group's ``value`` on its row with
     ``key = x`` and 0.0 when it has none.  ``build_bm25_index`` writes one
     posting per (term, id), so each ``sum(when(key = x, value))`` adds at
